@@ -107,7 +107,8 @@ def parents_by_copay(
         )
         .select(F.col("parent_key").alias("plan_key"))
     )
-    keys = direct.unionByName(via_ps).distinct()
+    # a left-semi join ignores duplicate keys: no distinct() needed
+    keys = direct.unionByName(via_ps)
     plans = tables["plans"]
     return plans.join(keys, plans.id == keys.plan_key, "left_semi")
 

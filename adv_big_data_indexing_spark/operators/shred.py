@@ -25,6 +25,8 @@ bucket by id for point lookups.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,14 +47,20 @@ COSTSHARE_FIELDS = ["deductible", "_org", "copay", "objectId", "objectType"]
 SERVICE_FIELDS = ["_org", "objectId", "objectType", "name"]
 
 
-def shred(plans: DataFrame) -> dict[str, DataFrame]:
+def shred(plans: DataFrame, carry: Sequence[str] = ()) -> dict[str, DataFrame]:
     """Decompose nested plan documents into normalized tables.
 
     ``plans`` must conform to the compiled plan StructType
     (plans/json_schema_compiler.py) — i.e. come out of ``validate()``'s
-    valid split.
+    valid split. Columns named in ``carry`` (extra columns of ``plans``,
+    e.g. a CDC key and seq) are copied from each document onto every row
+    it shreds into, in the typed tables and ``entities``, ahead of the
+    payload columns; with the default ``()`` the output schema is the
+    plain one.
     """
+    kept = [F.col(c) for c in carry]
     root = plans.select(
+        *kept,
         object_key(F.col("objectType"), F.col("objectId")).alias("id"),
         "objectId",
         "objectType",
@@ -65,19 +73,22 @@ def shred(plans: DataFrame) -> dict[str, DataFrame]:
     )
 
     plan_tbl = root.select(
-        "id", "objectId", "objectType", "_org", "planType", "creationDate", "costshare_id"
+        "id", *kept, "objectId", "objectType", "_org", "planType", "creationDate", "costshare_id"
     )
 
     plan_costshares = root.select(
+        *kept,
         F.col("planCostShares.*"),
         object_key(F.lit("plan"), F.col("objectId")).alias("parent_key"),
         F.lit(REL_PLAN_COSTSHARE).alias("rel_name"),
     ).where(F.col("objectId").isNotNull())
 
     svc = root.select(
+        *kept,
         F.col("objectId").alias("plan_object_id"),
         F.explode("linkedPlanServices").alias("lps"),
     ).select(
+        *kept,
         "plan_object_id",
         F.col("lps.objectId").alias("objectId"),
         F.col("lps.objectType").alias("objectType"),
@@ -88,6 +99,7 @@ def shred(plans: DataFrame) -> dict[str, DataFrame]:
 
     planservice_tbl = svc.select(
         object_key(F.col("objectType"), F.col("objectId")).alias("id"),
+        *kept,
         "objectId",
         "objectType",
         "_org",
@@ -97,12 +109,14 @@ def shred(plans: DataFrame) -> dict[str, DataFrame]:
     )
 
     service_costshares = svc.select(
+        *kept,
         F.col("planserviceCostShares.*"),
         object_key(F.col("objectType"), F.col("objectId")).alias("parent_key"),
         F.lit(REL_SERVICE_COSTSHARE).alias("rel_name"),
     ).where(F.col("objectId").isNotNull())
 
     services = svc.select(
+        *kept,
         F.col("linkedService.*"),
         object_key(F.col("objectType"), F.col("objectId")).alias("parent_key"),
         F.lit(REL_SERVICE_SERVICE).alias("rel_name"),
@@ -123,7 +137,7 @@ def shred(plans: DataFrame) -> dict[str, DataFrame]:
         "services": _typed(services),
     }
     tables["edges"] = edges(tables)
-    tables["entities"] = entities(tables)
+    tables["entities"] = entities(tables, carry)
     return tables
 
 
@@ -156,7 +170,7 @@ def edges(tables: dict[str, DataFrame]) -> DataFrame:
     return roots.unionByName(cs).unionByName(ps).unionByName(sv)
 
 
-def entities(tables: dict[str, DataFrame]) -> DataFrame:
+def entities(tables: dict[str, DataFrame], carry: Sequence[str] = ()) -> DataFrame:
     """The Redis-keyspace mirror: (id, object_type, payload-json).
 
     payload is the canonical JSON of the stored fragment (children by
@@ -164,12 +178,14 @@ def entities(tables: dict[str, DataFrame]) -> DataFrame:
     stripping nested objects, elasticSearch.ts:30-42).
     """
     outs = []
+    skip = {"id", "parent_key", "rel_name", *carry}
     for name in ("plans", "membercostshares", "planservices", "services"):
         df = tables[name]
-        payload_cols = [c for c in df.columns if c not in ("id", "parent_key", "rel_name")]
+        payload_cols = [c for c in df.columns if c not in skip]
         outs.append(
             df.select(
                 "id",
+                *carry,
                 F.col("objectType").alias("object_type"),
                 F.to_json(F.struct(*payload_cols)).alias("payload"),
             )

@@ -19,14 +19,30 @@ Spark-first replacement (SURVEY.md §3.1):
 - the 200 ms visibility poll disappears — micro-batch commit IS the
   visibility barrier (processAllAvailable ≈ awaiting the queue drain).
 
-Scale: foreachBatch merges by key; with the store bucketed by key the
-merge is co-partitioned. The batch dedup (row_number over key) keeps
-state out of the streaming engine, so no state-store growth.
+Document indexer (``run_document_indexer``): each micro-batch is deduped
+to its latest record per key, validated and joined to the seq the entity
+store holds for that key, once; the result is persisted for the batch
+and every write reads it. The merge replaces documents by root: a
+batch record (upsert or delete) is applied when its seq is at least the
+stored seq of its root, and then all stored fragments of that root go
+and the record's fragments (none for a delete) come in; a record older
+than the stored root changes nothing, in the entity store or the
+search projection. Deletes leave no tombstone: once a root is deleted,
+a record for it with an older seq (a replay from before the delete)
+inserts it again.
+
+Scale: the batch dedup (row_number over key) keeps state out of the
+streaming engine, so no state-store growth. Each batch reads and
+rewrites the whole store (a Delta MERGE would rewrite only touched
+files); written frames are rebalanced, so the file count follows the
+data size, not the number of batches.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,18 +60,43 @@ CDC_SCHEMA = T.StructType(
     ]
 )
 
+#: the document indexer's entity store: shred's entities, tagged with the
+#: CDC key and seq of their root document. Reads pass it, which spares the
+#: footer-reading job of schema inference.
+ENTITIES_SCHEMA = "id string, root_key string, seq bigint, object_type string, payload string"
+
 
 def enqueue(spark: SparkSession, queue_dir: str, records: list[dict]) -> None:
     """OP-A11 producer: append CDC records to the queue directory.
 
-    One JSON file per call ≈ one AMQP publish batch (sendESRequest,
-    rabbitMq.ts:5-17). Files are immutable-once-written, which is what
-    makes the directory a valid replayable streaming source.
+    One JSON-lines file per call ≈ one AMQP publish batch (sendESRequest,
+    rabbitMq.ts:5-17), written from Python without a Spark job. It is
+    written under a ``.``-prefixed name, which the file source skips, and
+    renamed into place, so the stream never sees a partial file. Files
+    are immutable-once-written, which is what makes the directory a valid
+    replayable streaming source. ``spark`` is not used.
     """
-    df = spark.createDataFrame(
-        [(r["key"], r["op"], r["seq"], r.get("doc")) for r in records], CDC_SCHEMA
-    )
-    df.coalesce(1).write.mode("append").json(queue_dir)
+    os.makedirs(queue_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.json"
+    tmp = os.path.join(queue_dir, "." + name)
+    with open(tmp, "w") as f:
+        for r in records:
+            rec = {"key": r["key"], "op": r["op"], "seq": r["seq"], "doc": r.get("doc")}
+            f.write(json.dumps(rec) + "\n")
+    os.replace(tmp, os.path.join(queue_dir, name))
+
+
+def _replace_dir(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the parquet dataset at ``path``: parquet has no
+    transactional MERGE, so write a staging dir next to it and swap it in
+    by rename (a Delta MERGE on a real deployment)."""
+    tag = uuid.uuid4().hex[:8]
+    stage, old = f"{path}__stage_{tag}", f"{path}__old_{tag}"
+    df.write.mode("overwrite").parquet(stage)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
@@ -85,19 +126,7 @@ def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     except Exception:  # first batch: store does not exist yet
         merged = latest
 
-    survivors = merged.filter(F.col("op") != "delete")
-    # write-then-swap: parquet has no transactional MERGE, so stage the
-    # new store and atomically rename (a Delta MERGE on a real deployment).
-    tmp = f"{store_dir}__stage_{batch_id}_{uuid.uuid4().hex[:8]}"
-    survivors.write.mode("overwrite").parquet(tmp)
-    old = f"{store_dir}__old_{batch_id}_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(store_dir):
-        os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    if os.path.exists(old):
-        import shutil
-
-        shutil.rmtree(old, ignore_errors=True)
+    _replace_dir(merged.filter(F.col("op") != "delete"), store_dir)
 
 
 def run_indexer(
@@ -151,87 +180,21 @@ def run_document_indexer(
     carrying raw plan JSON is validated against the registered schema
     (plans/json_schema_compiler), invalid docs are routed to a rejects
     table (the 400 path, with their violation list), valid docs are
-    shredded (operators/shred) and their entity fragments merged into
-    the store by (id, seq) — replacing the reference's 10-step
-    Redis→AMQP→poll→ES choreography (apiLogicForCRUD.ts:82-144) with one
-    exactly-once pipeline.
+    shredded (operators/shred) and replace their root's fragments in the
+    entity store by seq (see the module docstring) — replacing the
+    reference's 10-step Redis→AMQP→poll→ES choreography
+    (apiLogicForCRUD.ts:82-144) with one exactly-once pipeline.
     """
-    from adv_big_data_indexing_spark.operators.shred import shred
-    from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        upserts = latest.filter(F.col("op") != "delete")
-        v = validate(upserts.select("key", "seq", F.col("doc").alias("raw")), schema)
-        bad = v.filter(~F.col("is_valid")).select(
-            "key", "seq", "violations", F.col("raw").alias("doc")
-        )
-        if bad.take(1):
-            bad.write.mode("append").parquet(rejects_dir)
-        good = v.filter(F.col("is_valid"))
-        tables = shred(good.select("doc.*"))
-        # entity fragments inherit the CDC seq of their root document
-        seq_of = good.select(
-            F.concat_ws("_", F.lit("plan"), F.col("doc.objectId")).alias("root_key"),
-            "seq",
-        )
-        edges = tables["edges"]
-        root_of = edges.alias("e1").join(
-            edges.alias("e2"),
-            F.col("e1.parent_id") == F.col("e2.child_id"),
-            "left",
-        ).select(
-            F.col("e1.child_id").alias("id"),
-            F.coalesce(F.col("e2.parent_id"), F.col("e1.parent_id"), F.col("e1.child_id")).alias(
-                "root_key"
-            ),
-        )
-        fragments = (
-            tables["entities"]
-            .join(root_of, "id")
-            .join(seq_of, "root_key")
-            .select("id", "root_key", "seq", "object_type", "payload")
-        )
-        # deletes remove the whole document closure by root key
-        delete_roots = latest.filter(F.col("op") == "delete").select(
-            F.col("key").alias("root_key"), "seq"
-        )
-        try:
-            current = spark.read.parquet(entities_dir)
-        except Exception:
-            current = None
-        merged = fragments if current is None else current.unionByName(fragments)
-        # last-writer per fragment id by root seq, then drop deleted roots
-        w2 = Window.partitionBy("id").orderBy(F.col("seq").desc())
-        merged = (
-            merged.withColumn("__rn", F.row_number().over(w2))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if delete_roots.take(1):
-            kill = delete_roots.select("root_key").distinct()
-            merged = merged.join(kill, "root_key", "left_anti")
-        tmp = f"{entities_dir}__stage_{batch_id}_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{entities_dir}__old_{uuid.uuid4().hex[:8]}"
+        store = None
         if os.path.exists(entities_dir):
-            os.rename(entities_dir, old)
-        os.rename(tmp, entities_dir)
-        if os.path.exists(old):
-            import shutil
-
-            shutil.rmtree(old, ignore_errors=True)
-        if reconstructed_dir is not None:
-            refresh_reconstructed(
-                spark, reconstructed_dir, good.select("doc.*"), delete_roots
-            )
+            store = batch.sparkSession.read.schema(ENTITIES_SCHEMA).parquet(entities_dir)
+        staged = _stage_documents(batch, store, schema).persist()
+        try:
+            _apply_documents(staged, store, entities_dir, rejects_dir, reconstructed_dir)
+        finally:
+            staged.unpersist()
 
     stream = (
         spark.readStream.schema(CDC_SCHEMA)
@@ -246,10 +209,86 @@ def run_document_indexer(
     )
 
 
+def _stage_documents(batch: DataFrame, store: DataFrame | None, schema: dict) -> DataFrame:
+    """The latest record per key of one batch, validated: ``kind`` is
+    upsert, delete or reject; ``applied`` says whether the record is new
+    enough (seq at least the stored seq of its root) to change the stores."""
+    from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
+
+    w = Window.partitionBy("key").orderBy(F.col("seq").desc())
+    latest = (
+        batch.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("key", "op", "seq", F.col("doc").alias("raw"))
+    )
+    staged = validate(latest, schema)
+    if store is not None:
+        stored = store.groupBy("root_key").agg(F.max("seq").alias("stored_seq"))
+        staged = staged.join(stored, staged.key == stored.root_key, "left").drop("root_key")
+    else:
+        staged = staged.withColumn("stored_seq", F.lit(None).cast("long"))
+    kind = (
+        F.when(F.col("op") == "delete", "delete")
+        .when(F.col("is_valid"), "upsert")
+        .otherwise("reject")
+    )
+    fresh = F.col("stored_seq").isNull() | (F.col("seq") >= F.col("stored_seq"))
+    return staged.withColumn("kind", kind).withColumn(
+        "applied", (F.col("kind") != "reject") & fresh
+    )
+
+
+def _apply_documents(
+    staged: DataFrame,
+    store: DataFrame | None,
+    entities_dir: str,
+    rejects_dir: str,
+    reconstructed_dir: str | None,
+) -> None:
+    """Write one staged batch: append its rejects, refresh the projection
+    of its applied roots, then replace those roots in the entity store.
+    The store is swapped last, because ``staged`` is derived from it."""
+    from adv_big_data_indexing_spark.operators.shred import shred
+
+    spark = staged.sparkSession
+    n = staged.agg(
+        F.count_if(F.col("kind") == "reject").alias("rejects"),
+        F.count_if(F.col("applied") & (F.col("kind") == "upsert")).alias("upserts"),
+        F.count_if(F.col("applied") & (F.col("kind") == "delete")).alias("deletes"),
+    ).first()
+    if n.rejects:
+        (
+            staged.filter(F.col("kind") == "reject")
+            .select("key", "seq", "violations", F.col("raw").alias("doc"))
+            .hint("rebalance")
+            .write.mode("append")
+            .parquet(rejects_dir)
+        )
+    if not (n.upserts or n.deletes):
+        return
+    upserts = staged.filter(F.col("applied") & (F.col("kind") == "upsert"))
+    if reconstructed_dir is not None:
+        deletes = staged.filter(F.col("applied") & (F.col("kind") == "delete"))
+        refresh_reconstructed(
+            spark,
+            reconstructed_dir,
+            upserts.select("doc.*") if n.upserts else None,
+            deletes.select(F.col("key").alias("root_key")) if n.deletes else None,
+        )
+    fragments = shred(
+        upserts.select("doc.*", F.col("key").alias("root_key"), "seq"),
+        carry=("root_key", "seq"),
+    )["entities"]
+    if store is not None:
+        roots = staged.filter(F.col("applied")).select(F.col("key").alias("root_key"))
+        fragments = store.join(roots, "root_key", "left_anti").unionByName(fragments)
+    _replace_dir(fragments.hint("rebalance"), entities_dir)
+
+
 def refresh_reconstructed(
     spark: SparkSession,
     reconstructed_dir: str,
-    changed_docs: DataFrame,
+    changed_docs: DataFrame | None,
     deleted_roots: DataFrame | None,
 ) -> None:
     """Incremental search-projection maintenance: upsert the reconstructed
@@ -257,37 +296,25 @@ def refresh_reconstructed(
     ones. The Spark analog of the reference's ES index being brought up
     to date per queue message — but set-oriented per micro-batch, and
     only touched documents are re-reconstructed, not the corpus.
+
+    ``changed_docs`` holds plan documents (the compiled plan struct's
+    columns) and ``deleted_roots`` a ``root_key`` column; pass None for
+    either when there are none.
     """
     from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
-    from adv_big_data_indexing_spark.operators.shred import shred
+    from adv_big_data_indexing_spark.operators.shred import object_key, shred
 
-    fresh = None
-    if changed_docs is not None and changed_docs.take(1):
-        fresh = with_etag(reconstruct(shred(changed_docs)))
-    try:
-        current = spark.read.parquet(reconstructed_dir)
-    except Exception:
-        current = None
-
-    if current is None:
-        merged = fresh
-    elif fresh is None:
-        merged = current
-    else:
-        replaced_ids = fresh.select("id")
-        merged = current.join(replaced_ids, "id", "left_anti").unionByName(fresh)
-    if merged is None:
-        return
-    if deleted_roots is not None and deleted_roots.take(1):
-        kill = deleted_roots.select(F.col("root_key").alias("id")).distinct()
-        merged = merged.join(kill, "id", "left_anti")
-    tmp = f"{reconstructed_dir}__stage_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{reconstructed_dir}__old_{uuid.uuid4().hex[:8]}"
+    fresh = None if changed_docs is None else with_etag(reconstruct(shred(changed_docs)))
+    merged = None
     if os.path.exists(reconstructed_dir):
-        os.rename(reconstructed_dir, old)
-    os.rename(tmp, reconstructed_dir)
-    if os.path.exists(old):
-        import shutil
-
-        shutil.rmtree(old, ignore_errors=True)
+        reader = spark.read if fresh is None else spark.read.schema(fresh.schema)
+        merged = reader.parquet(reconstructed_dir)
+        if changed_docs is not None:
+            ids = changed_docs.select(object_key(F.col("objectType"), F.col("objectId")).alias("id"))
+            merged = merged.join(ids, "id", "left_anti")
+        if deleted_roots is not None:
+            merged = merged.join(deleted_roots.select(F.col("root_key").alias("id")), "id", "left_anti")
+    if fresh is not None:
+        merged = fresh if merged is None else merged.unionByName(fresh)
+    if merged is not None:
+        _replace_dir(merged.hint("rebalance"), reconstructed_dir)

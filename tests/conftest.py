@@ -24,60 +24,63 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 # (the count the driver reports) and run explicitly via
 # `pytest -m slow` — tools/run_all_sf.py-style full certification, done
 # at least once per round by the builder. The list lives HERE, centrally,
-# so the selection is auditable in one place and a rename loudly orphans
-# an entry (test_slow_list_names_exist below guards that).
+# so the selection is auditable in one place. Entries are pytest node ids
+# without parameters (``tests/<file>::<test>``), so two files may hold
+# tests of one name; a rename loudly orphans an entry
+# (tests/test_slow_list.py guards that).
 # Deliberately NOT marked despite >10 s: the oracle-parity and cap-path
 # tests of operators touched in r14 (ns_bpe_train_merges parity,
 # test_dedup_caps hot-bucket path) — the driver should certify changed
 # code paths.
 SLOW_TESTS = {
     # registry-wide sweeps
-    "test_registry_wide_no_unpooled_global_rank_window",  # 159 s
-    "test_recursive_oracles_deterministic_under_parallelism",  # 76 s
+    "tests/test_plan_quality.py::test_registry_wide_no_unpooled_global_rank_window",  # 159 s
+    "tests/test_oracle_parity.py::test_recursive_oracles_deterministic_under_parallelism",  # 76 s
     # streaming crash-recovery / replay / chunking matrices
-    "test_streaming_funnel_out_of_order_steps_requalify",  # 52 s
-    "test_streaming_funnel_replay_compaction_and_pruning",  # 47 s
-    "test_streaming_dedup_index_replay_and_compaction",  # 30 s
-    "test_streaming_retention_rebase_replay_and_prune",  # 30 s
-    "test_streaming_dedup_index_matches_batch_any_chunking",  # 25 s
-    "test_streaming_funnel_drops_behind_horizon",  # 24 s
-    "test_streaming_lttb_window_matches_batch_kernel",  # 24 s
-    "test_streaming_survival_chunking_invariance",  # 23 s
-    "test_incremental_reconstructed_projection",  # 23 s
-    "test_streaming_locf_emits_pre_first_bucket_late",  # 22 s
-    "test_streaming_holt_winters_matches_batch_recurrence",  # 22 s
-    "test_streaming_funnel_matches_batch_any_chunking",  # 21 s
-    "test_sigs_base_bucketed_layout_and_torn_compaction",  # 21 s
-    "test_streaming_rate_flags_match_batch",  # 19 s
-    "test_streaming_markov_matches_batch",  # 17 s
-    "test_streaming_retention_matches_batch",  # 17 s
-    "test_streaming_funnel_own_batch_max_never_drops",  # 17 s
-    "test_streaming_dedup_index_survives_empty_batches",  # 16 s
-    "test_streaming_funnel_matches_batch",  # 16 s
-    "test_streaming_rate_flags_lateness_boundary_inclusive",  # 15 s
-    "test_delta_appends_are_sorted_on_probe_keys",  # 15 s
-    "test_streaming_survival_matches_batch_and_late_churn_shift",  # 14 s
-    "test_streaming_survival_survives_empty_batches",  # 12 s
-    "test_streaming_seasonal_empty_batch_and_event_level_lateness",  # 12 s
-    "test_streaming_locf_drops_late_buckets",  # 12 s
-    "test_streaming_retention_matches_batch_any_chunking",  # 12 s
-    "test_ceiling_counts_distinct_docs_not_replayed_rows",  # 12 s
-    "test_streaming_funnel_survives_empty_batches",  # 12 s
-    "test_streaming_holt_matches_batch_recurrence",  # 11 s
-    "test_streaming_honors_max_lsh_bucket_ceiling",  # 11 s
-    "test_document_indexer_end_to_end",  # 11 s
+    "tests/test_streaming.py::test_streaming_funnel_out_of_order_steps_requalify",  # 52 s
+    "tests/test_streaming.py::test_streaming_funnel_replay_compaction_and_pruning",  # 47 s
+    "tests/test_streaming_corpus.py::test_streaming_dedup_index_replay_and_compaction",  # 30 s
+    "tests/test_streaming.py::test_streaming_retention_rebase_replay_and_prune",  # 30 s
+    "tests/test_streaming_corpus.py::test_streaming_dedup_index_matches_batch_any_chunking",  # 25 s
+    "tests/test_streaming.py::test_streaming_funnel_drops_behind_horizon",  # 24 s
+    "tests/test_streaming.py::test_streaming_lttb_window_matches_batch_kernel",  # 24 s
+    "tests/test_streaming.py::test_streaming_survival_chunking_invariance",  # 23 s
+    "tests/test_streaming.py::test_incremental_reconstructed_projection",  # 23 s
+    "tests/test_streaming.py::test_streaming_locf_emits_pre_first_bucket_late",  # 22 s
+    "tests/test_streaming.py::test_streaming_holt_winters_matches_batch_recurrence",  # 22 s
+    "tests/test_streaming.py::test_streaming_funnel_matches_batch_any_chunking",  # 21 s
+    "tests/test_streaming_corpus.py::test_sigs_base_bucketed_layout_and_torn_compaction",  # 21 s
+    "tests/test_streaming.py::test_streaming_rate_flags_match_batch",  # 19 s
+    "tests/test_streaming.py::test_streaming_markov_matches_batch",  # 17 s
+    "tests/test_streaming.py::test_streaming_retention_matches_batch",  # 17 s
+    "tests/test_streaming.py::test_streaming_funnel_own_batch_max_never_drops",  # 17 s
+    "tests/test_streaming_corpus.py::test_streaming_dedup_index_survives_empty_batches",  # 16 s
+    "tests/test_streaming.py::test_streaming_funnel_matches_batch",  # 16 s
+    "tests/test_streaming.py::test_streaming_rate_flags_lateness_boundary_inclusive",  # 15 s
+    "tests/test_streaming_corpus.py::test_delta_appends_are_sorted_on_probe_keys",  # 15 s
+    "tests/test_streaming.py::test_streaming_survival_matches_batch_and_late_churn_shift",  # 14 s
+    "tests/test_streaming.py::test_streaming_survival_survives_empty_batches",  # 12 s
+    "tests/test_streaming.py::test_streaming_seasonal_empty_batch_and_event_level_lateness",  # 12 s
+    "tests/test_streaming.py::test_streaming_locf_drops_late_buckets",  # 12 s
+    "tests/test_streaming.py::test_streaming_retention_matches_batch_any_chunking",  # 12 s
+    "tests/test_streaming_corpus.py::test_ceiling_counts_distinct_docs_not_replayed_rows",  # 12 s
+    "tests/test_streaming.py::test_streaming_funnel_survives_empty_batches",  # 12 s
+    "tests/test_streaming.py::test_streaming_holt_matches_batch_recurrence",  # 11 s
+    "tests/test_streaming_corpus.py::test_streaming_honors_max_lsh_bucket_ceiling",  # 11 s
+    "tests/test_streaming.py::test_document_indexer_end_to_end",  # 11 s
+    "tests/test_streaming.py::test_document_indexer_file_counts_stay_bounded",  # 32 s
     # property sweeps
-    "test_roundtrip_random_documents",  # 24 s
-    "test_grouped_ntile_matches_window_ntile",  # 18 s
-    "test_global_ntile_matches_window_ntile",  # 12 s
+    "tests/test_properties.py::test_roundtrip_random_documents",  # 24 s
+    "tests/test_properties.py::test_grouped_ntile_matches_window_ntile",  # 18 s
+    "tests/test_properties.py::test_global_ntile_matches_window_ntile",  # 12 s
     # document pipeline
-    "test_cascade_delete",  # 14 s
+    "tests/test_document_pipeline.py::test_cascade_delete",  # 14 s
 }
 
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        if item.nodeid.split("[")[0] in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
 
 

@@ -1,5 +1,6 @@
 """Deterministic plan-document fixtures mirroring the reference's canonical
-test document (src/jsonFile.json:1-49) and FIXTURES.md §A constraints:
+test document (src/jsonFile.json:1-49, copied to data/plan_document.json
+next to its schema, data/plan_schema.json) and FIXTURES.md §A constraints:
 unique objectIds across nesting levels, one parent per child, boundary
 copay values from the reference's query corpus, and the two service
 names its match_phrase tests use ('Yearly physical', 'well baby')."""
@@ -7,6 +8,9 @@ names its match_phrase tests use ('Yearly physical', 'well baby')."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
+
+DATA = Path(__file__).resolve().parent / "data"
 
 COPAY_BOUNDARIES = [-1.0, 0.0, 10.0, 175.0, 178.0]
 SERVICE_NAMES = ["Yearly physical", "well baby", "dental", "vision"]
@@ -55,5 +59,12 @@ def plan_jsons(n: int = 20, n_services: int = 2) -> list[str]:
 
 
 def reference_schema() -> dict:
-    with open("/root/reference/schema.txt") as f:
-        return json.load(f)
+    """The plan JSON Schema (draft-04, closed-world objects; required
+    objectId, objectType and, on the plan, creationDate)."""
+    return json.loads((DATA / "plan_schema.json").read_text())
+
+
+def canonical_plan() -> dict:
+    """The reference's canonical plan document: one plan cost share and
+    two plan services ('Yearly physical', 'well baby')."""
+    return json.loads((DATA / "plan_document.json").read_text())

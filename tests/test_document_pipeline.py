@@ -18,7 +18,7 @@ from adv_big_data_indexing_spark.plans.json_schema_compiler import (
     compile_struct,
     validate,
 )
-from tests.fixtures import make_plan, plan_jsons, reference_schema
+from tests.fixtures import canonical_plan, make_plan, plan_jsons, reference_schema
 
 N_PLANS = 20
 
@@ -68,8 +68,7 @@ def test_compile_struct_shape(schema):
 
 
 def test_reference_canonical_doc_valid(spark, schema):
-    with open("/root/reference/src/jsonFile.json") as f:
-        doc = json.load(f)
+    doc = canonical_plan()
     raw = spark.createDataFrame([(json.dumps(doc),)], "raw string")
     v = validate(raw, schema).collect()[0]
     assert v.is_valid, v.violations

@@ -274,6 +274,133 @@ def test_incremental_reconstructed_projection(spark, tmp_path):
     )
 
 
+def _doc_dirs(tmp_path) -> dict:
+    return {k: str(tmp_path / k) for k in ("q", "ents", "rej", "ck", "rec")}
+
+
+def _index_docs(spark, d: dict, schema: dict, records: list[dict], ck: str | None = None) -> None:
+    """Enqueue ``records`` (if any) and drain the document indexer."""
+    if records:
+        cdc.enqueue(spark, d["q"], records)
+    cdc.drain(cdc.run_document_indexer(
+        spark, d["q"], d["ents"], d["rej"], ck or d["ck"], schema, reconstructed_dir=d["rec"]
+    ))
+
+
+def _upsert(i: int, seq: int, doc: dict) -> dict:
+    return {"key": f"plan_plan-{i:05d}", "op": "update", "seq": seq, "doc": json.dumps(doc)}
+
+
+def _stores(spark, d: dict) -> tuple[list, list]:
+    """(entity rows, projection (id, etag) pairs), sorted."""
+    ents = sorted(
+        (r.id, r.root_key, r.seq, r.payload) for r in spark.read.parquet(d["ents"]).collect()
+    )
+    proj = sorted((r.id, r.etag) for r in spark.read.parquet(d["rec"]).select("id", "etag").collect())
+    return ents, proj
+
+
+def test_document_indexer_store_equals_shred_of_live_docs(spark, tmp_path):
+    """Updates that drop plan services replace the whole document: the
+    entity store's (id, payload) set equals shred of the live documents
+    (no orphaned child fragments) and the projection equals a rebuild."""
+    from tests.fixtures import make_plan, reference_schema
+    from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
+    from adv_big_data_indexing_spark.operators.shred import shred
+    from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
+
+    d, schema = _doc_dirs(tmp_path), reference_schema()
+    live = {i: make_plan(i, n_services=3) for i in range(4)}
+    _index_docs(spark, d, schema, [_upsert(i, 1, doc) for i, doc in live.items()])
+    # plans 0-2 shrink to 1, 0 and 2 services; plan 3 is untouched
+    for i, n in ((0, 1), (1, 0), (2, 2)):
+        live[i] = make_plan(i, n_services=n)
+        live[i]["planType"] = "shrunk"
+    _index_docs(spark, d, schema, [_upsert(i, 2, live[i]) for i in (0, 1, 2)])
+
+    raw = spark.createDataFrame([(json.dumps(doc),) for doc in live.values()], "raw string")
+    docs = validate(raw, schema).select("doc.*")
+    want = sorted((r.id, r.payload) for r in shred(docs)["entities"].collect())
+    ents, proj = _stores(spark, d)
+    assert sorted((i, p) for i, _, _, p in ents) == want
+    assert len(want) == 4 * 2 + 3 * (1 + 0 + 2 + 3)  # plan + cost share, 3 per service
+    rebuilt = with_etag(reconstruct(shred(docs))).select("id", "etag").collect()
+    assert proj == sorted((r.id, r.etag) for r in rebuilt)
+
+
+def test_document_indexer_replay_under_fresh_checkpoint_changes_nothing(spark, tmp_path):
+    """At-least-once delivery: re-running already-applied batches from a
+    fresh checkpoint leaves the entity store and the projection as they
+    were (equal seqs re-apply the same documents)."""
+    from tests.fixtures import make_plan, reference_schema
+
+    d, schema = _doc_dirs(tmp_path), reference_schema()
+    _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i, n_services=3)) for i in range(3)])
+    _index_docs(spark, d, schema, [
+        _upsert(0, 2, make_plan(0, n_services=1)),
+        {"key": "plan_plan-00001", "op": "delete", "seq": 2, "doc": None},
+    ])
+    before = _stores(spark, d)
+    _index_docs(spark, d, schema, [], ck=str(tmp_path / "ck_fresh"))
+    assert _stores(spark, d) == before
+    assert {i for i, _ in before[1]} == {"plan_plan-00000", "plan_plan-00002"}
+
+
+def test_document_indexer_ignores_records_older_than_the_store(spark, tmp_path):
+    """An upsert or delete whose seq is older than the stored root's
+    changes neither the entity store nor the projection."""
+    from tests.fixtures import make_plan, reference_schema
+
+    d, schema = _doc_dirs(tmp_path), reference_schema()
+    _index_docs(spark, d, schema, [_upsert(i, 5, make_plan(i, n_services=2)) for i in range(2)])
+    before = _stores(spark, d)
+    stale = make_plan(0, n_services=4)
+    stale["planType"] = "stale"
+    _index_docs(spark, d, schema, [
+        _upsert(0, 3, stale),
+        {"key": "plan_plan-00001", "op": "delete", "seq": 4, "doc": None},
+    ])
+    assert _stores(spark, d) == before
+    # a newer record still applies
+    _index_docs(spark, d, schema, [{"key": "plan_plan-00001", "op": "delete", "seq": 6, "doc": None}])
+    assert {i for i, _ in _stores(spark, d)[1]} == {"plan_plan-00000"}
+
+
+def test_document_indexer_file_counts_stay_bounded(spark, tmp_path):
+    """Many small batches do not grow the stores' file counts: the entity
+    store and the projection stay at the file count their data size
+    needs (one file here), and each batch appends at most one rejects
+    file."""
+    import os
+
+    from tests.fixtures import make_plan, reference_schema
+
+    d, schema = _doc_dirs(tmp_path), reference_schema()
+    n_batches, seq = 10, 0
+    for b in range(n_batches):
+        records = []
+        for i in range(3 * b, 3 * b + 3):  # three new plans
+            seq += 1
+            records.append(_upsert(i, seq, make_plan(i)))
+        if b:
+            seq += 1  # update a plan of the last batch, delete another
+            records.append(_upsert(3 * b - 3, seq, make_plan(3 * b - 3, n_services=1)))
+            records.append({"key": f"plan_plan-{3 * b - 2:05d}", "op": "delete", "seq": seq, "doc": None})
+        bad = make_plan(1000 + b)
+        bad["creationDate"] = "31-02-2024"
+        records.append({"key": f"plan_bad-{b}", "op": "insert", "seq": seq, "doc": json.dumps(bad)})
+        _index_docs(spark, d, schema, records)
+
+    def parquet_files(path: str) -> int:
+        return sum(f.endswith(".parquet") for f in os.listdir(path))
+
+    assert parquet_files(d["ents"]) == 1
+    assert parquet_files(d["rec"]) == 1
+    assert parquet_files(d["rej"]) <= n_batches
+    assert spark.read.parquet(d["rej"]).count() == n_batches
+    assert spark.read.parquet(d["rec"]).count() == 3 * n_batches - (n_batches - 1)
+
+
 def test_stream_static_enrichment(spark, event_stream_dir):
     path, batch_df = event_stream_dir
     # static dim: user_id 0..2 -> segment; user 2 deliberately absent
