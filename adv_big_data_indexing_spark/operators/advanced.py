@@ -18,7 +18,7 @@ operator is a composition of DataFrame primitives with an explicit
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -377,41 +377,24 @@ def ext_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="EXT distribution windows: ntile/percent_rank/cume_dist over a "
     "tie-free ordering (exact integer-ratio doubles on both engines). "
     "Distributed: the tie-free total order makes all three pure "
-    "functions of (global position, N) — global_row_number's one range "
-    "shuffle replaces the former whole-table single-partition window; "
-    "quartile comes from ntile's exact fill rule, pct_rank = (rn-1)/"
-    "(N-1), cume = rn/N, each a single correctly-rounded division.",
+    "functions of (global position, N), both from ordered_rank's one "
+    "range shuffle — no whole-table single-partition window, no second "
+    "pass for N; quartile = ntile_bucket(4), pct_rank = (rank-1)/(N-1), "
+    "cume = rank/N, each a single correctly-rounded division.",
 )
 def ext_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    rn = global_row_number(c, ["c_acctbal", "c_custkey"], "_rn")
-    n = rn.agg(F.max("_rn").alias("_n"))
-    # Degenerate-N guards (this shape is the template for future
-    # consumers, so make totality explicit rather than relying on lazy
-    # CaseWhen evaluation): when N < 4, lead = N so EVERY row takes the
-    # fill-rule branch (divisor _n DIV 4 + 1 >= 1, never zero) — the
-    # `_n < 4` disjunct states that; percent_rank is defined 0.0 for a
-    # one-row frame in both engines, where (rn-1)/(N-1) would be 0/0.
-    lead = F.expr("(_n % 4) * (_n DIV 4 + 1)")
-    quartile = (
-        F.when(
-            (F.col("_n") < 4) | (F.col("_rn") <= lead),
-            F.expr("(_rn - 1) DIV (_n DIV 4 + 1)"),
-        )
-        .otherwise(
-            F.expr("_n % 4 + (_rn - (_n % 4) * (_n DIV 4 + 1) - 1) DIV (_n DIV 4)")
-        )
-        .cast("int")
-        + 1
-    )
+    ranked = ordered_rank(c, ["c_acctbal", "c_custkey"])
+    # percent_rank is 0.0 for a one-row frame in both engines, where
+    # (rank-1)/(N-1) would be 0/0
     pct_rank = F.when(F.col("_n") == 1, F.lit(0.0)).otherwise(
-        (F.col("_rn") - 1).cast("double") / (F.col("_n") - 1).cast("double")
+        (F.col("_rank") - 1).cast("double") / (F.col("_n") - 1).cast("double")
     )
-    return rn.crossJoin(F.broadcast(n)).select(
+    return ranked.select(
         "c_custkey",
-        quartile.alias("quartile"),
+        ntile_bucket(4).alias("quartile"),
         pct_rank.alias("pct_rank"),
-        (F.col("_rn").cast("double") / F.col("_n").cast("double")).alias("cume"),
+        (F.col("_rank").cast("double") / F.col("_n").cast("double")).alias("cume"),
     )
 
 
@@ -1360,7 +1343,7 @@ def ext_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# distributed exact ntile (shared by RFM segmentation + equi-depth histogram)
+# ordered rank machinery (exact row_number / ntile without a data-sized window)
 # ---------------------------------------------------------------------------
 
 
@@ -1387,7 +1370,7 @@ def _machinery_parts(df: DataFrame, num_parts: int | None) -> int:
 
 def _parse_partitions_conf(raw) -> int | None:
     """int value of ``spark.sql.shuffle.partitions`` or None when the
-    platform set a non-numeric sentinel (ADVICE r7)."""
+    platform set a non-numeric sentinel."""
     try:
         return int(raw)
     except (TypeError, ValueError):
@@ -1409,7 +1392,7 @@ def consistent_materialize(
     both consumers (the ranked rows and the per-partition counts) read
     identical partition boundaries — RangePartitioner re-samples per
     materialization, so without this the broadcast offsets can disagree
-    with the partition sizes they describe (see global_ntile).
+    with the partition sizes they describe (see ordered_rank).
 
     Two modes, selected by session conf ``spark.advbdi.checkpoint``:
 
@@ -1546,98 +1529,84 @@ def release_superseded_materializations(spark) -> None:
         pass  # JVM GC is advisory; worst case is the old reclaim timing
 
 
-# the rank machinery's internal alias (kept for the docstrings that
-# reference the boundary-consistency argument by this name)
-_consistent_materialize = consistent_materialize
-
-
-def global_ntile(
-    df: DataFrame, k: int, order_cols: list, bucket_name: str,
+def ordered_rank(
+    df: DataFrame,
+    order_cols: list,
+    group_cols: tuple = (),
     num_parts: int | None = None,
 ) -> DataFrame:
-    """Exact ``ntile(k) OVER (ORDER BY order_cols)`` without a global
-    single-partition sort (VERDICT r5 items 3-4: the former shipped shape
-    moved the whole frame through one WindowExec partition).
+    """Adds ``_rank`` = ``row_number() OVER (PARTITION BY group_cols
+    ORDER BY order_cols)`` and ``_n`` = the row count of the row's group
+    (of the whole frame when ``group_cols`` is empty), with ONE range
+    shuffle and no data-sized window: no task ever ranks a whole group,
+    whatever the group count or skew. Every exact rank consumer
+    (``ntile_bucket``, positions, percent_rank/cume_dist) composes it.
 
-    Distributed plan, ONE range shuffle and nothing else data-sized:
+    1. ``repartitionByRange(group_cols, order_cols)`` + local sort: a
+       group is a contiguous ordered run across ascending partitions,
+       every partition ~|df|/P rows.
+    2. ``monotonically_increasing_id()`` is (partition index << 33) +
+       offset in iteration order, so the pid and the local position come
+       out of one narrow project — a ``Window.partitionBy(pid)`` would
+       add a hash shuffle (the range exchange does not satisfy it). The
+       id is nondeterministic-tagged, so Catalyst never pushes it below
+       the sort.
+    3. per-(pid, group) count and min id: ~num_parts + |groups| rows at
+       any data scale. One window over that tiny frame gives each cell
+       its exclusive prefix offset within the group and the group total
+       ``_n``; it rides a broadcast join back.
+    4. ``_rank`` = offset + (id − min id + 1).
 
-    1. ``repartitionByRange(order_cols).sortWithinPartitions(order_cols)``
-       — Spark's RangePartitioner assigns ascending key ranges to
-       ascending partition ids, and its reservoir sampling is seeded per
-       input partition (byteswap32 of the partition index), so boundaries
-       are deterministic even if the two consumers of the shuffle miss
-       exchange reuse and recompute it.
-    2. ``monotonically_increasing_id()`` over the sorted partitions:
-       the id is (partition index << 33) + row offset in iteration
-       order, so pid and the LOCAL RANK come out of one narrow project —
-       no Window.partitionBy(pid) (which would force a second full
-       hash shuffle: the range exchange doesn't satisfy a hash
-       partitioning requirement). The id expression is nondeterministic-
-       tagged, so Catalyst never pushes it below the sort.
-    3. per-partition counts → exclusive prefix offsets + total N: a
-       ``num_parts``-row frame (constant-sized at any data scale; the
-       one unpartitioned window here runs on those ≤``num_parts`` rows),
-       broadcast back.
-    4. global rank = offset + local rank; the bucket comes from ntile's
-       exact fill rule in int64 arithmetic: with q = N div k, r = N % k,
-       the first r buckets hold q+1 rows —
-       ``rank ≤ r(q+1) → (rank-1) div (q+1) + 1``, else
-       ``r + (rank - r(q+1) - 1) div q + 1`` (the q=0 small-N case never
-       reaches the second branch since r(q+1) = N).
+    The partitioned frame is materialized once (consistent_materialize):
+    RangePartitioner seeds its boundary sampling with the RDD id, so two
+    materializations of the "same" exchange can pick different
+    boundaries when exchange reuse misses, and the broadcast offsets
+    would then describe other partitions than the rows they join
+    (docs/RANK_MACHINERY.md).
 
-    ``order_cols`` must be a total order (callers tie-break on a key
-    column) or ranks — and therefore buckets — would be nondeterministic.
-
-    The ranked frame is materialized once (_consistent_materialize:
-    localCheckpoint by default, reliable checkpoint under
-    ``spark.advbdi.checkpoint=reliable`` for clusters —
-    docs/RANK_MACHINERY.md): RangePartitioner samples its
-    boundaries with an RNG seeded by the RDD id, so two materializations
-    of the "same" exchange pick DIFFERENT boundaries whenever exchange
-    reuse misses (e.g. divergent column pruning between the ranked and
-    counts branches breaks canonical equality) — and then the broadcast
-    offsets disagree with the partition sizes they describe (measured on
-    ext_auc_exact: four runs, four different rank sums, max rank > N).
-    One materialization, both consumers read it; same device as
-    ext_tpch_q15_shape's revenue view.
-    """
-    parts = _consistent_materialize(
-        df.repartitionByRange(_machinery_parts(df, num_parts), *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_ntile_mid", F.monotonically_increasing_id())
-        .withColumn("_ntile_pid", F.expr("CAST(_ntile_mid DIV 8589934592 AS INT)"))
+    ``(group_cols, order_cols)`` must be a total order for deterministic
+    ranks (callers tie-break on a key column); without one, any per-tie
+    aggregate of ``_rank`` (min / max / count) is still deterministic.
+    ``group_cols`` are non-null column names (the offsets join on them);
+    ``order_cols`` may be ordered Columns (``F.col(x).desc()``). For
+    high-cardinality groups a plain partitioned window is already
+    parallel and needs none of this."""
+    keys = [*group_cols, *order_cols]
+    parts = consistent_materialize(
+        df.repartitionByRange(_machinery_parts(df, num_parts), *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("_or_mid", F.monotonically_increasing_id())
+        .withColumn("_or_pid", F.expr("CAST(_or_mid DIV 8589934592 AS INT)"))
     )
-    ranked = parts.withColumn(
-        "_ntile_r", F.expr("_ntile_mid % 8589934592 + 1").cast("bigint")
+    cells = parts.groupBy("_or_pid", *group_cols).agg(
+        F.count("*").alias("_or_c"), F.min("_or_mid").alias("_or_min")
     )
-    cnts = parts.groupBy("_ntile_pid").agg(F.count("*").alias("_ntile_c"))
-    w_off = Window.orderBy("_ntile_pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("_ntile_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    group = Window.partitionBy(*group_cols)
+    before = group.orderBy("_or_pid").rowsBetween(Window.unboundedPreceding, -1)
+    offs = cells.select(
+        "_or_pid",
+        *group_cols,
+        "_or_min",
+        F.coalesce(F.sum("_or_c").over(before), F.lit(0)).alias("_or_off"),
+        F.sum("_or_c").over(group).alias("_n"),
     )
-    offs = cnts.select(
-        "_ntile_pid",
-        F.coalesce(F.sum("_ntile_c").over(w_off), F.lit(0)).alias("_ntile_off"),
-        F.sum("_ntile_c").over(w_all).alias("_ntile_n"),
-    )
-    rk = F.col("_ntile_off") + F.col("_ntile_r")
-    lead = (F.col("_ntile_n") % k) * (F.expr(f"_ntile_n DIV {k}") + 1)
     return (
-        ranked.join(F.broadcast(offs), "_ntile_pid")
-        .withColumn(
-            bucket_name,
-            F.when(rk <= lead, F.expr(f"(_ntile_off + _ntile_r - 1) DIV (_ntile_n DIV {k} + 1)"))
-            .otherwise(
-                F.expr(
-                    f"_ntile_n % {k} + (_ntile_off + _ntile_r"
-                    f" - (_ntile_n % {k}) * (_ntile_n DIV {k} + 1) - 1)"
-                    f" DIV (_ntile_n DIV {k})"
-                )
-            )
-            .cast("int")
-            + 1,
-        )
-        .drop("_ntile_mid", "_ntile_pid", "_ntile_r", "_ntile_off", "_ntile_n")
+        parts.join(F.broadcast(offs), ["_or_pid", *group_cols])
+        .withColumn("_rank", F.expr("_or_off + _or_mid - _or_min + 1"))
+        .drop("_or_mid", "_or_pid", "_or_min", "_or_off")
+    )
+
+
+def ntile_bucket(k: int) -> Column:
+    """``ntile(k)`` from :func:`ordered_rank`'s ``_rank``/``_n``, as
+    ntile's exact fill rule in int64 arithmetic: with q = n div k and
+    r = n % k, the first r buckets hold q + 1 rows. When n < k (q = 0)
+    every rank is <= r(q + 1) = n, so the q divisor is never reached."""
+    q, r = f"(_n DIV {k})", f"(_n % {k})"
+    lead = f"{r} * ({q} + 1)"
+    return F.expr(
+        f"CAST(CASE WHEN _rank <= {lead} THEN (_rank - 1) DIV ({q} + 1)"
+        f" ELSE {r} + (_rank - {lead} - 1) DIV {q} END AS INT) + 1"
     )
 
 
@@ -1660,21 +1629,20 @@ def global_running_sum(
     partition prefix uses a RANGE frame, so every row of a tie run gets
     the run-inclusive prefix (standard SQL RANGE semantics) — a pure
     function of the key, whatever the physical row order. For distinct
-    keys (every current caller) RANGE and ROWS coincide. The former
-    ROWS frame handed tied rows arbitrary intermediate prefixes — a
-    contract that lived only in the docstring (ADVICE r6).
+    keys (every current caller) RANGE and ROWS coincide; a ROWS frame
+    would hand tied rows arbitrary intermediate prefixes.
 
     Mechanism: range-partition by (group_cols, order_cols) so groups are
     contiguous and ordered (equal keys always land in one partition);
     consistent materialization for boundary stability (see
-    _consistent_materialize); per-(pid, group) totals → exclusive
+    :func:`ordered_rank`); per-(pid, group) totals → exclusive
     offsets via a window over the tiny totals frame; within-partition
     prefix via a pid-partitioned window (the checkpoint drops the range
     partitioning info, so this costs one hash exchange of the
     distinct-key frame — measured: LogicalRDD preserves hash, not
     range, partitioning)."""
     keys = [*group_cols, *order_cols]
-    parts = _consistent_materialize(
+    parts = consistent_materialize(
         df.repartitionByRange(_machinery_parts(df, num_parts), *keys)
         .withColumn("_rs_pid", F.spark_partition_id())
     )
@@ -1707,158 +1675,9 @@ def global_running_sum(
     )
 
 
-def global_row_number(
-    df: DataFrame, order_cols: list, rn_name: str, num_parts: int | None = None
-) -> DataFrame:
-    """Global 1-based row position over ``order_cols`` with ONE range
-    shuffle — the same mechanism as :func:`global_ntile` (range
-    partition → local sort → monotonically_increasing_id → broadcast
-    prefix offsets), exposed for rank-algebra consumers like
-    ext_auc_exact. If ``order_cols`` is not a total order, positions
-    within a tie run are arbitrary BUT any per-tie-group aggregate of
-    them (min / max / count) is deterministic — ties are contiguous
-    after the range sort, so the positions inside a run are a
-    permutation of a fixed interval. localCheckpoint'ed for the same
-    boundary-consistency reason as global_ntile (see its docstring)."""
-    parts = _consistent_materialize(
-        df.repartitionByRange(_machinery_parts(df, num_parts), *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_grn_mid", F.monotonically_increasing_id())
-        .withColumn("_grn_pid", F.expr("CAST(_grn_mid DIV 8589934592 AS INT)"))
-    )
-    cnts = parts.groupBy("_grn_pid").agg(F.count("*").alias("_grn_c"))
-    w_off = Window.orderBy("_grn_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = cnts.select(
-        "_grn_pid",
-        F.coalesce(F.sum("_grn_c").over(w_off), F.lit(0)).alias("_grn_off"),
-    )
-    return (
-        parts.join(F.broadcast(offs), "_grn_pid")
-        .withColumn(rn_name, F.expr("_grn_off + _grn_mid % 8589934592 + 1"))
-        .drop("_grn_mid", "_grn_pid", "_grn_off")
-    )
-
-
-def grouped_row_number(
-    df: DataFrame,
-    group_cols: list,
-    order_cols: list,
-    rn_name: str,
-    num_parts: int | None = None,
-) -> DataFrame:
-    """``row_number() OVER (PARTITION BY group ORDER BY order)`` for
-    LOW-cardinality groups without routing any group's full frame
-    through one task (round 7; the grouped sibling of
-    :func:`global_row_number`).
-
-    A plain ``Window.partitionBy(group)`` hash-shuffles every row of a
-    group to ONE partition — with few groups (market segments, shards,
-    sources) that is a data-sized frame per task at 100 TB. Here the
-    range partitioner orders by (group, order), so groups are
-    contiguous ordered runs ACROSS partitions and every partition stays
-    ~|df|/P rows whatever the group skew:
-
-    1. range partition + local sort + ``monotonically_increasing_id``
-       (pid and local rank from one narrow project — see global_ntile).
-    2. per-(pid, group) count and min-id: since a group spans at most
-       (group_size/partition_size + 2) partitions, this stats frame has
-       ~num_parts + |groups| rows — constant-ish, broadcast back.
-    3. rank = exclusive prefix of the group's counts over earlier pids
-       + (mid − min_mid + 1).
-
-    For HIGH-cardinality groups use the plain window — hash
-    partitioning is already parallel there and needs no machinery.
-    ``(group_cols, order_cols)`` must be a total order for
-    deterministic output, same contract as global_row_number.
-    """
-    parts, st, offs = _grouped_rank_assembly(df, group_cols, order_cols, num_parts)
-    return (
-        parts.join(F.broadcast(offs), ["_grp_pid", *group_cols])
-        .withColumn(
-            rn_name, (F.col("_grp_off") + F.col("_grp_mid") - F.col("_grp_min") + 1)
-        )
-        .drop("_grp_mid", "_grp_pid", "_grp_min", "_grp_off")
-    )
-
-
-def _grouped_rank_assembly(df, group_cols, order_cols, num_parts):
-    """Shared grouped-rank plumbing: the checkpointed range-partitioned
-    frame (with _grp_mid/_grp_pid), the per-(pid, group) stats frame st
-    (~num_parts + |groups| rows), and offs = st + exclusive prefix
-    offsets. Consumers derive everything else (per-group N, ranks) from
-    st/offs so the ranked frame is traversed exactly ONCE."""
-    keys = [*group_cols, *order_cols]
-    parts = _consistent_materialize(
-        df.repartitionByRange(_machinery_parts(df, num_parts), *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("_grp_mid", F.monotonically_increasing_id())
-        .withColumn("_grp_pid", F.expr("CAST(_grp_mid DIV 8589934592 AS INT)"))
-    )
-    st = parts.groupBy("_grp_pid", *group_cols).agg(
-        F.count("*").alias("_grp_c"), F.min("_grp_mid").alias("_grp_min")
-    )
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_grp_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = st.select(
-        "_grp_pid",
-        *group_cols,
-        "_grp_min",
-        F.coalesce(F.sum("_grp_c").over(w_off), F.lit(0)).alias("_grp_off"),
-    )
-    return parts, st, offs
-
-
-def grouped_ntile(
-    df: DataFrame,
-    k: int,
-    group_cols: list,
-    order_cols: list,
-    bucket_name: str,
-    num_parts: int | None = None,
-) -> DataFrame:
-    """Exact ``ntile(k) OVER (PARTITION BY group ORDER BY order)`` for
-    LOW-cardinality groups: the shared grouped-rank assembly for the
-    per-group rank, per-group N derived from the SAME broadcast-sized
-    stats frame (sum of per-(pid, group) counts — NOT a second pass
-    over the ranked frame), then ntile's exact fill rule in int64
-    arithmetic (identical to :func:`global_ntile`'s; the q = 0 small-N
-    case never reaches the second branch since r(q+1) = N). The ranked
-    frame is traversed exactly once: parts ⋈ broadcast(offs) ⋈
-    broadcast(ng)."""
-    parts, st, offs = _grouped_rank_assembly(df, group_cols, order_cols, num_parts)
-    ng = st.groupBy(*group_cols).agg(F.sum("_grp_c").alias("_gnt_n"))
-    rk = F.col("_grp_off") + F.col("_grp_mid") - F.col("_grp_min") + 1
-    lead = (F.col("_gnt_n") % k) * (F.expr(f"_gnt_n DIV {k}") + 1)
-    return (
-        parts.join(F.broadcast(offs), ["_grp_pid", *group_cols])
-        .join(F.broadcast(ng), list(group_cols))
-        .withColumn("_gnt_rk", rk)
-        .withColumn(
-            bucket_name,
-            F.when(
-                F.col("_gnt_rk") <= lead,
-                F.expr(f"(_gnt_rk - 1) DIV (_gnt_n DIV {k} + 1)"),
-            )
-            .otherwise(
-                F.expr(
-                    f"_gnt_n % {k} + (_gnt_rk"
-                    f" - (_gnt_n % {k}) * (_gnt_n DIV {k} + 1) - 1)"
-                    f" DIV (_gnt_n DIV {k})"
-                )
-            )
-            .cast("int")
-            + 1,
-        )
-        .drop("_grp_mid", "_grp_pid", "_grp_min", "_grp_off", "_gnt_rk", "_gnt_n")
-    )
-
-
 def grouped_topk(df: DataFrame, group_col: str, order_cols, k: int) -> DataFrame:
     """Per-group top-k without ranking any group's full frame in one
-    task — the POOLING sibling of :func:`grouped_row_number` for when
+    task — the POOLING sibling of :func:`ordered_rank` for when
     only k rows per group survive (per-language top terms, per-source
     preference pools).
 
@@ -1918,9 +1737,10 @@ def grouped_topk(df: DataFrame, group_col: str, order_cols, k: int) -> DataFrame
     "bit-deterministic in both engines; segments then aggregated to "
     "(r,f,m) cells. Scale shape: the per-customer aggregate is the "
     "data-sized stage (partial-agg shuffle on custkey); each quartile "
-    "cut is a distributed exact ntile (global_ntile: range shuffle + "
-    "per-partition rank + broadcast prefix offsets) — no customer-count "
-    "frame ever collapses into a single WindowExec partition.",
+    "cut is ordered_rank grouped by metric over the melted metrics (one "
+    "range shuffle + broadcast per-(partition, metric) offsets) and "
+    "ntile_bucket — no customer-count frame ever collapses into a single "
+    "WindowExec partition.",
 )
 def ext_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -1929,16 +1749,11 @@ def ext_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_orders"),
         F.sum(cents("o_totalprice")).cast("bigint").alias("cents"),
     )
-    # MELT the three metrics into one (metric_id, value, custkey) long
-    # frame and run a single distributed exact ntile over it: the range
-    # partitioner orders by (metric_id ASC, value DESC, custkey ASC), so
-    # the three metric blocks are contiguous and every block holds
-    # exactly N customers — rank within a block is global_rank −
-    # metric_id·N, and the ntile fill rule runs with N per block. ONE
-    # orders scan, ONE data-sized range shuffle; the alternative (three
-    # global_ntile branches re-joined on custkey) triples the scan
-    # because each branch prunes different columns and defeats exchange
-    # reuse (measured: 17 materialized shuffle stages).
+    # MELT the three metrics into one (m_id, value, custkey) long frame
+    # and rank it once with m_id as the group: ONE orders scan, ONE
+    # data-sized range shuffle. Three separate rank branches re-joined
+    # on custkey would triple the scan, because each branch prunes
+    # different columns and defeats exchange reuse.
     long = per_cust.select(
         "o_custkey",
         "cents",
@@ -1950,45 +1765,9 @@ def ext_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("mv"),
     ).select("o_custkey", "cents", "mv.m_id", "mv.val")
-    order = [F.col("m_id").asc(), F.col("val").desc(), F.col("o_custkey").asc()]
-    # localCheckpoint: boundary consistency between the ranked and counts
-    # consumers (see global_ntile's docstring)
-    parts = _consistent_materialize(
-        long.repartitionByRange(_machinery_parts(long, None), *order)
-        .sortWithinPartitions(*order)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.expr("CAST(_mid DIV 8589934592 AS INT)"))
-        .withColumn("_r", F.expr("_mid % 8589934592 + 1"))
-    )
-    cnts = parts.groupBy("_pid").agg(F.count("*").alias("_c"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offs = cnts.select(
-        "_pid",
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-        (F.sum("_c").over(w_all) / 3).cast("bigint").alias("_n"),
-    )
-    # rank inside this metric's block, then ntile(4)'s exact fill rule
-    bucketed = (
-        parts.join(F.broadcast(offs), "_pid")
-        .withColumn("_rk", F.expr("_off + _r - CAST(m_id AS BIGINT) * _n"))
-        .withColumn(
-            "bucket",
-            F.when(
-                F.expr("_rk <= (_n % 4) * (_n DIV 4 + 1)"),
-                F.expr("(_rk - 1) DIV (_n DIV 4 + 1)"),
-            )
-            .otherwise(
-                F.expr(
-                    "_n % 4 + (_rk - (_n % 4) * (_n DIV 4 + 1) - 1) DIV (_n DIV 4)"
-                )
-            )
-            .cast("int")
-            + 1,
-        )
-    )
+    bucketed = ordered_rank(
+        long, [F.col("val").desc(), F.col("o_custkey")], group_cols=("m_id",)
+    ).withColumn("bucket", ntile_bucket(4))
     scored = bucketed.groupBy("o_custkey").agg(
         F.max(F.when(F.col("m_id") == 0, F.col("bucket"))).alias("r_q"),
         F.max(F.when(F.col("m_id") == 1, F.col("bucket"))).alias("f_q"),
@@ -2035,15 +1814,18 @@ EQUIDEPTH_BUCKETS = 8
     "complements ext_histogram's equi-WIDTH buckets. ntile over the "
     "fully tie-broken (cents, orderkey) order makes boundaries exact "
     "and bit-stable. Scale shape: ONE repartitionByRange pass — the "
-    "range partitions approximate the equi-depth split and global_ntile "
-    "turns per-partition ranks + broadcast prefix offsets into the "
-    "exact bucket ids; no single-partition sort anywhere.",
+    "range partitions approximate the equi-depth split and ordered_rank "
+    "turns per-partition ranks + broadcast prefix offsets into exact "
+    "ranks, ntile_bucket into bucket ids; no single-partition sort "
+    "anywhere.",
 )
 def ext_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         cents("o_totalprice").alias("cents"), "o_orderkey"
     )
-    b = global_ntile(o, EQUIDEPTH_BUCKETS, ["cents", "o_orderkey"], "bucket")
+    b = ordered_rank(o, ["cents", "o_orderkey"]).withColumn(
+        "bucket", ntile_bucket(EQUIDEPTH_BUCKETS)
+    )
     return b.groupBy("bucket").agg(
         F.min("cents").cast("bigint").alias("lo_cents"),
         F.max("cents").cast("bigint").alias("hi_cents"),

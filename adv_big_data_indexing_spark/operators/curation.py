@@ -278,27 +278,26 @@ _SHUF_SALT = "shuffle42"
     "the seed alone (restartable training, auditable sampling), yet never "
     "computes a global sort OR a per-shard single-task rank: with N "
     "shards a Window.partitionBy(shard) frame is corpus/N rows through "
-    "one task (r7 fix) — grouped_row_number (operators/advanced.py) "
+    "one task — ordered_rank (operators/advanced.py) grouped by shard "
     "range-partitions by (shard, h, doc_id) and reassembles exact "
     "per-shard positions from broadcast per-(partition, shard) offsets, "
     "so every task holds ~corpus/P rows regardless of shard count.",
 )
 def ns_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from adv_big_data_indexing_spark.operators.advanced import (  # noqa: PLC0415
-        grouped_row_number,
+        ordered_rank,
     )
     from adv_big_data_indexing_spark.operators.sampling import hash_bucket  # noqa: PLC0415
 
     d = load_table(spark, sf_dir, "documents")
     h = F.md5(F.concat_ws(":", F.lit(_SHUF_SALT), F.col("doc_id").cast("string")))
     shard = (hash_bucket(F.col("doc_id"), salt=_SHUF_SALT) % N_SHUFFLE_SHARDS).cast("int")
-    ranked = grouped_row_number(
+    ranked = ordered_rank(
         d.select("doc_id", h.alias("h"), shard.alias("shard")),
-        ["shard"],
         ["h", "doc_id"],
-        "pos",
+        group_cols=("shard",),
     )
-    return ranked.select("doc_id", "shard", F.col("pos").cast("bigint").alias("pos"))
+    return ranked.select("doc_id", "shard", F.col("_rank").alias("pos"))
 
 
 # ---------------------------------------------------------------------------

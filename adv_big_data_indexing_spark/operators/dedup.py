@@ -390,39 +390,6 @@ def _lsh_pair_stats(
         "bsz", F.count("*").over(Window.partitionBy("band", "bk"))
     ).filter(F.col("bsz") > 1)
 
-    # Optional LOUD ceiling on bucket degeneracy (ADVICE r10): since the
-    # route-never-drop change a degenerate band key contributes Θ(B²)
-    # pairs with only the after-the-fact audit as mitigation. Operators
-    # who would rather see the quadratic blowup than pay it can set
-    # spark.advbdi.maxLshBucket — buckets beyond it RAISE (never
-    # silently drop, the class the r9 fix removed) with the offending
-    # band key in the message, the same fail-fast contract as
-    # _guard_exact_jaccard. Unset/0 = unbounded (default; results and
-    # oracles unchanged).
-    ceiling = int(
-        sh.sparkSession.conf.get("spark.advbdi.maxLshBucket", "0") or "0"
-    )
-    if ceiling > 0:
-        msg = F.concat(
-            F.lit(
-                "LSH bucket exceeds spark.advbdi.maxLshBucket="
-                f"{ceiling}: band="
-            ),
-            F.col("band").cast("string"),
-            F.lit(" bk="),
-            F.col("bk").cast("string"),
-            F.lit(" size="),
-            F.col("bsz").cast("string"),
-            F.lit(
-                " — a band key this hot has stopped discriminating "
-                "(boilerplate cluster?); re-key or pre-filter it, or "
-                "raise/unset the ceiling to pay its quadratic pairs"
-            ),
-        )
-        sized = sized.where(
-            F.assert_true(F.col("bsz") <= F.lit(ceiling), msg).isNull()
-        )
-
     # Materialize the sized band rows ONCE before the tier split (r13,
     # guide §3.3/§5): the split's three consumers (the small-bucket
     # groupBy and BOTH sides of the hot-bucket self-join) are separate
@@ -484,6 +451,41 @@ def _lsh_pair_stats(
         _pending_lsh_persists.clear()
         sized = sized.persist(StorageLevel.DISK_ONLY)
         _pending_lsh_persists.append(sized)
+
+    # Optional LOUD ceiling on bucket degeneracy: a degenerate band key
+    # contributes Θ(B²) pairs with only the after-the-fact audit as
+    # mitigation. Operators who would rather see the quadratic blowup
+    # than pay it can set spark.advbdi.maxLshBucket — buckets beyond it
+    # RAISE (never silently drop) with the offending band key in the
+    # message, the same fail-fast contract as _guard_exact_jaccard.
+    # Unset/0 = unbounded (default; results and oracles unchanged).
+    # The guard sits on top of the persisted frame, so all three tier
+    # consumers inherit it and the cached frame itself can never raise:
+    # a raise inside the parallel cache fill can surface as a task-
+    # cancellation or shuffle-fetch artifact instead of the assert.
+    ceiling = int(
+        sh.sparkSession.conf.get("spark.advbdi.maxLshBucket", "0") or "0"
+    )
+    if ceiling > 0:
+        msg = F.concat(
+            F.lit(
+                "LSH bucket exceeds spark.advbdi.maxLshBucket="
+                f"{ceiling}: band="
+            ),
+            F.col("band").cast("string"),
+            F.lit(" bk="),
+            F.col("bk").cast("string"),
+            F.lit(" size="),
+            F.col("bsz").cast("string"),
+            F.lit(
+                " — a band key this hot has stopped discriminating "
+                "(boilerplate cluster?); re-key or pre-filter it, or "
+                "raise/unset the ceiling to pay its quadratic pairs"
+            ),
+        )
+        sized = sized.where(
+            F.assert_true(F.col("bsz") <= F.lit(ceiling), msg).isNull()
+        )
 
     # ---- tier 1: in-row expansion of small buckets
     grouped = (

@@ -512,14 +512,14 @@ NEG_PER_POS = 2
     "proposals that hit a true edge DROPPED by an anti join (uniform "
     "proposal + rejection, the standard scheme — and the drop rate is "
     "edge-density-bounded, so no resampling loop is needed). The part "
-    "index is a dense rank (vocab table, broadcast); the proposal hash "
+    "index is a dense rank (ordered_rank over the distinct parts: one "
+    "range shuffle, no single-partition window; the vocab table is "
+    "broadcast); the proposal hash "
     "is closed-form in both engines, so the sample reproduces "
     "bit-for-bit. Scale shape: one edge scan + K map-side proposals + "
     "one broadcast index join + one keyed anti join.",
 )
 def ns_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     li = load_table(spark, sf_dir, "lineitem")
     # DISK_ONLY checkpoint blocks (r9 sf10 find): edges is data-sized
     # (~24M rows at sf10), and the default MEMORY_AND_DISK unroll ran in
@@ -532,15 +532,15 @@ def ns_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .transform(disk_consistent_materialize)
     )
-    # vocab indexing via the distributed global_row_number (one range
+    # vocab indexing via the distributed ordered_rank (one range
     # shuffle) — a catalog-scale vocabulary must not rank through a
     # single-partition row_number window
     from adv_big_data_indexing_spark.operators.advanced import (  # noqa: PLC0415
-        global_row_number,
+        ordered_rank,
     )
 
-    parts = global_row_number(edges.select("p").distinct(), ["p"], "_rn").select(
-        F.col("p").alias("cand"), (F.col("_rn") - 1).alias("idx")
+    parts = ordered_rank(edges.select("p").distinct(), ["p"]).select(
+        F.col("p").alias("cand"), (F.col("_rank") - 1).alias("idx")
     )
     np_ = parts.agg(F.count("*").alias("n_parts"))
     ks = F.explode(F.array(*[F.lit(i) for i in range(NEG_PER_POS)])).alias("k")

@@ -954,29 +954,29 @@ def ext_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     """,
     doc="EXT ntile bucketing (quartiles of account balance within each market "
-    "segment); deterministic via the c_custkey tie-break. Scale shape "
-    "(r7): c_mktsegment has FIVE values, so Window.partitionBy(segment) "
-    "is a customer-table-sized frame through one task per segment — "
-    "grouped_ntile (operators/advanced.py) instead range-partitions by "
-    "(segment, balance, key) and reassembles exact per-segment ranks "
-    "from broadcast per-(partition, segment) offsets; no task ever "
-    "holds a segment's full frame.",
+    "segment); deterministic via the c_custkey tie-break. Scale shape: "
+    "c_mktsegment has FIVE values, so Window.partitionBy(segment) is a "
+    "customer-table-sized frame through one task per segment — "
+    "ordered_rank (operators/advanced.py) grouped by segment instead "
+    "range-partitions by (segment, balance, key) and reassembles exact "
+    "per-segment ranks from broadcast per-(partition, segment) offsets, "
+    "ntile_bucket turns them into quartiles; no task ever holds a "
+    "segment's full frame.",
 )
 def ext_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from adv_big_data_indexing_spark.operators.advanced import (  # noqa: PLC0415
-        grouped_ntile,
+        ntile_bucket,
+        ordered_rank,
     )
 
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment", "c_custkey", "c_acctbal"
     )
-    return grouped_ntile(
+    return ordered_rank(
         c,
-        4,
-        ["c_mktsegment"],
         [F.col("c_acctbal").desc(), F.col("c_custkey")],
-        "quartile",
-    ).select("c_mktsegment", "c_custkey", "quartile")
+        group_cols=("c_mktsegment",),
+    ).select("c_mktsegment", "c_custkey", ntile_bucket(4).alias("quartile"))
 
 
 @query(

@@ -71,8 +71,7 @@ SLOW_TESTS = {
     "tests/test_streaming.py::test_document_indexer_file_counts_stay_bounded",  # 32 s
     # property sweeps
     "tests/test_properties.py::test_roundtrip_random_documents",  # 24 s
-    "tests/test_properties.py::test_grouped_ntile_matches_window_ntile",  # 18 s
-    "tests/test_properties.py::test_global_ntile_matches_window_ntile",  # 12 s
+    "tests/test_properties.py::test_ordered_rank_matches_window_functions",  # 26 s
     # document pipeline
     "tests/test_document_pipeline.py::test_cascade_delete",  # 14 s
 }

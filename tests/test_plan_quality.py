@@ -8,6 +8,9 @@ map-side partial aggregation, and top-k without a global sort."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from adv_big_data_indexing_spark.contract import registry
@@ -166,15 +169,12 @@ def test_phrase_search_probe_not_scan(spark):
 
 def test_corpus_shuffle_no_global_sort(spark):
     """The training-order shuffle must never compile to a single-partition
-    global window — and since r7, not to a per-shard rank window either
-    (corpus/N_SHARDS rows through one task): grouped_row_number
-    reassembles positions from broadcast per-(partition, shard) offsets,
-    so no rank window survives at all."""
+    global window, nor to a per-shard rank window (corpus/N_SHARDS rows
+    through one task): ordered_rank reassembles positions from broadcast
+    per-(partition, shard) offsets, so no rank window survives at all."""
     p = plan_of(spark, "ns_corpus_shuffle")
     assert "SinglePartition" not in p
-    for ln in p.splitlines():
-        if "Window [" in ln:
-            assert "row_number()" not in ln, ln
+    _assert_no_rank_window(p)
 
 
 def test_quality_curriculum_broadcasts_decile_map(spark):
@@ -213,20 +213,60 @@ def test_cms_event_types_partial_aggregates(spark):
     assert "partial_count" in p
 
 
-@pytest.mark.parametrize("name", ["ext_window_ntile", "ns_corpus_shuffle"])
-def test_grouped_rank_machinery_no_group_window(spark, name):
-    """r7: per-group ntile/row_number over LOW-cardinality groups
-    (market segments, shards) must use the grouped rank machinery —
-    no rank/ntile WindowExec anywhere (the offset windows aggregate
-    per-(pid, group) counts, never rank rows), and the offsets ride a
-    broadcast join back onto the checkpointed range-partitioned frame."""
-    p = plan_of(spark, name)
+def _assert_no_rank_window(p: str) -> None:
+    """No ntile/row_number/rank WindowExec anywhere in the plan. The rank
+    machinery's only windows sum the per-(partition, group) counts of a
+    tiny frame; they never rank rows."""
     assert "ntile(" not in p
     for ln in p.splitlines():
         if "Window [" in ln:
             assert "row_number()" not in ln and "rank(" not in ln, ln
+
+
+ORDERED_RANK_CONSUMERS = [
+    "ext_equidepth_histogram",
+    "ext_rfm_segmentation",
+    "ext_window_distribution",
+    "ext_window_ntile",
+    "ns_corpus_shuffle",
+    "ns_negative_sampling",
+]
+
+
+@pytest.mark.parametrize("name", ORDERED_RANK_CONSUMERS)
+def test_ordered_rank_consumers_no_rank_window(spark, name):
+    """Every exact row_number/ntile consumer, global or per
+    LOW-cardinality group (market segments, shards, RFM metrics), ranks
+    through ordered_rank: no rank WindowExec over a data-sized frame, the
+    final plan reads the checkpointed range-partitioned frame (the range
+    shuffle runs inside that one materialization), and the offsets ride a
+    broadcast join back onto it."""
+    p = plan_of(spark, name)
+    _assert_no_rank_window(p)
     assert "ExistingRDD" in p
     assert "BroadcastHashJoin" in p
+
+
+def test_rank_id_split_lives_only_in_ordered_rank():
+    """The monotonically_increasing_id (pid << 33) + position split is the
+    rank machinery's one mechanism. It may appear in the package only
+    inside ordered_rank, so a new rank consumer composes ordered_rank
+    instead of re-deriving the split."""
+    pkg = Path(__file__).resolve().parents[1] / "adv_big_data_indexing_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        funcs = [
+            n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)
+        ]
+        for no, line in enumerate(src.splitlines(), 1):
+            if "8589934592" in line or "monotonically_increasing_id" in line:
+                owners = [f for f in funcs if f.lineno <= no <= f.end_lineno]
+                innermost = min(owners, key=lambda f: f.end_lineno - f.lineno, default=None)
+                owner = innermost.name if innermost else "<module>"
+                sites.append((path.relative_to(pkg).as_posix(), owner, no))
+    owners = {(rel, fn) for rel, fn, _ in sites}
+    assert owners == {("operators/advanced.py", "ordered_rank")}, sites
 
 
 def test_preference_pairs_pooled_topk_single_pass(spark):
@@ -429,31 +469,14 @@ def test_hybrid_rrf_dense_arm_routes_to_lsh_above_cap(spark):
     assert [r.rank_vec for r in routed_rows] == list(range(1, len(routed_rows) + 1))
 
 
-def _assert_no_global_ntile_window(p: str) -> None:
-    """VERDICT r5 items 3-4: no ntile/row_number WindowExec over a
-    data-sized frame. The distributed exact-ntile plan is allowed ONE
-    unpartitioned window — the prefix-offset sum over the ≤32-row
-    per-partition-count frame — recognizable by aggregating `_c`/`_ntile_c`
-    rather than ranking rows. The range shuffle itself happens inside
-    the localCheckpoint materialization (boundary consistency — see
-    global_ntile), so the final plan reads the checkpointed RDD."""
-    assert "ntile(" not in p
-    for ln in p.splitlines():
-        if "Window [" in ln:
-            assert "row_number()" not in ln, "rank window survived:\n" + ln
-    assert "ExistingRDD" in p  # the checkpointed ranked frame
-
-
 def test_equidepth_histogram_distributed_ntile(spark):
     p = plan_of(spark, "ext_equidepth_histogram")
-    _assert_no_global_ntile_window(p)
     # the broadcast of the offsets frame, not a join shuffle
     assert "BroadcastHashJoin" in p
 
 
 def test_rfm_distributed_ntile_single_scan(spark):
     p = plan_of(spark, "ext_rfm_segmentation")
-    _assert_no_global_ntile_window(p)
     assert "BroadcastHashJoin" in p
 
 
@@ -467,25 +490,16 @@ def test_percentile_no_group_buffering(spark):
     assert "BroadcastHashJoin" in p  # group starts ride a broadcast
 
 
-def _assert_no_data_sized_rank_window(p: str) -> None:
-    """No row_number/rank/ntile WindowExec anywhere in the post-
-    checkpoint plan (the rank machinery's offset windows aggregate
-    counts, never rank rows)."""
-    assert "ntile(" not in p
-    for ln in p.splitlines():
-        if "Window [" in ln:
-            assert "row_number()" not in ln and "rank(" not in ln, ln
-
-
 def test_window_distribution_no_global_window(spark):
+    """N comes with the rank (ordered_rank's _n), so no aggregate of the
+    ranked frame is joined back onto it."""
     p = plan_of(spark, "ext_window_distribution")
-    _assert_no_data_sized_rank_window(p)
-    assert "ExistingRDD" in p
+    assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
 
 
 def test_max_concurrency_distributed_prefix(spark):
     p = plan_of(spark, "ts_max_concurrency")
-    _assert_no_data_sized_rank_window(p)
+    _assert_no_rank_window(p)
     assert "ExistingRDD" in p
     # the within-partition running sum is pid-partitioned, never global:
     # every Window's spec must mention the machinery's pid column
@@ -494,14 +508,9 @@ def test_max_concurrency_distributed_prefix(spark):
             assert "_rs_pid" in ln, ln
 
 
-def test_negative_sampling_vocab_index_distributed(spark):
-    p = plan_of(spark, "ns_negative_sampling")
-    _assert_no_data_sized_rank_window(p)
-
-
 def test_grouped_rank_machinery_is_deterministic(spark):
     """Same RangePartitioner boundary-consistency regression as the
-    global probe, for the r7 grouped machinery path (ns_corpus_shuffle:
+    global probe, for the grouped ordered_rank path (ns_corpus_shuffle:
     per-shard positions from broadcast per-(partition, shard) offsets):
     three builds must agree exactly."""
     outs = set()

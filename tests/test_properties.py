@@ -291,37 +291,50 @@ def test_pair_explode_matches_combinations(spark, baskets):
 
 
 @settings(
-    max_examples=12,
+    max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(
-    vals=st.lists(st.integers(-1000, 1000), min_size=1, max_size=200),
+    rows=st.lists(
+        st.tuples(st.integers(0, 3), st.integers(-1000, 1000)),
+        min_size=1,
+        max_size=200,
+    ),
+    group_cols=st.sampled_from([(), ("g",)]),
     k=st.integers(2, 9),
-    num_parts=st.sampled_from([1, 3, 7, 32, None]),
+    num_parts=st.sampled_from([1, 3, 5, 7, 32, None]),
 )
-def test_global_ntile_matches_window_ntile(spark, vals, k, num_parts):
-    """The distributed exact ntile (range shuffle + mid-rank + broadcast
-    offsets) must equal Spark's own ntile window under the identical
-    total order — for any size (including n < k), any tie pattern, any
-    sign, and any range-partition count (None = derived from
-    spark.sql.shuffle.partitions, the r7 default)."""
-    from pyspark.sql import functions as F
+def test_ordered_rank_matches_window_functions(spark, rows, group_cols, k, num_parts):
+    """ordered_rank's _rank/_n and ntile_bucket must equal Spark's own
+    row_number/count/ntile windows under the identical total order, global
+    or per group — for any size (including n < k and singleton groups),
+    any tie pattern, any sign, and any range-partition count (None =
+    derived from spark.sql.shuffle.partitions)."""
     from pyspark.sql.window import Window
 
-    from adv_big_data_indexing_spark.operators.advanced import global_ntile
+    from adv_big_data_indexing_spark.operators.advanced import (
+        ntile_bucket,
+        ordered_rank,
+    )
 
     df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "id: long, v: long"
+        [(i, g, v) for i, (g, v) in enumerate(rows)], "id: long, g: long, v: long"
     )
     got = {
-        r.id: r.b
-        for r in global_ntile(df, k, ["v", "id"], "b", num_parts=num_parts).collect()
+        r.id: (r._rank, r._n, r.b)
+        for r in ordered_rank(df, ["v", "id"], group_cols, num_parts=num_parts)
+        .withColumn("b", ntile_bucket(k))
+        .collect()
     }
+    w = Window.partitionBy(*group_cols).orderBy("v", "id")
     exp = {
-        r.id: r.b
+        r.id: (r.rn, r.n, r.b)
         for r in df.select(
-            "id", F.ntile(k).over(Window.orderBy("v", "id")).alias("b")
+            "id",
+            F.row_number().over(w).alias("rn"),
+            F.count("*").over(Window.partitionBy(*group_cols)).alias("n"),
+            F.ntile(k).over(w).alias("b"),
         ).collect()
     }
     assert got == exp
@@ -361,15 +374,17 @@ def test_global_running_sum_deterministic_on_ties(spark, rows):
 
 
 def test_rank_machinery_reliable_checkpoint_mode(spark):
-    """VERDICT r6 item 5: under spark.advbdi.checkpoint=
-    reliable the machinery writes to the SparkContext checkpoint dir
-    (survives executor loss; local disks not sized by the data) and
-    produces the identical buckets."""
+    """Under spark.advbdi.checkpoint=reliable ordered_rank writes to the
+    SparkContext checkpoint dir (survives executor loss; local disks not
+    sized by the data) and produces the identical buckets."""
     import shutil
 
     from pyspark.sql.window import Window
 
-    from adv_big_data_indexing_spark.operators.advanced import global_ntile
+    from adv_big_data_indexing_spark.operators.advanced import (
+        ntile_bucket,
+        ordered_rank,
+    )
 
     cp_dir = "/root/repo/.cp_reliable_test"
     spark.sparkContext.setCheckpointDir(cp_dir)
@@ -379,7 +394,10 @@ def test_rank_machinery_reliable_checkpoint_mode(spark):
             F.col("id"), (F.col("id") * 37 % 11).alias("v")
         )
         got = {
-            r.id: r.b for r in global_ntile(df, 4, ["v", "id"], "b").collect()
+            r.id: r.b
+            for r in ordered_rank(df, ["v", "id"])
+            .select("id", ntile_bucket(4).alias("b"))
+            .collect()
         }
         exp = {
             r.id: r.b
@@ -467,62 +485,6 @@ def test_lazy_reliable_checkpoint_releases_previous_cache(spark):
             c.unpersist()
         adv._pending_lazy_caches.clear()
         shutil.rmtree(cp_dir, ignore_errors=True)
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    rows=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(-1000, 1000)),
-        min_size=1,
-        max_size=120,
-    ),
-    k=st.integers(2, 7),
-    num_parts=st.sampled_from([1, 5, 32, None]),
-)
-def test_grouped_ntile_matches_window_ntile(spark, rows, k, num_parts):
-    """r7 grouped machinery: grouped_ntile/grouped_row_number must equal
-    Spark's own per-group windows under the identical total order — any
-    group sizes (including singleton and empty groups), ties, signs,
-    partition counts."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from adv_big_data_indexing_spark.operators.advanced import (
-        grouped_ntile,
-        grouped_row_number,
-    )
-
-    df = spark.createDataFrame(
-        [(i, g, v) for i, (g, v) in enumerate(rows)], "id: long, g: long, v: long"
-    )
-    got_b = {
-        r.id: r.b
-        for r in grouped_ntile(
-            df, k, ["g"], ["v", "id"], "b", num_parts=num_parts
-        ).collect()
-    }
-    got_rn = {
-        r.id: r.rn
-        for r in grouped_row_number(
-            df, ["g"], ["v", "id"], "rn", num_parts=num_parts
-        ).collect()
-    }
-    w = Window.partitionBy("g").orderBy("v", "id")
-    exp = {
-        r.id: (r.b, r.rn)
-        for r in df.select(
-            "id",
-            F.ntile(k).over(w).alias("b"),
-            F.row_number().over(w).alias("rn"),
-        ).collect()
-    }
-    for rid, (eb, ern) in exp.items():
-        assert got_b[rid] == eb, (rid, got_b[rid], eb)
-        assert got_rn[rid] == ern, (rid, got_rn[rid], ern)
 
 
 def test_repo_wide_reliable_checkpoint_mode(spark):

@@ -114,19 +114,20 @@ SHOWCASE = [
     ),
     (
         "ns_corpus_shuffle",
-        "Training-order shuffle (r7 grouped_row_number): shard is a hash "
-        "bucket, pos the per-shard rank reassembled from broadcast "
+        "Training-order shuffle (ordered_rank grouped by shard): shard is "
+        "a hash bucket, pos the per-shard rank reassembled from broadcast "
         "per-(partition, shard) offsets over ONE range exchange — no "
         "global sort AND no corpus/N_SHARDS-rows-in-one-task window at "
         "any scale.",
     ),
     (
         "ext_window_ntile",
-        "Per-group exact ntile for LOW-cardinality groups (r7 "
-        "grouped_ntile): range partition by (segment, balance, key), "
-        "local ranks from monotonically_increasing_id, per-(partition, "
-        "segment) stats broadcast back, fill rule in int64 — no "
-        "one-task-per-segment WindowExec.",
+        "Per-group exact ntile for LOW-cardinality groups (ordered_rank "
+        "grouped by segment + ntile_bucket): range partition by (segment, "
+        "balance, key), local ranks from monotonically_increasing_id, "
+        "per-(partition, segment) offsets and segment sizes broadcast "
+        "back in one join, fill rule in int64 — no one-task-per-segment "
+        "WindowExec.",
     ),
     (
         "ext_tpch_q2_shape",
