@@ -115,16 +115,15 @@ def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
         .drop("__rn")
     )
 
-    try:
-        current = spark.read.parquet(store_dir)
+    merged = latest
+    if os.path.exists(store_dir):  # not the first batch
         merged = (
-            current.unionByName(latest)
+            read_store(spark, store_dir)
+            .unionByName(latest)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    except Exception:  # first batch: store does not exist yet
-        merged = latest
 
     _replace_dir(merged.filter(F.col("op") != "delete"), store_dir)
 
@@ -159,7 +158,9 @@ def drain(query: StreamingQuery, timeout_sec: int = 120) -> None:
 
 
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    return spark.read.parquet(store_dir)
+    """The CDC store, read with its known schema: no inference job, and a
+    damaged store fails the read instead of passing for an empty one."""
+    return spark.read.schema(CDC_SCHEMA).parquet(store_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -285,36 +285,11 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # r12 set refresh continuity: the headline set grew 19 → 24 (VERDICT
-    # r11 item 2); the old-19 subtotal is reported alongside so the
-    # artifact itself carries the r6–r11 comparison (old totals compare
-    # against the 34.70 s DuckDB baseline, the 24-query total against
-    # the re-measured 37.55 s — BASELINE.md r12).
-    _NEW_IN_R12 = {
-        "ns_semdedup_kmeans",
-        "ns_embed_pca_power",
-        "ns_graph_pagerank",
-        "ts_seasonal_decompose",
-        "ns_dedup_components",
-    }
-    # the subtotal is only meaningful over the HEADLINE set — under
-    # BENCH_ALL=1 the timed set is the whole registry and a same-named
-    # field would corrupt the r6–r11 continuity comparison (ADVICE r12):
-    # compute it over the 19 old headline names exactly, null otherwise.
-    old19_names = {
-        n for n, s in specs.items() if s.bench and n not in _NEW_IN_R12
-    }
-    old19 = (
-        round(sum(timings[n] for n in old19_names), 3)
-        if old19_names <= set(timings)
-        else None
-    )
     out = {
         "metric": "bench_total_sec",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "old19_subtotal_sec": old19,
         "sf": sf,
         "load_before": load_before,
         "load5_before": load5_before,

@@ -66,6 +66,27 @@ def test_cdc_replay_idempotent(spark, tmp_path):
     assert got["k1"] == 5
 
 
+def test_cdc_corrupt_store_fails_the_batch_and_keeps_the_store(spark, tmp_path):
+    """A store that exists but cannot be read fails the batch; it is not
+    taken for a first batch and replaced by this batch's keys alone."""
+    q, s, c = str(tmp_path / "q"), str(tmp_path / "store"), str(tmp_path / "ck")
+    cdc.enqueue(spark, q, [
+        {"key": "k1", "op": "insert", "seq": 1, "doc": _doc(1)},
+        {"key": "k2", "op": "insert", "seq": 1, "doc": _doc(2)},
+    ])
+    cdc.drain(cdc.run_indexer(spark, q, s, c))
+    parts = list((tmp_path / "store").glob("part-*.parquet"))
+    assert parts
+    for f in parts:  # damage every footer
+        f.write_bytes(b"not a parquet file")
+    before = {f.name: f.read_bytes() for f in (tmp_path / "store").iterdir()}
+
+    batch = spark.createDataFrame([("k3", "insert", 1, _doc(3))], cdc.CDC_SCHEMA)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cdc.apply_cdc_batch(s, batch, 1)
+    assert {f.name: f.read_bytes() for f in (tmp_path / "store").iterdir()} == before
+
+
 @pytest.fixture(scope="module")
 def event_stream_dir(spark, tmp_path_factory):
     """A small deterministic event file the file-source stream reads."""
