@@ -12,6 +12,7 @@ arithmetic followed by correctly-rounded double ops) — see
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -42,10 +43,23 @@ def register(spec: QuerySpec) -> QuerySpec:
 def query(
     name: str, oracle: str | None = None, bench: bool = False, doc: str = ""
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a (spark, sf_dir) -> DataFrame query."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame query.
+
+    The registered ``fn`` first releases the frames the session's
+    previous build held (``operators.advanced.hold``), then builds. The
+    decorator returns the raw function, so a query composing another
+    inside the package releases nothing in the middle of its own build."""
 
     def wrap(fn: QueryFn) -> QueryFn:
-        register(QuerySpec(name=name, fn=fn, oracle=oracle, bench=bench, doc=doc or (fn.__doc__ or "")))
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # deferred: operators.advanced imports this module
+            from adv_big_data_indexing_spark.operators.advanced import release_held  # noqa: PLC0415
+
+            release_held(spark)
+            return fn(spark, sf_dir)
+
+        register(QuerySpec(name=name, fn=build, oracle=oracle, bench=bench, doc=doc or (fn.__doc__ or "")))
         return fn
 
     return wrap

@@ -18,9 +18,12 @@ operator is a composition of DataFrame primitives with an explicit
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.storagelevel import StorageLevel
 
 from adv_big_data_indexing_spark.contract import query
 from adv_big_data_indexing_spark.functions.exact import cents, dec, epoch_us
@@ -1404,12 +1407,13 @@ def consistent_materialize(
     - ``reliable``: ``checkpoint`` to the directory set via
       ``spark.sparkContext.setCheckpointDir`` — survives executor loss
       and doesn't size local disks by the data. The cluster-grade
-      setting (docs/RANK_MACHINERY.md §Checkpoint modes).
+      setting (docs/RANK_MACHINERY.md §Checkpoint modes). An eager
+      checkpoint is one job that computes the frame and writes the
+      files; a lazy one is made over a :func:`hold` of the frame.
 
-    ``storage_level`` (both modes: the local checkpoint's block store,
-    or the reliable path's pre-checkpoint persist) overrides the block
-    store level. Pass ``StorageLevel.DISK_ONLY`` — via
-    :func:`disk_consistent_materialize` — for DATA-SIZED frames: the
+    ``storage_level`` (the local checkpoint's block store, or the held
+    frame under a lazy reliable checkpoint) overrides the block store
+    level. Pass ``StorageLevel.DISK_ONLY`` for DATA-SIZED frames: the
     default MEMORY_AND_DISK unrolls every block through the storage
     pool in the same tasks that are still aggregating, and at sf10 the
     24M-row negative-sampling edge frame's unroll starved its own
@@ -1420,86 +1424,65 @@ def consistent_materialize(
     """
     mode = df.sparkSession.conf.get("spark.advbdi.checkpoint", "local")
     if mode == "reliable":
-        # DataFrame.checkpoint runs a SEPARATE job to write the
-        # checkpoint files; without a persist the frame is computed
-        # twice (once for the caller's action, once for the write) —
-        # 2x work per iteration in the BFS/components/k-means loops.
-        # Eager: cache, checkpoint (reads the cache), then release.
-        # Lazy: keep the cache alive — the checkpoint job fires at the
-        # caller's first action and must still find it — and release it
-        # at the NEXT materialize call (else it leaks for the session
-        # lifetime, ADVICE r7). Before unpersisting, FORCE the pending
-        # frame's checkpoint write with one count() on the checkpointed
-        # layer: Spark writes a lazy checkpoint after the first job that
-        # computes the RDD, so after the count the files are guaranteed
-        # written FROM THE CACHED DATA. Without that barrier, dropping
-        # the cache while the checkpoint is still unwritten lets the
-        # writer later recompute from lineage — which, for
-        # nondeterministic lineage, can produce files that diverge from
-        # what the caller's first action observed (ADVICE r8; the exact
-        # boundary-consistency hazard this function exists to prevent).
-        # COST, stated honestly (code-review r9): when the caller
-        # already acted the count is NOT free — it is one full read of
-        # the cached/checkpointed layer per materialize call, paid only
-        # by reliable+lazy iterative loops. A skip would need the JVM
-        # checkpoint-state of the PLAN's RDD (DataFrame.rdd builds a
-        # fresh conversion RDD whose isCheckpointed() is always false),
-        # and poking that internal risks the boundary-consistency
-        # guarantee this barrier certifies — the scan is the price of
-        # making a forgotten action safe rather than wrong.
-        for prev_cached, prev_out in _pending_lazy_caches:
-            try:
-                prev_out.count()
-            except Exception:
-                pass  # count only certifies the checkpoint write; it can
-                #       ALSO fail transiently in a live session (deleted
-                #       input, exhausted task retries) — the unpersist
-                #       below must still run or clear() drops the only
-                #       handle and the blocks leak for the session
-                #       lifetime (ADVICE r9)
-            try:
-                prev_cached.unpersist()
-            except Exception:
-                pass  # frame's session gone — nothing left to release
-        _pending_lazy_caches.clear()
-        # honor the storage-level override here too: the reliable path's
-        # pre-checkpoint persist runs in the same tasks as the frame's
-        # producing aggregate, so a data-sized frame has the identical
-        # unroll-starvation hazard the local branch fixes (r9 find #5)
-        if storage_level is not None:
-            cached = df.persist(storage_level)
-        else:
-            cached = df.persist()
-        out = cached.checkpoint(eager=eager)
         if eager:
-            cached.unpersist()
-        else:
-            _pending_lazy_caches.append((cached, out))
-        return out
+            return df.checkpoint()  # one job computes the frame and writes the files
+        return hold(df, storage_level or StorageLevel.MEMORY_AND_DISK_DESER, checkpoint=True)
     return df.localCheckpoint(eager=eager, storageLevel=storage_level)
 
 
-# (cached, checkpointed) frame pairs awaiting their reliable-mode lazy
-# checkpoint job; drained — with a forced checkpoint-write barrier — at
-# the next consistent_materialize call. See consistent_materialize.
-_pending_lazy_caches: list[tuple[DataFrame, DataFrame]] = []
+#: SparkSession -> [(held frame, lazy reliable checkpoint over it or None)]
+_held: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def lazy_consistent_materialize(df: DataFrame) -> DataFrame:
-    """``consistent_materialize`` with ``eager=False`` in a
-    ``.transform(...)``-friendly shape (for reuse hints that should not
-    force a materialization barrier of their own)."""
-    return consistent_materialize(df, eager=False)
+def hold(df: DataFrame, level=StorageLevel.MEMORY_AND_DISK_DESER, checkpoint: bool = False) -> DataFrame:
+    """Persist ``df`` at ``level`` until the next query build of its
+    session starts, and return the held frame — with ``checkpoint``, a
+    lazy reliable checkpoint over it instead.
+
+    Lifetime rule: every registered query build first calls
+    :func:`release_held` (``contract.query``), so all branches of one
+    build share the held frame's single execution, and a rebuild of the
+    same query recomputes from its inputs instead of reading the
+    previous build's cache (the CacheManager matches canonicalized plans
+    across rebuilds and would otherwise pin the frame for the session's
+    lifetime). A frame held outside any registered build lives until the
+    session's next build.
+
+    A lazy reliable checkpoint writes its files in a separate job after
+    the caller's first action; the held frame makes that job read the
+    computed rows instead of computing them again (a checkpoint planned
+    before the persist would never read the cache, so ``hold`` makes it).
+
+    One build at a time per session: a result executed after a later
+    build of the same session has started recomputes its held frames —
+    the same rows, only slower."""
+    held = df.persist(level)
+    barrier = held.checkpoint(eager=False) if checkpoint else None
+    _held.setdefault(df.sparkSession, []).append((held, barrier))
+    return held if barrier is None else barrier
 
 
-def disk_consistent_materialize(df: DataFrame) -> DataFrame:
-    """``consistent_materialize`` with DISK_ONLY checkpoint blocks, in a
-    ``.transform(...)``-friendly shape — for data-sized frames whose
-    in-memory unroll would starve the very aggregation producing them
-    (see consistent_materialize's storage_level note; r9 sf10 find)."""
-    from pyspark.storagelevel import StorageLevel  # noqa: PLC0415
+def release_held(spark: SparkSession) -> None:
+    """Unpersist every frame :func:`hold` recorded for ``spark``.
 
-    return consistent_materialize(df, storage_level=StorageLevel.DISK_ONLY)
+    A held checkpoint is first counted: Spark writes a lazy checkpoint
+    after the first job that computes it, so after the count its files
+    are written from the held rows, and dropping the cache can no longer
+    let the writer recompute a nondeterministic lineage into files that
+    differ from what the caller read. When the caller already acted, the
+    count is one read of the checkpointed files; it is paid only by
+    reliable-mode lazy checkpoints."""
+    for held, barrier in _held.pop(spark, ()):
+        if barrier is not None:
+            try:
+                barrier.count()
+            except Exception:
+                pass  # a failed count (deleted input, exhausted retries)
+                #       must not skip the unpersist below
+        try:
+            held.unpersist()
+        except Exception:
+            pass  # the frame's session is stopped: nothing left to free
 
 
 def release_superseded_materializations(spark) -> None:

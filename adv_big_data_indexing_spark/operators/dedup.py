@@ -25,9 +25,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from adv_big_data_indexing_spark.contract import query
-from adv_big_data_indexing_spark.operators.advanced import (
-    consistent_materialize,
-)
+from adv_big_data_indexing_spark.operators.advanced import consistent_materialize, hold
 from adv_big_data_indexing_spark.functions.exact import DUCK_QUANTIZE, int_dot, quantize_vec
 from adv_big_data_indexing_spark.functions.text import (
     DUCK_BASE48,
@@ -317,23 +315,10 @@ def _banded(sh: DataFrame, with_mhs: bool = False) -> tuple[DataFrame, list[str]
     return bands, carry
 
 
-#: the band-row frames persisted by prior _lsh_pair_stats builds, still
-#: registered in the session CacheManager; drained (unpersisted) at the
-#: next build. At most one frame is pending at a time — every query path
-#: builds the pair pipeline at most once — so the session-lifetime cache
-#: footprint is bounded by ONE corpus-linear DISK_ONLY frame instead of
-#: one per plan shape (ADVICE r13), and a bench rebuild of the same
-#: query recomputes instead of silently reading the previous run's
-#: cache (VERDICT r13 item 1). See the release comment in
-#: _lsh_pair_stats.
-_pending_lsh_persists: list[DataFrame] = []
-
-
 def _lsh_pair_stats(
     sh: DataFrame,
     with_mhs: bool = False,
     inrow_cap: int = BUCKET_INROW_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """(doc_a, doc_b, n_inter, n_a, n_b) for every LSH-colliding doc pair —
     ONE pipeline over the corpus, no second pass for the verify.
@@ -346,22 +331,22 @@ def _lsh_pair_stats(
        verify never re-reads the corpus;
     3. posexplode 4 band keys — bucketed as bk = xxhash64(band_key), an
        8-byte int in place of the ~40-byte concat string, so the band
-       shuffle carries ints (r13; see _banded for the collision
-       argument) — count bucket sizes, and expand in-bucket pairs along
-       two size-tiered paths:
+       shuffle carries ints (see _banded for the collision argument) —
+       count bucket sizes, and expand in-bucket pairs along two
+       size-tiered paths:
        - size ≤ ``inrow_cap``: collect_list + array transforms — one
          bucket per row, cheapest (a self-join would execute the
          signature build twice when exchange reuse misses);
        - size > ``inrow_cap``: equi self-join on the band key — one row
          per member, so a hot bucket never materializes as a single
-         collect_list row (the r5-flagged OOM), and its pairs stream
+         collect_list row (an executor OOM), and its pairs stream
          through spillable shuffle pages at ANY bucket size. Degenerate
          buckets ROUTE through this tier too — never dropped: the
          adversarial case (a true near-identical clique shares every
-         band key) is exactly the one a drop cap would silently lose,
-         the same class the r9 simhash fix removed (code-review r9; the
-         DuckDB oracle enumerates every colliding pair, so a drop would
-         also diverge from this function's own oracle above the cap).
+         band key) is exactly the one a drop cap would silently lose
+         (the DuckDB oracle enumerates every colliding pair, so a drop
+         would also diverge from this function's own oracle above the
+         cap).
          ns_dedup_lsh_bucket_audit still itemizes bucket-size tiers so
          a boilerplate cluster is visible and can be re-keyed;
     4. per pair: n_inter = |array_intersect| of the two carried hash sets.
@@ -373,8 +358,8 @@ def _lsh_pair_stats(
     thresholding.
 
     ``spark.advbdi.maxLshBucket`` is read from session conf at
-    DataFrame BUILD time, not execution time (ADVICE r10): set it
-    BEFORE calling this function — setting or changing it after the
+    DataFrame BUILD time, not execution time: set it BEFORE calling
+    this function — setting or changing it after the
     pair frame is constructed has no effect on that frame (unlike true
     runtime confs such as shuffle.partitions under AQE)."""
     bands, carry = _banded(sh, with_mhs)
@@ -390,67 +375,30 @@ def _lsh_pair_stats(
         "bsz", F.count("*").over(Window.partitionBy("band", "bk"))
     ).filter(F.col("bsz") > 1)
 
-    # Materialize the sized band rows ONCE before the tier split (r13,
-    # guide §3.3/§5): the split's three consumers (the small-bucket
-    # groupBy and BOTH sides of the hot-bucket self-join) are separate
-    # plan branches, and Catalyst shares no subtrees across them —
-    # measured on the executed AQE plan: 3 FileScans, 0 ReusedExchange,
-    # i.e. the whole scan→shingle→minhash→band pipeline ran three
-    # times. The persisted frame holds only colliding rows (bsz > 1),
-    # is the same bytes the (band, bk) shuffle already carries, and
-    # preserves that hash partitioning, so the tier consumers read it
-    # exchange-free.
+    # The sized band rows are held (persisted) ONCE before the tier
+    # split: the split's three consumers (the small-bucket groupBy and
+    # BOTH sides of the hot-bucket self-join) are separate plan branches,
+    # and Catalyst shares no subtrees across them — without the hold the
+    # whole scan→shingle→minhash→band pipeline runs three times (3
+    # FileScans, 0 ReusedExchange on the executed AQE plan). The frame
+    # carries only colliding rows (bsz > 1), is the same bytes the
+    # (band, bk) shuffle already carries, and keeps that hash
+    # partitioning, so the tier consumers read it exchange-free.
     #
-    # LAZY persist, not consistent_materialize: an eager localCheckpoint
-    # runs the whole pipeline as a SEPARATE job before the consumer job,
-    # and on an unsaturated local[n] that serialization costs more than
-    # the triple execution it removes (in-session best-of-6 at sf0.1:
-    # single dataflow 2.29 s, eager checkpoint 4.14 s, lazy persist
-    # 1.49 s). The CacheManager substitutes the cached plan into all
-    # three branches at planning time, so the pipeline still executes
-    # once, inside the consumer's own action; lineage is retained, so a
-    # lost executor recomputes instead of failing the job (strictly
-    # better than localCheckpoint on a cluster). DISK_ONLY because the
-    # frame is corpus-linear: MEMORY_AND_DISK unroll pins the protected
-    # storage half of the unified pool against the very aggregations
-    # consuming it (the r9 sf10 starvation find — see
-    # disk_consistent_materialize). `materialize=False` keeps the old
-    # single-dataflow shape (A/B probe only).
-    #
-    # RELEASE (r14, VERDICT r13 item 1 + ADVICE r13): a Dataset-level
-    # persist is registered in the session CacheManager, which holds a
-    # strong reference to the InMemoryRelation and its cached RDD — the
-    # ContextCleaner can NEVER free the blocks on Python-side GC (unlike
-    # localCheckpoint blocks; the r13 comment claimed otherwise and was
-    # wrong). Two consequences, both fixed by the drain below:
-    #   (a) disk leak: every distinct plan shape pinned a corpus-linear
-    #       DISK_ONLY cache for the session lifetime — the exact
-    #       ENOSPC-at-sf10 accumulation class the repo documents in
-    #       release_superseded_materializations;
-    #   (b) bench integrity: the CacheManager matches the CANONICALIZED
-    #       plan across DataFrame rebuilds, so a warmup run populated the
-    #       cache and every timed rebuild of the same query read the
-    #       persisted band rows instead of re-running
-    #       scan→shingle→minhash→band — the r13 per-run number was a
-    #       warm-cache number. Draining at the next build makes each
-    #       rebuild recompute from the parquet inputs (cold per run),
-    #       while the three tier branches within one build still share
-    #       the single cached execution.
-    # The drain keeps at most ONE pending frame alive (the one the
-    # caller is about to consume); it is released at the next
-    # _lsh_pair_stats build — the _pending_lazy_caches discipline of
-    # consistent_materialize, without the count() barrier because a
-    # persist (unlike a lazy reliable checkpoint) has no unwritten-file
-    # boundary-consistency hazard: dropping it merely recomputes.
-    if materialize:
-        for prev in _pending_lsh_persists:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass  # frame's session already stopped — nothing to free
-        _pending_lsh_persists.clear()
-        sized = sized.persist(StorageLevel.DISK_ONLY)
-        _pending_lsh_persists.append(sized)
+    # A lazy persist, not consistent_materialize: an eager
+    # localCheckpoint runs the pipeline as a separate job before the
+    # consumer's, and on an unsaturated local[n] that serialization costs
+    # more than the triple execution it removes (sf0.1 best-of-6: single
+    # dataflow 2.29 s, eager checkpoint 4.14 s, lazy persist 1.49 s). The
+    # CacheManager substitutes the cached plan into all three branches,
+    # so the pipeline executes once, inside the consumer's own action,
+    # and lineage is kept, so a lost executor recomputes instead of
+    # failing the job. DISK_ONLY because the frame is corpus-linear:
+    # MEMORY_AND_DISK unroll pins the storage half of the unified pool
+    # against the aggregations consuming it (see consistent_materialize's
+    # storage_level). The hold is released when the
+    # session's next query build starts (see hold).
+    sized = hold(sized, StorageLevel.DISK_ONLY)
 
     # Optional LOUD ceiling on bucket degeneracy: a degenerate band key
     # contributes Θ(B²) pairs with only the after-the-fact audit as

@@ -14,13 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from adv_big_data_indexing_spark.contract import query
-from adv_big_data_indexing_spark.operators.advanced import (
-    consistent_materialize,
-    disk_consistent_materialize,
-    lazy_consistent_materialize,
-)
+from adv_big_data_indexing_spark.operators.advanced import consistent_materialize
 from adv_big_data_indexing_spark.sources.catalog import load_table
 
 def ordered_pairs_sql(alias1: str, alias2: str) -> str:
@@ -334,7 +331,7 @@ def ns_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             # lazy checkpoint: the count() below is the ONE action that
             # both materializes the checkpoint and sizes the frontier
             # (ADVICE r5: eager + isEmpty was two jobs per layer)
-            .transform(lazy_consistent_materialize)
+            .transform(consistent_materialize, eager=False)
         )
         if nxt.count() == 0:
             break
@@ -530,7 +527,7 @@ def ns_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .distinct()
-        .transform(disk_consistent_materialize)
+        .transform(consistent_materialize, storage_level=StorageLevel.DISK_ONLY)
     )
     # vocab indexing via the distributed ordered_rank (one range
     # shuffle) — a catalog-scale vocabulary must not rank through a

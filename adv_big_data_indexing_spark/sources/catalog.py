@@ -20,6 +20,7 @@ parquet files (a remote URI, a missing path) is inferred on every read.
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 
@@ -98,6 +99,17 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _ts_is_nanos(path: str) -> bool:
+    """Whether ``ts`` is parquet TIMESTAMP(NANOS), read driver-side from
+    the first data file's footer (no Spark job). A path with no local
+    parquet files reads as not NANOS."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    files = _data_files(path) if os.path.exists(path) else []
+    cols = pq.read_metadata(files[0]).schema if files else ()
+    return any(c.path == "ts" and json.loads(c.logical_type.to_json()).get("timeUnit") == "nanoseconds" for c in cols)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -105,10 +117,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Spark vectorized reader rejects, so it must be read as long and
         # truncated — integer DIV, exact, matching DuckDB's ns→us truncation)
         # and plain TIMESTAMP(MICROS). Normalize either to TIMESTAMP_NTZ so
-        # event-time semantics are independent of the session timezone.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # event-time semantics are independent of the session timezone. The
+        # unit comes from the footer, so the session conf (part of every
+        # table's schema-memo key) is set only when a NANOS file needs it.
+        nanos = _ts_is_nanos(path)
+        if nanos:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_parquet(spark, path)
-        ts = "timestamp_micros(ts DIV 1000)" if dict(df.dtypes)["ts"] == "bigint" else "ts"
+        ts = "timestamp_micros(ts DIV 1000)" if nanos else "ts"
         return df.selectExpr(
             "event_id", f"CAST({ts} AS TIMESTAMP_NTZ) AS ts", "user_id", "event_type", "value", "props"
         )

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adv_big_data_indexing_spark.operators.advanced import hold
+
 
 def read_json_documents(
     spark: SparkSession, path: str, schema: T.StructType
@@ -37,9 +39,10 @@ def read_json_documents(
 
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     # Spark refuses queries that project only _corrupt_record from a live
-    # JSON scan (SPARK-2115x guard); cache makes the split legal and also
-    # avoids double-parsing the input for the two branches.
-    df = df.cache()
+    # JSON scan (SPARK-2115x guard); holding the parsed frame makes the
+    # split legal and also avoids double-parsing the input for the two
+    # branches. The hold ends when the session's next query build starts.
+    df = hold(df)
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
     return good, bad

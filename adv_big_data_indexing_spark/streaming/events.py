@@ -1212,8 +1212,8 @@ def run_streaming_markov(
         # a micro-batch is data-sized at production scale, and a
         # MEMORY_AND_DISK unroll runs in the SAME tasks as the stage
         # producing the frame — the unroll-starves-execution hazard
-        # disk_consistent_materialize (operators/advanced.py) exists
-        # for; blocks stream to disk instead of holding the pool.
+        # consistent_materialize's storage_level (operators/advanced.py)
+        # exists for; blocks stream to disk instead of holding the pool.
         from pyspark import StorageLevel
 
         batch = batch.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)

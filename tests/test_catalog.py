@@ -112,3 +112,19 @@ def test_events_nanos_and_micros_load_identically(session, tmp_path):
         assert (raw_ts == "bigint") == (unit == "ns")  # the DIV-1000 branch for NANOS only
     assert len(loaded["us", "inferred"]) == src.num_rows
     assert len(set(map(tuple, loaded.values()))) == 1
+
+
+def test_micros_events_leave_nanos_conf_and_memo_alone(session, tmp_path):
+    """events with ts as TIMESTAMP(MICROS) need no nanosAsLong, so loading
+    them leaves the conf at its prior value, and a table memoized before
+    the events load still reads with no job after it."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = session.conf.get(conf)
+    src = os.path.join(SF_SMOKE, "events.parquet")
+    assert pq.ParquetFile(src).schema_arrow.field("ts").type == pa.timestamp("us")
+    load_table(session, SF_SMOKE, "orders")  # infers
+    df, _ = load_counting_jobs(session, SF_SMOKE, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    assert session.conf.get(conf) == prior
+    _, jobs = load_counting_jobs(session, SF_SMOKE, "orders")
+    assert jobs == 0

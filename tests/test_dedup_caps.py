@@ -249,33 +249,76 @@ def test_pair_recall_slices_above_cap(spark, tmp_path, monkeypatch):
 
 
 def test_lsh_persist_drained_on_next_build(spark):
-    """r14 (VERDICT r13 item 1 + ADVICE r13): the band-row persist must
-    be RELEASED at the next pipeline build — (a) the CacheManager pins a
-    persisted Dataset for the session lifetime otherwise (disk-leak
-    class), and (b) a cached canonicalized plan would let a timed bench
-    rebuild read the previous run's cache instead of recomputing."""
-    from adv_big_data_indexing_spark.operators import dedup as D
+    """The sized band rows are held DISK_ONLY, one frame per pipeline
+    build, and released when the session's next build starts
+    (release_held, the first step of every registered query build): the
+    CacheManager would otherwise pin the frame for the session lifetime,
+    and a rebuild of the same plan would read the previous build's cache
+    instead of recomputing."""
+    from pyspark.storagelevel import StorageLevel
 
-    # two DIFFERENT source frames: df.storageLevel resolves through the
-    # CacheManager by canonicalized plan, so rebuilding the SAME plan
-    # would make the first frame report cached again the moment the
-    # second build persists — distinct plans keep the probe honest.
-    sh1 = _synthetic_sh(spark, n_hot=6)
-    sh2 = _synthetic_sh(spark, n_hot=7)
-    D._lsh_pair_stats(sh1).count()  # build 1, materialized -> cache filled
-    assert len(D._pending_lsh_persists) == 1
-    first = D._pending_lsh_persists[0]
-    assert first.storageLevel.useDisk  # persisted (DISK_ONLY)
+    from adv_big_data_indexing_spark.operators import advanced as adv
 
-    D._lsh_pair_stats(sh2)  # build 2 drains build 1
-    assert len(D._pending_lsh_persists) == 1
-    second = D._pending_lsh_persists[0]
-    assert second is not first
-    # the first frame is out of the CacheManager: its storage level is
-    # back to NONE, so a rebuild recomputes from the inputs
-    assert not first.storageLevel.useDisk
-    assert not first.storageLevel.useMemory
-    # drain build 2 too so this test leaves no cache behind
-    for f in D._pending_lsh_persists:
-        f.unpersist()
-    D._pending_lsh_persists.clear()
+    adv.release_held(spark)
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def tag(doc_id):
+        rows_read.add(1)
+        return doc_id
+
+    sh = _synthetic_sh(spark, n_hot=6).withColumn("doc_id", F.udf(tag, "long")("doc_id"))
+    first = _pairset(_lsh_pair_stats(sh))
+    ((held, barrier),) = adv._held[spark]
+    assert barrier is None
+    assert held.storageLevel == StorageLevel.DISK_ONLY
+    once = rows_read.value
+    assert once > 0
+
+    adv.release_held(spark)
+    assert spark not in adv._held
+    assert held.storageLevel == StorageLevel.NONE
+    # the rebuild computes the band rows from the input again
+    assert _pairset(_lsh_pair_stats(sh)) == first
+    assert rows_read.value == 2 * once
+    adv.release_held(spark)
+
+
+def test_lsh_hold_released_by_non_lsh_build(spark):
+    """Any next registered build releases the LSH frame, not only the
+    next LSH build: it is not left pinned on disk through later queries."""
+    from pyspark.storagelevel import StorageLevel
+
+    from adv_big_data_indexing_spark.contract import registry
+    from adv_big_data_indexing_spark.operators import advanced as adv
+    from tests.conftest import SF_CORRECTNESS
+
+    reg = registry()
+    reg["ns_dedup_minhash_lsh"].fn(spark, SF_CORRECTNESS)
+    ((lsh, _),) = adv._held[spark]
+    assert lsh.storageLevel == StorageLevel.DISK_ONLY
+    reg["ns_dedup_exact"].fn(spark, SF_CORRECTNESS)
+    assert lsh.storageLevel == StorageLevel.NONE
+    assert spark not in adv._held
+
+
+def test_build_in_another_session_keeps_held_frames(spark):
+    """Held frames are per session: a build in a second session over the
+    same context releases only that session's frames."""
+    from pyspark.storagelevel import StorageLevel
+
+    from adv_big_data_indexing_spark.contract import registry
+    from adv_big_data_indexing_spark.operators import advanced as adv
+    from tests.conftest import SF_CORRECTNESS
+
+    reg = registry()
+    other = spark.newSession()
+    reg["ns_dedup_minhash_lsh"].fn(spark, SF_CORRECTNESS)
+    ((lsh, _),) = adv._held[spark]
+    try:
+        reg["ns_minhash_jaccard_estimate"].fn(other, SF_CORRECTNESS)
+        assert len(adv._held[other]) == 1
+        assert lsh.storageLevel == StorageLevel.DISK_ONLY
+    finally:
+        adv.release_held(other)
+        adv.release_held(spark)
+    assert lsh.storageLevel == StorageLevel.NONE

@@ -25,6 +25,23 @@ def test_json_ingest_corrupt_capture(spark, tmp_path):
     assert "{broken json" in bad.collect()[0]._corrupt_record
 
 
+def test_split_corrupt_hold_released_by_next_build(spark, tmp_path):
+    """The parsed frame both branches read is held, so it follows the one
+    lifetime rule: released when the session's next build starts."""
+    from pyspark.storagelevel import StorageLevel
+
+    from adv_big_data_indexing_spark.operators.advanced import release_held
+
+    p = tmp_path / "in.jsonl"
+    p.write_text("\n".join(plan_jsons(2) + ["{broken json"]))
+    df = eio.read_json_documents(spark, str(p), compile_struct(reference_schema()))
+    good, bad = eio.split_corrupt(df)
+    assert (good.count(), bad.count()) == (2, 1)
+    assert df.storageLevel != StorageLevel.NONE
+    release_held(spark)
+    assert df.storageLevel == StorageLevel.NONE
+
+
 def test_entity_store_partition_pruning(spark, tmp_path):
     raw = spark.createDataFrame([(s,) for s in plan_jsons(10)], "raw string")
     v = validate(raw, reference_schema())

@@ -247,11 +247,10 @@ def test_ordered_rank_consumers_no_rank_window(spark, name):
     assert "BroadcastHashJoin" in p
 
 
-def test_rank_id_split_lives_only_in_ordered_rank():
-    """The monotonically_increasing_id (pid << 33) + position split is the
-    rank machinery's one mechanism. It may appear in the package only
-    inside ordered_rank, so a new rank consumer composes ordered_rank
-    instead of re-deriving the split."""
+def _package_sites(match) -> list[tuple[str, str, int]]:
+    """(path relative to the package, innermost enclosing function or
+    ``<module>``, line number) of every package source line ``match``
+    accepts."""
     pkg = Path(__file__).resolve().parents[1] / "adv_big_data_indexing_spark"
     sites = []
     for path in sorted(pkg.rglob("*.py")):
@@ -260,13 +259,34 @@ def test_rank_id_split_lives_only_in_ordered_rank():
             n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)
         ]
         for no, line in enumerate(src.splitlines(), 1):
-            if "8589934592" in line or "monotonically_increasing_id" in line:
+            if match(line):
                 owners = [f for f in funcs if f.lineno <= no <= f.end_lineno]
                 innermost = min(owners, key=lambda f: f.end_lineno - f.lineno, default=None)
                 owner = innermost.name if innermost else "<module>"
                 sites.append((path.relative_to(pkg).as_posix(), owner, no))
+    return sites
+
+
+def test_rank_id_split_lives_only_in_ordered_rank():
+    """The monotonically_increasing_id (pid << 33) + position split is the
+    rank machinery's one mechanism. It may appear in the package only
+    inside ordered_rank, so a new rank consumer composes ordered_rank
+    instead of re-deriving the split."""
+    sites = _package_sites(
+        lambda line: "8589934592" in line or "monotonically_increasing_id" in line
+    )
     owners = {(rel, fn) for rel, fn, _ in sites}
     assert owners == {("operators/advanced.py", "ordered_rank")}, sites
+
+
+def test_persists_outside_streaming_live_only_in_hold():
+    """Outside streaming/ (whose persists are scoped to one micro-batch by
+    try/finally) every persist goes through hold, so one lifetime rule —
+    released when the session's next query build starts — covers them
+    all, and no operator keeps a registry of its own."""
+    sites = _package_sites(lambda line: ".persist(" in line or ".cache()" in line)
+    owners = {(rel, fn) for rel, fn, _ in sites if not rel.startswith("streaming/")}
+    assert owners == {("operators/advanced.py", "hold")}, sites
 
 
 def test_preference_pairs_pooled_topk_single_pass(spark):

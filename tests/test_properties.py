@@ -373,12 +373,10 @@ def test_global_running_sum_deterministic_on_ties(spark, rows):
         assert r.run == pref[r.t], (r, pref)
 
 
-def test_rank_machinery_reliable_checkpoint_mode(spark):
+def test_rank_machinery_reliable_checkpoint_mode(spark, tmp_path):
     """Under spark.advbdi.checkpoint=reliable ordered_rank writes to the
     SparkContext checkpoint dir (survives executor loss; local disks not
     sized by the data) and produces the identical buckets."""
-    import shutil
-
     from pyspark.sql.window import Window
 
     from adv_big_data_indexing_spark.operators.advanced import (
@@ -386,8 +384,7 @@ def test_rank_machinery_reliable_checkpoint_mode(spark):
         ordered_rank,
     )
 
-    cp_dir = "/root/repo/.cp_reliable_test"
-    spark.sparkContext.setCheckpointDir(cp_dir)
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
     spark.conf.set("spark.advbdi.checkpoint", "reliable")
     try:
         df = spark.range(200).select(
@@ -408,7 +405,6 @@ def test_rank_machinery_reliable_checkpoint_mode(spark):
         assert got == exp
     finally:
         spark.conf.set("spark.advbdi.checkpoint", "local")
-        shutil.rmtree(cp_dir, ignore_errors=True)
 
 
 def test_machinery_parts_nonnumeric_conf_falls_back(spark):
@@ -433,68 +429,56 @@ def test_machinery_parts_nonnumeric_conf_falls_back(spark):
     assert _machinery_parts(df, 7) == 7
 
 
-def test_lazy_reliable_checkpoint_releases_previous_cache(spark):
-    """ADVICE r7: in reliable mode with eager=False (the per-layer BFS
-    shape), each lazily-cached frame must be unpersisted at the NEXT
-    materialize call — not leak for the session lifetime. ADVICE r8:
-    the drain must FORCE the pending checkpoint write from the cache
-    before unpersisting, so a never-acted-on lazy frame's checkpoint
-    can no longer be recomputed from (possibly nondeterministic)
-    lineage after its cache is gone."""
-    import shutil
+def test_lazy_reliable_checkpoint_releases_previous_cache(spark, tmp_path):
+    """In reliable mode a lazy checkpoint (the per-layer BFS shape) holds
+    its frame until the session's next build starts — not for the
+    session lifetime — and the release first forces the checkpoint write
+    from the held rows, so a never-acted-on nondeterministic frame reads
+    the same frozen values after its cache is gone."""
+    import random
 
     from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
 
     from adv_big_data_indexing_spark.operators import advanced as adv
 
-    cp_dir = "/root/repo/.cp_lazy_release_test"
-    spark.sparkContext.setCheckpointDir(cp_dir)
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
     spark.conf.set("spark.advbdi.checkpoint", "reliable")
     try:
-        adv._pending_lazy_caches.clear()
-        out1 = adv.lazy_consistent_materialize(spark.range(50))
+        adv.release_held(spark)
+        out1 = adv.consistent_materialize(spark.range(50), eager=False)
         assert out1.count() == 50  # checkpoint job fires at first action
-        assert len(adv._pending_lazy_caches) == 1
-        first_cached, _first_out = adv._pending_lazy_caches[0]
-        assert first_cached.storageLevel.useMemory or first_cached.storageLevel.useDisk
-        out2 = adv.lazy_consistent_materialize(spark.range(30))
+        out2 = adv.consistent_materialize(spark.range(30), eager=False)
         assert out2.count() == 30
-        # previous layer's cache released, only the new one pending
-        assert len(adv._pending_lazy_caches) == 1
-        assert adv._pending_lazy_caches[0][0] is not first_cached
-        assert not (
-            first_cached.storageLevel.useMemory or first_cached.storageLevel.useDisk
-        )
+        held = [h for h, _ in adv._held[spark]]
+        assert len(held) == 2
+        assert all(h.storageLevel != StorageLevel.NONE for h in held)
+        adv.release_held(spark)  # what the next registered build does first
+        assert spark not in adv._held
+        assert all(h.storageLevel == StorageLevel.NONE for h in held)
+        assert out1.count() == 50  # read from the written checkpoint
 
-        # r8 barrier: a NONDETERMINISTIC lazy frame the caller never acted
-        # on is drained by the next materialize; its checkpoint must have
-        # been written from the cache, so every later read returns the
-        # same frozen values (under the old unpersist-first drain the
-        # writer recomputed rand() from lineage after the cache died).
-        adv._pending_lazy_caches.clear()
-        nd = adv.lazy_consistent_materialize(
-            spark.range(20).select("id", F.rand(seed=None).alias("r"))
+        # a seeded rand() recomputes to the same values; a Python UDF
+        # draws new ones on every evaluation
+        noise = F.udf(lambda _: random.random(), "double").asNondeterministic()
+        nd = adv.consistent_materialize(
+            spark.range(20).select("id", noise("id").alias("r")), eager=False
         )
-        adv.lazy_consistent_materialize(spark.range(10)).count()  # drains nd
+        adv.release_held(spark)  # never acted on: the release writes it
         v1 = sorted((r.id, r.r) for r in nd.collect())
         v2 = sorted((r.id, r.r) for r in nd.collect())
         assert v1 == v2
     finally:
         spark.conf.set("spark.advbdi.checkpoint", "local")
-        for c, _o in adv._pending_lazy_caches:
-            c.unpersist()
-        adv._pending_lazy_caches.clear()
-        shutil.rmtree(cp_dir, ignore_errors=True)
+        adv.release_held(spark)
 
 
-def test_repo_wide_reliable_checkpoint_mode(spark):
-    """r7: consistent_materialize is the repo-wide lineage-truncation
+def test_repo_wide_reliable_checkpoint_mode(spark, tmp_path):
+    """consistent_materialize is the repo-wide lineage-truncation
     point — under spark.advbdi.checkpoint=reliable an ITERATIVE
     non-machinery operator (connected components: one checkpoint per
     small-star/large-star round) must produce the identical result via
     the SparkContext checkpoint directory."""
-    import shutil
-
     from adv_big_data_indexing_spark.contract import registry
     from tests.conftest import SF_CORRECTNESS
 
@@ -502,15 +486,63 @@ def test_repo_wide_reliable_checkpoint_mode(spark):
     fn = registry()[name].fn
     base = sorted(map(tuple, fn(spark, SF_CORRECTNESS).collect()))
 
-    cp_dir = "/root/repo/.cp_reliable_repo_test"
-    spark.sparkContext.setCheckpointDir(cp_dir)
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
     spark.conf.set("spark.advbdi.checkpoint", "reliable")
     try:
         rel = sorted(map(tuple, fn(spark, SF_CORRECTNESS).collect()))
         assert rel == base
     finally:
         spark.conf.set("spark.advbdi.checkpoint", "local")
-        shutil.rmtree(cp_dir, ignore_errors=True)
+
+
+def test_reliable_components_keep_lsh_hold(spark, tmp_path, monkeypatch):
+    """With the pair source routed through LSH, the reliable-mode
+    checkpoints of connected components do not release the held band
+    frame: it is still persisted when the build returns, and the result
+    equals local mode."""
+    from pyspark.storagelevel import StorageLevel
+
+    from adv_big_data_indexing_spark.contract import registry
+    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark.operators import dedup as D
+    from tests.conftest import SF_CORRECTNESS
+
+    monkeypatch.setattr(D, "MAX_EXACT_JACCARD_DOCS", 10)
+    fn = registry()["ns_dedup_components"].fn
+    base = sorted(map(tuple, fn(spark, SF_CORRECTNESS).collect()))
+
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    spark.conf.set("spark.advbdi.checkpoint", "reliable")
+    try:
+        df = fn(spark, SF_CORRECTNESS)
+        levels = [h.storageLevel for h, _ in adv._held[spark]]
+        assert levels == [StorageLevel.DISK_ONLY]
+        assert sorted(map(tuple, df.collect())) == base
+    finally:
+        spark.conf.set("spark.advbdi.checkpoint", "local")
+        adv.release_held(spark)
+
+
+def test_reliable_bfs_matches_oracle(spark, duck, tmp_path):
+    """The BFS frontiers are lazy reliable checkpoints: at most one held
+    layer per hop after the build, and the result still matches the
+    DuckDB oracle."""
+    from adv_big_data_indexing_spark.contract import registry
+    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark.operators.mining import BFS_MAX_HOPS
+    from tests.conftest import SF_CORRECTNESS
+    from tests.parity import compare
+
+    spec = registry()["ns_graph_bfs_hops"]
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    spark.conf.set("spark.advbdi.checkpoint", "reliable")
+    try:
+        sdf = spec.fn(spark, SF_CORRECTNESS)
+        assert 1 <= len(adv._held[spark]) <= BFS_MAX_HOPS
+        assert compare(sdf, duck.execute(spec.oracle)) == []
+    finally:
+        spark.conf.set("spark.advbdi.checkpoint", "local")
+        adv.release_held(spark)
 
 
 @settings(
