@@ -1435,18 +1435,22 @@ _held: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def hold(df: DataFrame, level=StorageLevel.MEMORY_AND_DISK_DESER, checkpoint: bool = False) -> DataFrame:
-    """Persist ``df`` at ``level`` until the next query build of its
-    session starts, and return the held frame — with ``checkpoint``, a
-    lazy reliable checkpoint over it instead.
+    """Persist ``df`` at ``level`` until the work that holds it ends, and
+    return the held frame — with ``checkpoint``, a lazy reliable
+    checkpoint over it instead.
 
-    Lifetime rule: every registered query build first calls
-    :func:`release_held` (``contract.query``), so all branches of one
-    build share the held frame's single execution, and a rebuild of the
-    same query recomputes from its inputs instead of reading the
-    previous build's cache (the CacheManager matches canonicalized plans
-    across rebuilds and would otherwise pin the frame for the session's
-    lifetime). A frame held outside any registered build lives until the
-    session's next build.
+    Lifetime rule: a held frame lives until the end of the work that
+    held it. For a query that is the start of the session's next query
+    build: every registered build first calls :func:`release_held`
+    (``contract.query``), so all branches of one build share the held
+    frame's single execution, and a rebuild of the same query recomputes
+    from its inputs instead of reading the previous build's cache (the
+    CacheManager matches canonicalized plans across rebuilds and would
+    otherwise pin the frame for the session's lifetime). A frame held
+    outside any registered build lives until the session's next build.
+    For a streaming fold it is the end of the micro-batch:
+    ``streaming.events.start_fold`` releases the batch's session (its
+    own wrapper per batch) after the fold returns or raises.
 
     A lazy reliable checkpoint writes its files in a separate job after
     the caller's first action; the held frame makes that job read the

@@ -43,10 +43,6 @@ def object_key(object_type: Column, object_id: Column) -> Column:
     return F.concat_ws("_", object_type, object_id)
 
 
-COSTSHARE_FIELDS = ["deductible", "_org", "copay", "objectId", "objectType"]
-SERVICE_FIELDS = ["_org", "objectId", "objectType", "name"]
-
-
 def shred(plans: DataFrame, carry: Sequence[str] = ()) -> dict[str, DataFrame]:
     """Decompose nested plan documents into normalized tables.
 

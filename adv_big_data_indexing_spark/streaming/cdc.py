@@ -21,8 +21,8 @@ Spark-first replacement (SURVEY.md §3.1):
 
 Document indexer (``run_document_indexer``): each micro-batch is deduped
 to its latest record per key, validated and joined to the seq the entity
-store holds for that key, once; the result is persisted for the batch
-and every write reads it. The merge replaces documents by root: a
+store holds for that key, once; the result is held until the batch
+ends and every write reads it. The merge replaces documents by root: a
 batch record (upsert or delete) is applied when its seq is at least the
 stored seq of its root, and then all stored fragments of that root go
 and the record's fragments (none for a delete) come in; a record older
@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
+
+from adv_big_data_indexing_spark.streaming.events import start_fold
 
 CDC_SCHEMA = T.StructType(
     [
@@ -102,29 +104,19 @@ def _replace_dir(df: DataFrame, path: str) -> None:
 def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     """Idempotent MERGE of one micro-batch into the parquet entity store.
 
-    Replay-safe by construction: (1) within-batch dedup keeps the max
-    seq per key; (2) the union with the current store re-resolves by
-    seq, so applying the same batch twice is a no-op (the reference
-    leans on ES upsert-by-_id for this, rabbitMq.ts:44-48).
+    Replay-safe by construction: one max-seq dedup per key over the
+    store ∪ the batch (the batch alone on the first batch), so applying
+    the same batch twice is a no-op (the reference leans on ES
+    upsert-by-_id for this, rabbitMq.ts:44-48).
     """
-    spark = batch.sparkSession
-    w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    from adv_big_data_indexing_spark.operators.mutate import upsert_last_writer
+
+    store = (
+        read_store(batch.sparkSession, store_dir)
+        if os.path.exists(store_dir)  # not the first batch
+        else batch.limit(0)
     )
-
-    merged = latest
-    if os.path.exists(store_dir):  # not the first batch
-        merged = (
-            read_store(spark, store_dir)
-            .unionByName(latest)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
+    merged = upsert_last_writer(store, batch, "key", "seq")
     _replace_dir(merged.filter(F.col("op") != "delete"), store_dir)
 
 
@@ -135,18 +127,19 @@ def run_indexer(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """OP-A12 consumer: the streaming index-maintenance job."""
-    stream = (
+    return start_fold(
+        _read_queue(spark, queue_dir),
+        lambda b, i: apply_cdc_batch(store_dir, b, i),
+        checkpoint_dir,
+    )
+
+
+def _read_queue(spark: SparkSession, queue_dir: str) -> DataFrame:
+    """The CDC queue directory as a stream of at most 16 files a batch."""
+    return (
         spark.readStream.schema(CDC_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .json(queue_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: apply_cdc_batch(store_dir, b, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -186,28 +179,16 @@ def run_document_indexer(
     reference's 10-step Redis→AMQP→poll→ES choreography
     (apiLogicForCRUD.ts:82-144) with one exactly-once pipeline.
     """
+    from adv_big_data_indexing_spark.operators.advanced import hold
 
     def process(batch: DataFrame, batch_id: int) -> None:
         store = None
         if os.path.exists(entities_dir):
             store = batch.sparkSession.read.schema(ENTITIES_SCHEMA).parquet(entities_dir)
-        staged = _stage_documents(batch, store, schema).persist()
-        try:
-            _apply_documents(staged, store, entities_dir, rejects_dir, reconstructed_dir)
-        finally:
-            staged.unpersist()
+        staged = hold(_stage_documents(batch, store, schema))
+        _apply_documents(staged, store, entities_dir, rejects_dir, reconstructed_dir)
 
-    stream = (
-        spark.readStream.schema(CDC_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(queue_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(_read_queue(spark, queue_dir), process, checkpoint_dir)
 
 
 def _stage_documents(batch: DataFrame, store: DataFrame | None, schema: dict) -> DataFrame:

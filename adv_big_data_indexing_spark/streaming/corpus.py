@@ -80,6 +80,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adv_big_data_indexing_spark.streaming import statelog
+from adv_big_data_indexing_spark.streaming.events import start_fold
 
 #: compact a set log's delta batches into its base once this many
 #: accumulate (same knob shape as events.SURVIVAL_COMPACT_FANIN).
@@ -180,6 +181,9 @@ def run_streaming_dedup_index(
     arrival order and chunking do not matter, so the accumulated pair
     set equals the full-corpus batch operator on the same documents.
     """
+    from pyspark import StorageLevel  # noqa: PLC0415
+
+    from adv_big_data_indexing_spark.operators.advanced import hold
     from adv_big_data_indexing_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         _banded,
@@ -191,19 +195,16 @@ def run_streaming_dedup_index(
     bands_log = os.path.join(state_dir, "bands")
     pairs_log = os.path.join(state_dir, "pairs")
 
-    from pyspark import StorageLevel  # noqa: PLC0415
-
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         # layout contracts stamped/verified before anything touches the
-        # logs (ADVICE r11): stored dk/bk values bake these constants
-        # in. data_cols catches a marker-less LEGACY dir (the r12
-        # band_key→bk rename) via a driver-side footer probe before the
-        # stamp can mislabel it (code-review r12). Verify-all-THEN-
-        # stamp-all, and the sigs probe requires dk too (satisfied by
-        # either a footer column or a dk= partition path segment), so a
-        # pre-r11 dk-less sigs dir raises instead of being stamped
-        # before the bands check can object (ADVICE r12).
+        # logs: stored dk/bk values bake these constants in. data_cols
+        # catches a marker-less LEGACY dir (string band keys instead of
+        # bk) via a driver-side footer probe before the stamp can
+        # mislabel it. Verify-all-THEN-stamp-all, and the sigs probe
+        # requires dk too (satisfied by either a footer column or a dk=
+        # partition path segment), so a dk-less sigs dir raises instead
+        # of being stamped before the bands check can object.
         statelog.check_layouts(
             [
                 (
@@ -214,32 +215,20 @@ def run_streaming_dedup_index(
                 (bands_log, "bands=bk64", {"doc_id", "band", "bk"}),
             ]
         )
-        banded_new, _carry = _banded(shingles_of(batch))
         # reused by the probe join, both verify sides and both appends;
-        # persist, NOT localCheckpoint: reuse is all that is needed
+        # held, NOT localCheckpointed: reuse is all that is needed
         # (_banded is deterministic md5 arithmetic, so a cache-miss
-        # recompute cannot diverge), unpersist() actually releases a
-        # persisted frame (it is a no-op on a checkpointed one), and
-        # DISK_ONLY keeps the batch-sized blocks out of the storage
-        # pool (the unroll-starvation class, r9 find #5)
-        banded_new = banded_new.persist(StorageLevel.DISK_ONLY)
-        # try/finally so a raise anywhere below cannot leak the
-        # DISK_ONLY blocks across foreachBatch retries (the funnel
-        # twin's ADVICE r10 leak class, fixed here preemptively)
-        persisted = [banded_new]
-        try:
-            _fold_body(spark, banded_new, batch_id, persisted)
-        finally:
-            for frame in persisted:
-                frame.unpersist()
-
-    def _fold_body(spark, banded_new, batch_id, persisted) -> None:
+        # recompute cannot diverge), and a held frame is released when
+        # the micro-batch ends, however the fold exits (start_fold).
+        # DISK_ONLY keeps the batch-sized blocks out of the storage pool,
+        # where an unroll would starve the tasks producing them
+        banded_new = hold(_banded(shingles_of(batch))[0], StorageLevel.DISK_ONLY)
         # array_sort: hs comes from collect_set, whose element ORDER is
         # nondeterministic — a replayed batch could otherwise append the
         # same doc's set in a different order, a row distinct() cannot
         # collapse, so the sigs log (and its compacted base) would grow
-        # duplicate doc_id rows across replays (ADVICE r9). Sorting
-        # makes replays byte-identical; every consumer is set-invariant.
+        # duplicate doc_id rows across replays. Sorting makes replays
+        # byte-identical; every consumer is set-invariant.
         sig_new = banded_new.filter(F.col("band") == 0).select(
             "doc_id", _dk(F.col("doc_id")).alias("dk"), F.array_sort("hs").alias("hs")
         )
@@ -263,7 +252,7 @@ def run_streaming_dedup_index(
             F.broadcast(batch_keys), ["band", "bk"], "left_semi"
         )
 
-        # opt-in bucket-degeneracy ceiling (ADVICE r11): honor the batch
+        # opt-in bucket-degeneracy ceiling: honor the batch
         # tier's spark.advbdi.maxLshBucket on the streaming probe view —
         # any colliding (band, bk) bucket above the ceiling RAISES with
         # the offending key (never a silent drop), the same
@@ -275,8 +264,7 @@ def run_streaming_dedup_index(
         # re-delivered doc (crash replay, duplicate ingest) appears in
         # BOTH bands_new and the indexed log, and a raw row count would
         # double-count it — spuriously tripping the ceiling on every
-        # restart and wedging a stream the batch tier would pass
-        # (code-review r12).
+        # restart and wedging a stream the batch tier would pass.
         ceiling = int(spark.conf.get("spark.advbdi.maxLshBucket", "0") or "0")
         if ceiling > 0:
             bsz = (
@@ -333,16 +321,14 @@ def run_streaming_dedup_index(
                 )
             )
 
-        cand = (
+        # reused by the bucket collect, both verify sides (via cand_ids)
+        # and the stats join — held, same rationale as banded_new above
+        cand = hold(
             id_pairs(probe_new, probe_prev, strict_lt=False)
             .unionByName(id_pairs(probe_new, probe_new, strict_lt=True))
-            .distinct()
-            # reused by the bucket collect, both verify sides (via
-            # cand_ids) and the stats join — persist, same rationale as
-            # banded_new above
-            .persist(StorageLevel.DISK_ONLY)
+            .distinct(),
+            StorageLevel.DISK_ONLY,
         )
-        persisted.append(cand)
         cand_ids = (
             cand.select(F.col("doc_a").alias("doc_id"))
             .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
@@ -371,7 +357,7 @@ def run_streaming_dedup_index(
                 F.col("dk").isin(cand_bks)
             )
             # broadcast the candidate ids only while they are genuinely
-            # small (ADVICE r11): under a degenerate bucket the set is
+            # small: under a degenerate bucket the set is
             # collision-sized, and forcing a broadcast there is driver
             # memory pressure — drop the hint and let AQE pick the join.
             sem_ids = (
@@ -443,12 +429,7 @@ def run_streaming_dedup_index(
                 sort_within=sortw,
             )
 
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(docs, fold, checkpoint_dir)
 
 
 def streaming_dedup_pairs(spark, state_dir: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """EXT streaming analytics on the events stream (SURVEY §2.H extension).
 
 The reference's streaming story is only the CDC queue; the engine adds
-real event-time processing — tumbling/sliding windows with watermarked
+real event-time processing — tumbling windows with watermarked
 late-data handling, session windows, and streaming dedup — all native
 Structured Streaming operators (no custom state unless semantics demand
 it). Batch-mode twins live in operators/timeseries.py and are what the
@@ -10,6 +10,8 @@ tests/test_streaming.py with a file source.
 """
 
 from __future__ import annotations
+
+import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,15 +43,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFra
         .groupBy(F.window("ts", "600 seconds").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum(dec("value")).cast("double").alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
-def sliding_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "600 seconds", "300 seconds").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
     )
 
 
@@ -354,11 +347,55 @@ def enrich_events(events: DataFrame, customer: DataFrame) -> DataFrame:
     return events.join(dim, "user_id", "left")
 
 
-# --- shared parquet state-store plumbing for foreachBatch folds -----------
+# --- shared micro-batch harness and parquet state-store plumbing ----------
 #
 # A plain-parquet state table is the DEMO harness (zero dependencies);
-# production deployments swap these three helpers for a transactional
+# production deployments swap the state helpers for a transactional
 # table format — the fold logic on top is format-agnostic.
+
+
+def start_fold(stream: DataFrame, fold, checkpoint_dir: str) -> "StreamingQuery":
+    """Start ``stream`` with ``fold(batch, batch_id)`` as its per-micro-
+    batch sink, checkpointed in ``checkpoint_dir``, over the input
+    available now.
+
+    Every frame the fold holds (``operators.advanced.hold``) is
+    released when its micro-batch ends, whether the fold returns or
+    raises: each batch's ``sparkSession`` is its own wrapper, so the
+    frames held under it are exactly that batch's."""
+    from adv_big_data_indexing_spark.operators.advanced import release_held  # noqa: PLC0415
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        try:
+            fold(batch, batch_id)
+        finally:
+            release_held(batch.sparkSession)
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _merge_state(prev, delta: DataFrame, keys: tuple[str, ...], value: str, combine) -> DataFrame:
+    """``delta`` folded into the state ``prev`` on ``keys``: a key on both
+    sides gets ``combine(prev value, delta value)``, a key on one side is
+    combined with 0. ``delta`` itself when there is no state yet."""
+    if prev is None:
+        return delta
+    return (
+        prev.select(*keys, F.col(value).alias("__prev"))
+        .join(delta.select(*keys, F.col(value).alias("__delta")), list(keys), "full_outer")
+        .select(
+            *keys,
+            combine(
+                F.coalesce(F.col("__prev"), F.lit(0)),
+                F.coalesce(F.col("__delta"), F.lit(0)),
+            ).alias(value),
+        )
+    )
 
 
 def _read_state(spark, path: str):
@@ -515,30 +552,10 @@ def run_streaming_cms(
             .groupBy("ri", "b")
             .agg(F.count("*").cast("bigint").alias("cnt"))
         )
-        if prev is not None:
-            merged = (
-                prev.drop("batch_id")
-                .withColumnRenamed("cnt", "prev_cnt")
-                .join(delta.withColumnRenamed("cnt", "delta_cnt"), ["ri", "b"], "full_outer")
-                .select(
-                    "ri",
-                    "b",
-                    (
-                        F.coalesce(F.col("prev_cnt"), F.lit(0))
-                        + F.coalesce(F.col("delta_cnt"), F.lit(0))
-                    ).alias("cnt"),
-                )
-            )
-        else:
-            merged = delta
+        merged = _merge_state(prev, delta, ("ri", "b"), "cnt", operator.add)
         _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(events, fold, checkpoint_dir)
 
 
 HOLT_OUTPUT = "user_id long, n_obs long, level_m long, trend_m long, forecast_m long"
@@ -1223,35 +1240,10 @@ def run_streaming_markov(
         delta = batch.groupBy("from_state", "to_state").agg(
             F.count("*").cast("bigint").alias("n")
         )
-        if prev is not None:
-            merged = (
-                prev.drop("batch_id")
-                .withColumnRenamed("n", "prev_n")
-                .join(
-                    delta.withColumnRenamed("n", "delta_n"),
-                    ["from_state", "to_state"],
-                    "full_outer",
-                )
-                .select(
-                    "from_state",
-                    "to_state",
-                    (
-                        F.coalesce(F.col("prev_n"), F.lit(0))
-                        + F.coalesce(F.col("delta_n"), F.lit(0))
-                    ).alias("n"),
-                )
-            )
-        else:
-            merged = delta
+        merged = _merge_state(prev, delta, ("from_state", "to_state"), "n", operator.add)
         _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
 
-    return (
-        markov_transition_deltas(events)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(markov_transition_deltas(events), fold, checkpoint_dir)
 
 
 def streaming_markov_result(spark, state_dir: str) -> DataFrame:
@@ -1437,185 +1429,6 @@ def funnel_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# streaming cohort retention (signed-delta maintenance, no lateness drops)
-# ---------------------------------------------------------------------------
-
-RETENTION_DELTA_OUTPUT = "cohort_day bigint, day_offset bigint, delta bigint"
-RETENTION_STATE = "cohort_day bigint, seen_days array<bigint>"
-
-_US_PER_DAY = 86_400_000_000
-
-
-def retention_cohort_deltas(events: DataFrame) -> DataFrame:
-    """Per-user SIGNED (cohort_day, day_offset, ±1) delta rows for the
-    cohort-retention rollup (batch twin: ``ts_retention_cohort``).
-
-    The stateful piece is the cohort assignment: a user's cohort is
-    their MINIMUM active day, so an out-of-order event from an EARLIER
-    day does not merely add a row — it shifts the user's cohort and
-    re-bases every previously-emitted day_offset. Instead of a lateness
-    drop contract, this operator is EXACT under any reordering: when a
-    batch changes a user's (cohort, seen-days) contribution set, it
-    emits retractions (delta −1) for rows that left the set and
-    assertions (+1) for rows that entered it; the additive fold
-    downstream (``run_streaming_retention``) nets them out. After any
-    drain, summed deltas equal the batch operator's distinct-user
-    counts exactly — no tolerance horizon, no dropped events, no
-    double-count on duplicate days (state keeps the distinct-day set).
-
-    State per user: cohort scalar + the distinct active-day array
-    (bounded by the stream's age in days). Deltas are emitted
-    UNFILTERED by offset — the ≤7 retention window is applied by the
-    result view, so a cohort shift that moves a day into or out of the
-    window stays exact."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
-
-    def update(key, pdf_iter, state):
-        if state.exists:
-            s = state.get
-            cohort_old = int(s[0])
-            seen_old = set(int(d) for d in s[1])
-        else:
-            cohort_old, seen_old = None, set()
-
-        days = set()
-        for pdf in pdf_iter:
-            if len(pdf):
-                us = pdf["ts"].to_numpy(dtype="datetime64[ns]").view("int64") // 1000
-                days.update(int(d) for d in np.unique(us // _US_PER_DAY))
-        new_days = days - seen_old
-
-        out = {"cohort_day": [], "day_offset": [], "delta": []}
-        if new_days:
-            seen_new = seen_old | new_days
-            cohort_new = min(seen_new) if cohort_old is None else min(
-                cohort_old, *new_days
-            )
-            old_contrib = {(cohort_old, d - cohort_old) for d in seen_old}
-            new_contrib = {(cohort_new, d - cohort_new) for d in seen_new}
-            for c, o in sorted(old_contrib - new_contrib):
-                out["cohort_day"].append(c)
-                out["day_offset"].append(o)
-                out["delta"].append(-1)
-            for c, o in sorted(new_contrib - old_contrib):
-                out["cohort_day"].append(c)
-                out["day_offset"].append(o)
-                out["delta"].append(1)
-            state.update((int(cohort_new), sorted(seen_new)))
-        yield pd.DataFrame(out)
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=RETENTION_DELTA_OUTPUT,
-        stateStructType=RETENTION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_streaming_retention(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    *,
-    allow_additive_demo: bool = False,
-) -> "StreamingQuery":
-    """Incremental maintenance of the (cohort_day, day_offset) active-user
-    counts — the additive-fold DEMO twin (VERDICT r10 item 4: explicit
-    opt-in required; the default raises and routes to the scale path).
-
-    The stateful stage emits signed deltas, this stage folds them
-    ADDITIVELY into a parquet state table with the exactly-once batch_id
-    guard of ``run_streaming_cms`` (a signed-delta merge is not
-    idempotent, so replays must skip). Counts stay exact under
-    out-of-order arrival because cohort shifts arrive as retraction/
-    assertion pairs — see retention_cohort_deltas.
-
-    Kept as the pedagogical contrast with the log-structured twin: this
-    shape needs per-user day-set state, retraction/assertion machinery,
-    a replay guard, AND a whole-table rewrite per micro-batch. The
-    head-to-head (BASELINE.md "Retention twins head-to-head") measured
-    it 3.3× slower at sf1 and DNF-in-budget at sf10 vs
-    ``run_streaming_retention_log`` (24.8 s), which computes the SAME
-    exact table from Θ(batch) semilattice appends with none of that
-    machinery — so a caller cannot land here without opting in."""
-    if not allow_additive_demo:
-        raise ValueError(
-            "run_streaming_retention is the additive-fold DEMO twin: it "
-            "rewrites the whole (cohort_day, day_offset) table every "
-            "micro-batch and did not finish the sf10 head-to-head in "
-            "budget (BASELINE.md 'Retention twins head-to-head' — log "
-            "twin 24.8 s at sf10, additive DNF; 3.3x slower at sf1). "
-            "Use run_streaming_retention_log + "
-            "streaming_retention_result (same exact counts, Θ(batch) "
-            "set-log appends, no replay guard needed), or pass "
-            "allow_additive_demo=True to study the retraction/assertion "
-            "machinery."
-        )
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # Materialize the stateful stage FIRST, unconditionally — the
-        # state-store commit protocol requires every partition of the
-        # applyInPandasWithState operator to execute per micro-batch;
-        # DISK_ONLY blocks for the data-sized frame (see
-        # run_streaming_markov).
-        from pyspark import StorageLevel
-
-        batch = batch.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        prev = _read_state(spark, state_dir)
-        if batch_id <= _applied_batch(prev):
-            return  # replay of an already-applied batch: skip the fold
-        delta = batch.groupBy("cohort_day", "day_offset").agg(
-            F.sum("delta").cast("bigint").alias("n")
-        )
-        if prev is not None:
-            merged = (
-                prev.drop("batch_id")
-                .withColumnRenamed("n", "prev_n")
-                .join(
-                    delta.withColumnRenamed("n", "delta_n"),
-                    ["cohort_day", "day_offset"],
-                    "full_outer",
-                )
-                .select(
-                    "cohort_day",
-                    "day_offset",
-                    (
-                        F.coalesce(F.col("prev_n"), F.lit(0))
-                        + F.coalesce(F.col("delta_n"), F.lit(0))
-                    ).alias("n"),
-                )
-            )
-        else:
-            merged = delta
-        _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
-
-    return (
-        retention_cohort_deltas(events)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_retention_result(spark, state_dir: str) -> DataFrame:
-    """The batch-comparable view of the maintained counts: retention
-    window ≤7 days, zero/negative-netted rows dropped (a fully-retracted
-    (cohort, offset) nets to 0, matching the batch operator's absence of
-    that row)."""
-    t = spark.read.parquet(state_dir).drop("batch_id")
-    return (
-        t.filter((F.col("day_offset") <= 7) & (F.col("n") > 0))
-        .select("cohort_day", "day_offset", F.col("n").alias("active_users"))
-    )
-
-
-# ---------------------------------------------------------------------------
 # streaming STL-style seasonal decomposition (incremental index maintenance)
 # ---------------------------------------------------------------------------
 
@@ -1673,6 +1486,7 @@ def run_streaming_seasonal(
 
     from pyspark.sql import functions as F
 
+    from adv_big_data_indexing_spark.operators.advanced import hold
     from adv_big_data_indexing_spark.operators.timeseries import (
         detrend_hourly,
         hour_bucket,
@@ -1705,55 +1519,39 @@ def run_streaming_seasonal(
         if prev_wm is not None:
             # event-granularity lateness (not rollup-row granularity)
             n_late = n_late_prev + batch.filter(hour <= prev_wm).count()
-            delta = hourly_series(batch.filter(hour > prev_wm))
-            merged = (
-                prev.select("event_type", "h", "x")
-                .withColumnRenamed("x", "px")
-                .join(delta.withColumnRenamed("x", "dx"),
-                      ["event_type", "h"], "full_outer")
-                .select(
-                    "event_type",
-                    "h",
-                    (
-                        F.coalesce(F.col("px"), F.lit(0))
-                        + F.coalesce(F.col("dx"), F.lit(0))
-                    ).cast("bigint").alias("x"),
-                )
+            merged = _merge_state(
+                prev,
+                hourly_series(batch.filter(hour > prev_wm)),
+                ("event_type", "h"),
+                "x",
+                lambda px, dx: (px + dx).cast("bigint"),
             )
         else:
             n_late = 0
             merged = hourly_series(batch)
-        merged = merged.persist()
-        try:
-            st2 = merged.agg(F.max("h").alias("mx")).collect()[0]
-            # idempotent dt append FIRST (see the replay-safety ordering)
-            if st2["mx"] is not None:
-                wm_h = int(st2["mx"]) - delay_hours
-                frozen = merged.filter(F.col("h") <= wm_h)
-                ready = detrend_hourly(frozen)
-                seen = _read_state(spark, dt_dir)
-                if seen is not None:
-                    ready = ready.join(
-                        seen.select("event_type", "h"),
-                        ["event_type", "h"],
-                        "left_anti",
-                    )
-                ready.coalesce(1).write.mode("append").parquet(dt_dir)
-            # THEN the exactly-once marker
-            _commit_state(
-                merged.withColumn("n_late", F.lit(n_late).cast("bigint"))
-                .withColumn("batch_id", F.lit(batch_id)),
-                hourly_dir,
-            )
-        finally:
-            merged.unpersist()
+        merged = hold(merged)
+        st2 = merged.agg(F.max("h").alias("mx")).collect()[0]
+        # idempotent dt append FIRST (see the replay-safety ordering)
+        if st2["mx"] is not None:
+            wm_h = int(st2["mx"]) - delay_hours
+            frozen = merged.filter(F.col("h") <= wm_h)
+            ready = detrend_hourly(frozen)
+            seen = _read_state(spark, dt_dir)
+            if seen is not None:
+                ready = ready.join(
+                    seen.select("event_type", "h"),
+                    ["event_type", "h"],
+                    "left_anti",
+                )
+            ready.coalesce(1).write.mode("append").parquet(dt_dir)
+        # THEN the exactly-once marker
+        _commit_state(
+            merged.withColumn("n_late", F.lit(n_late).cast("bigint"))
+            .withColumn("batch_id", F.lit(batch_id)),
+            hourly_dir,
+        )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(events, fold, checkpoint_dir)
 
 
 def streaming_seasonal_result(
@@ -1808,10 +1606,8 @@ def run_streaming_hll(
     at-least-once redelivery — even a whole-stream replay from batch 0
     against warm state — converges to the identical registers with NO
     exactly-once machinery at all. Contrast ``run_streaming_cms``
-    (additive merge, needs the batch_id guard) and
-    ``run_streaming_retention`` (signed deltas, needs the guard plus
-    retraction pairs). ``batch_id`` is kept on the state table as
-    provenance only; the fold never reads it. State is ≤ m rows per
+    (additive merge, needs the batch_id guard). ``batch_id`` is kept on
+    the state table as provenance only; the fold never reads it. State is ≤ m rows per
     group forever, and the per-batch update is one map-side-combined
     aggregate of the batch — live cardinality dashboards over a
     100 TB/day stream without re-scanning history.
@@ -1842,33 +1638,10 @@ def run_streaming_hll(
             .groupBy("g", "bucket")
             .agg(F.max("rho").alias("mj"))
         )
-        if prev is not None:
-            merged = (
-                prev.select("g", "bucket", F.col("mj").alias("prev_mj"))
-                .join(
-                    delta.withColumnRenamed("mj", "delta_mj"),
-                    ["g", "bucket"],
-                    "full_outer",
-                )
-                .select(
-                    "g",
-                    "bucket",
-                    F.greatest(
-                        F.coalesce(F.col("prev_mj"), F.lit(0)),
-                        F.coalesce(F.col("delta_mj"), F.lit(0)),
-                    ).alias("mj"),
-                )
-            )
-        else:
-            merged = delta
+        merged = _merge_state(prev, delta, ("g", "bucket"), "mj", F.greatest)
         _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(events, fold, checkpoint_dir)
 
 
 def streaming_hll_result(spark, state_dir: str) -> DataFrame:
@@ -1952,10 +1725,10 @@ def run_streaming_survival(
     zero exactly-once machinery: a replayed batch re-appends DUPLICATE
     delta rows, and duplicate rows cannot change a max; a crash
     between the base commit and the delta-log reset leaves absorbed
-    deltas in the log, which re-absorb harmlessly. The guarded additive folds (CMS, retention, Markov)
-    could not append-without-guard this way — a duplicate delta file
-    would double-count; their single-table guarded commit IS their
-    correctness.
+    deltas in the log, which re-absorb harmlessly. The guarded additive
+    folds (CMS, Markov, seasonal) could not append-without-guard this
+    way — a duplicate delta file would double-count; their single-table
+    guarded commit IS their correctness.
     """
     from adv_big_data_indexing_spark.functions.exact import epoch_us
     from adv_big_data_indexing_spark.streaming import statelog
@@ -1982,12 +1755,7 @@ def run_streaming_survival(
             if merged is not None:
                 statelog.compact(spark, state_dir, merged, batch_id)
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(events, fold, checkpoint_dir)
 
 
 def streaming_survival_result(spark, state_dir: str) -> DataFrame:
@@ -2232,6 +2000,7 @@ def run_streaming_funnel(
     from pyspark import StorageLevel
 
     from adv_big_data_indexing_spark.functions.exact import epoch_us
+    from adv_big_data_indexing_spark.operators.advanced import hold
     from adv_big_data_indexing_spark.streaming import statelog
 
     delay_us = int(delay_sec) * 1_000_000
@@ -2245,9 +2014,9 @@ def run_streaming_funnel(
             epoch_us(F.col("ts")).alias("us"),
         )
         # frontier probe WITHOUT the set-log distinct: max() is the
-        # merge and is duplicate-insensitive, so the distinct's extra
-        # Θ(users) shuffle on this hot per-batch path buys nothing
-        # (code-review r10); the kind filter partition-prunes the base
+        # merge and is duplicate-insensitive, so a distinct would add a
+        # Θ(users) shuffle to the per-batch path and change nothing; the
+        # kind filter partition-prunes the base
         parts = statelog.read_parts(spark, state_dir)
         if parts:
             u = parts[0]
@@ -2260,18 +2029,9 @@ def run_streaming_funnel(
             )
         else:
             prev_hi = spark.createDataFrame([], "user_id bigint, prev_hi bigint")
-        ev = ev.join(prev_hi, "user_id", "left").persist(
-            StorageLevel.DISK_ONLY
-        )
-        # try/finally so a raise in append_delta/compaction cannot leak
-        # the DISK_ONLY blocks across foreachBatch retries (ADVICE r10;
-        # same leak class as consistent_materialize's r9 fix)
-        try:
-            _fold_body(ev, batch_id, spark)
-        finally:
-            ev.unpersist()
-
-    def _fold_body(ev: DataFrame, batch_id: int, spark) -> None:
+        # read by the late/accepted splits and the h-row aggregate;
+        # released when the micro-batch ends (start_fold)
+        ev = hold(ev.join(prev_hi, "user_id", "left"), StorageLevel.DISK_ONLY)
         late = ev.filter(
             F.col("prev_hi").isNotNull()
             & (F.col("us") < F.col("prev_hi") - F.lit(delay_us))
@@ -2340,8 +2100,8 @@ def run_streaming_funnel(
         )
         statelog.append_delta(delta, state_dir, batch_id)
         # trigger + the zero-row partitioned-commit guard live in
-        # statelog.maybe_compact (code-review r11 dedup). Base
-        # partitioned by kind: the per-batch frontier probe filters
+        # statelog.maybe_compact. Base partitioned by kind: the
+        # per-batch frontier probe filters
         # kind = 'h', so it partition-prunes to the h directory however
         # large the candidate partitions grow. No repartition: kind has
         # ~4 values — shuffling onto it would serialize the data-sized
@@ -2355,12 +2115,7 @@ def run_streaming_funnel(
             partition_by="kind",
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(events, fold, checkpoint_dir)
 
 
 def streaming_funnel_result(spark, state_dir: str) -> DataFrame:
@@ -2399,8 +2154,7 @@ def streaming_funnel_late(spark, state_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# streaming cohort-retention maintenance (the funnel's sibling twin —
-# VERDICT r9 item 3's named follow-up candidate)
+# streaming cohort-retention maintenance (the funnel's sibling twin)
 # ---------------------------------------------------------------------------
 
 RETENTION_COMPACT_FANIN = 8
@@ -2439,15 +2193,14 @@ def run_streaming_retention_log(
     checkpoint_dir: str,
     compact_fanin: int = RETENTION_COMPACT_FANIN,
 ) -> "StreamingQuery":
-    """Streaming cohort-retention maintenance, LOG-STRUCTURED — the
-    second retention twin, coexisting with ``run_streaming_retention``
-    (retraction/assertion deltas + guarded additive fold) as the
-    Θ(batch)-write alternative: the additive fold rewrites its whole
-    (cohort, offset) table per micro-batch and needs per-user
-    applyInPandasWithState plus a batch-id replay guard, while this
-    shape appends Θ(batch) set-log rows, needs NO retraction machinery
-    and NO exactly-once guard, and derives the table at read time —
-    the survival/funnel discipline. The funnel twin's sibling, with a
+    """Streaming cohort-retention maintenance, LOG-STRUCTURED: Θ(batch)
+    set-log appends, NO retraction machinery and NO exactly-once guard,
+    and the table derived at read time — the survival/funnel
+    discipline. (An additive twin — per-user applyInPandasWithState
+    retraction/assertion deltas folded into a guarded (cohort, offset)
+    table rewritten every micro-batch — measured 3.3× slower at sf1 and
+    did not finish sf10 in budget, BASELINE.md "Retention twins
+    head-to-head"; it was deleted.) The funnel twin's sibling, with a
     STRICTLY SHRINKING retention window instead of down-moving
     thresholds: a user's cohort day is the min active day,
     and a late event can only move it EARLIER, which makes every other
@@ -2468,7 +2221,7 @@ def run_streaming_retention_log(
       day, so they are never emitted at all — the batch-local window
       is already the conservative superset).
 
-    The read side (``streaming_retention_result``) is the batch
+    The read side (``streaming_retention_log_result``) is the batch
     ``ts_retention_cohort``'s own expressions over the merged state:
     cohort = min f, offsets = d days with day − cohort ≤ 7, distinct
     users per (cohort_day, day_offset).
@@ -2478,8 +2231,8 @@ def run_streaming_retention_log(
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        # layout contract (ADVICE r11 class): the stored d-rows are
-        # PRUNED at RETENTION_MAX_OFFSET, so resuming with a WIDER
+        # layout contract: the stored d-rows are PRUNED at
+        # RETENTION_MAX_OFFSET, so resuming with a WIDER
         # window over an existing state dir would read pruned-away days
         # as absent — silently wrong retention counts. Stamp + verify.
         statelog.check_layout(
@@ -2520,18 +2273,13 @@ def run_streaming_retention_log(
             ).unionByName(keep_d)
 
         # shared trigger + zero-row partitioned-commit guard
-        # (statelog.maybe_compact; code-review r11 dedup)
+        # (statelog.maybe_compact)
         statelog.maybe_compact(
             spark, state_dir, merged_retention, batch_id, compact_fanin,
             partition_by="kind",
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(events, fold, checkpoint_dir)
 
 
 def streaming_retention_log_result(spark, state_dir: str) -> DataFrame:

@@ -52,7 +52,6 @@ SLOW_TESTS = {
     "tests/test_streaming_corpus.py::test_sigs_base_bucketed_layout_and_torn_compaction",  # 21 s
     "tests/test_streaming.py::test_streaming_rate_flags_match_batch",  # 19 s
     "tests/test_streaming.py::test_streaming_markov_matches_batch",  # 17 s
-    "tests/test_streaming.py::test_streaming_retention_matches_batch",  # 17 s
     "tests/test_streaming.py::test_streaming_funnel_own_batch_max_never_drops",  # 17 s
     "tests/test_streaming_corpus.py::test_streaming_dedup_index_survives_empty_batches",  # 16 s
     "tests/test_streaming.py::test_streaming_funnel_matches_batch",  # 16 s

@@ -448,8 +448,6 @@ CLASSIFIED_FOLD_LOOPS = {
     # chain advance over DISTINCT buckets + gap emits (the emits ARE
     # the operator's output rows), incl. the pre-first prefix flush
     ("streaming/events.py", "locf_monitor"),
-    # set differences over distinct active DAYS (state-sized, day-granular)
-    ("streaming/events.py", "retention_cohort_deltas"),
 }
 
 

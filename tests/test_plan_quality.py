@@ -279,14 +279,23 @@ def test_rank_id_split_lives_only_in_ordered_rank():
     assert owners == {("operators/advanced.py", "ordered_rank")}, sites
 
 
-def test_persists_outside_streaming_live_only_in_hold():
-    """Outside streaming/ (whose persists are scoped to one micro-batch by
-    try/finally) every persist goes through hold, so one lifetime rule —
-    released when the session's next query build starts — covers them
-    all, and no operator keeps a registry of its own."""
+def test_persists_live_only_in_hold():
+    """Every persist in the package goes through hold, so one lifetime
+    rule covers them all — a held frame lives until the end of the work
+    that held it: the session's next query build, or the end of the
+    micro-batch for a streaming fold — and no operator keeps a registry
+    or a try/finally of its own."""
     sites = _package_sites(lambda line: ".persist(" in line or ".cache()" in line)
-    owners = {(rel, fn) for rel, fn, _ in sites if not rel.startswith("streaming/")}
+    owners = {(rel, fn) for rel, fn, _ in sites}
     assert owners == {("operators/advanced.py", "hold")}, sites
+
+
+def test_streams_start_only_in_start_fold():
+    """Every streaming fold starts through start_fold, the one place that
+    releases a micro-batch's held frames when the batch ends."""
+    sites = _package_sites(lambda line: ".foreachBatch(" in line)
+    owners = {(rel, fn) for rel, fn, _ in sites}
+    assert owners == {("streaming/events.py", "start_fold")}, sites
 
 
 def test_preference_pairs_pooled_topk_single_pass(spark):

@@ -140,6 +140,42 @@ def test_streaming_dedup(spark, event_stream_dir):
     assert sorted(ids) == sorted(set(ids)) == list(range(30))
 
 
+@pytest.mark.parametrize("fails", [False, True], ids=["returns", "raises"])
+def test_start_fold_releases_held_frames_when_the_batch_ends(
+    spark, event_stream_dir, tmp_path, fails
+):
+    """A frame a fold holds lives until the end of its micro-batch:
+    start_fold releases it after the fold returns and after it raises,
+    so a failed batch leaves no cached blocks and no registry entry."""
+    from pyspark.storagelevel import StorageLevel
+
+    from adv_big_data_indexing_spark.operators import advanced as adv
+
+    path, batch_df = event_stream_dir
+    seen = []
+
+    def fold(batch, batch_id):
+        frame = adv.hold(batch.groupBy("user_id").count(), StorageLevel.DISK_ONLY)
+        frame.count()
+        seen.append((batch.sparkSession, frame, frame.storageLevel))
+        if fails:
+            raise RuntimeError("fold failed after holding a frame")
+
+    q = ev.start_fold(
+        spark.readStream.schema(batch_df.schema).parquet(path), fold, str(tmp_path / "ck")
+    )
+    if fails:
+        with pytest.raises(Exception, match="fold failed after holding a frame"):
+            q.awaitTermination(120)
+    else:
+        q.awaitTermination(120)
+        assert q.exception() is None
+    ((session, frame, level_in_fold),) = seen
+    assert level_in_fold == StorageLevel.DISK_ONLY
+    assert frame.storageLevel == StorageLevel.NONE
+    assert session not in adv._held
+
+
 def test_streaming_sessions(spark, event_stream_dir):
     path, batch_df = event_stream_dir
     stream = spark.readStream.schema(batch_df.schema).parquet(path)
@@ -1455,100 +1491,6 @@ def test_streaming_markov_matches_batch(spark, tmp_path):
     q2.awaitTermination(120)
     # same batch_ids re-delivered under the new checkpoint: every fold
     # call sees batch_id <= applied max and skips — counts unchanged
-    assert sorted(map(tuple, spark.read.parquet(state).collect())) == applied
-
-
-def test_streaming_retention_matches_batch(spark, tmp_path):
-    """Bonus r9 twin: the signed-delta cohort-retention fold must equal
-    the batch ts_retention_cohort after drain — INCLUDING a cohort
-    shift: an out-of-order event from an EARLIER day re-bases every
-    offset the user already contributed (emitted as retraction/
-    assertion pairs, netted by the additive fold — no lateness drops).
-    A replayed fold must not double-apply deltas."""
-    import time
-
-    rows = [
-        # user 1: days 10, 11 first; day 8 arrives LATE -> cohort shifts
-        # from day-10 to day-8 (offsets 0,1 retract; 0,2,3 assert)
-        (1, "2024-01-10 09:00:00", 1, "click", 0.0),
-        (2, "2024-01-11 09:00:00", 1, "view", 0.0),
-        (3, "2024-01-08 23:00:00", 1, "click", 0.0),
-        # user 2: no shift, spans batches
-        (10, "2024-01-10 10:00:00", 2, "click", 0.0),
-        (11, "2024-01-12 10:00:00", 2, "view", 0.0),
-        # user 3: duplicate day (no double count) + a day past the
-        # 7-day window (kept in state, excluded by the result view)
-        (20, "2024-01-10 08:00:00", 3, "click", 0.0),
-        (21, "2024-01-10 20:00:00", 3, "view", 0.0),
-        (22, "2024-01-25 08:00:00", 3, "click", 0.0),
-    ]
-
-    def mk(rs):
-        return spark.createDataFrame(
-            rs,
-            "event_id long, ts_s string, user_id long, event_type string, value double",
-        ).select(
-            "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-            "user_id", "event_type", "value",
-        )
-
-    src = str(tmp_path / "ret_src")
-    state = str(tmp_path / "ret_state")
-    ck = str(tmp_path / "ret_ck")
-    batches = [
-        [r for r in rows if r[0] in (1, 2, 10, 20)],
-        [r for r in rows if r[0] in (3, 21)],
-        [r for r in rows if r[0] in (11, 22)],
-    ]
-    for b in batches:
-        mk(b).coalesce(1).write.mode("append").parquet(src)
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(mk(rows).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    # the additive twin is the explicit-opt-in DEMO (VERDICT r10 item 4)
-    import pytest as _pt
-    with _pt.raises(ValueError, match="run_streaming_retention_log"):
-        ev.run_streaming_retention(stream, state, ck)
-    q = ev.run_streaming_retention(stream, state, ck, allow_additive_demo=True)
-    q.awaitTermination(120)
-
-    got = {
-        (r.cohort_day, r.day_offset): r.active_users
-        for r in ev.streaming_retention_result(spark, state).collect()
-    }
-
-    from adv_big_data_indexing_spark.contract import registry
-
-    bdir = str(tmp_path / "ret_batch")
-    mk(rows).withColumn("props", F.lit("{}")).coalesce(1).write.parquet(
-        bdir + "/events.parquet"
-    )
-    exp = {
-        (r.cohort_day, r.day_offset): r.active_users
-        for r in registry()["ts_retention_cohort"].fn(spark, bdir).collect()
-    }
-    assert got == exp
-    # the shift really happened: user 1 counts under day-8 cohort only
-    import datetime
-
-    day8 = (datetime.date(2024, 1, 8) - datetime.date(1970, 1, 1)).days
-    assert got[(day8, 2)] >= 1 and (day8 + 2, 1) not in got
-
-    # replay from a fresh checkpoint: signed-delta fold must skip
-    # already-applied batch ids — netted counts unchanged
-    applied = sorted(map(tuple, spark.read.parquet(state).collect()))
-    q2 = ev.run_streaming_retention(
-        spark.readStream.schema(mk(rows).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src),
-        state,
-        str(tmp_path / "ret_ck2"),
-        allow_additive_demo=True,
-    )
-    q2.awaitTermination(120)
     assert sorted(map(tuple, spark.read.parquet(state).collect())) == applied
 
 

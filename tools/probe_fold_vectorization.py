@@ -180,9 +180,6 @@ def main() -> None:
     def rate(m, ch):
         m.rate_flag_monitor(ch, delay_sec=3600)
 
-    def retention(m, ch):
-        m.retention_cohort_deltas(ch)
-
     _compare("anomaly_zscores", cap(old, anomaly), cap(new, anomaly), b_num)
     _compare("cusum_alarms", cap(old, cusum), cap(new, cusum), b_num)
     _compare("locf_monitor", cap(old, locf), cap(new, locf), b_num)
@@ -191,9 +188,6 @@ def main() -> None:
     )
     _compare("funnel_monitor", cap(old, funnel), cap(new, funnel), b_typ)
     _compare("rate_flag_monitor", cap(old, rate), cap(new, rate), b_num)
-    _compare(
-        "retention_cohort_deltas", cap(old, retention), cap(new, retention), b_num
-    )
     # lttb buffers only (timeout path needs a real watermark clock):
     # two buffering batches, compare carried state arrays. Its OUTER
     # function calls F.expr at build time, which needs a live
