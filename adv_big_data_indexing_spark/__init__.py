@@ -3,7 +3,7 @@
 A brand-new engine with the query and data-processing capabilities of the
 reference (paurush11/Adv-Big-Data-Indexing, surveyed in SURVEY.md): a
 schema-validated JSON document store with shredding/reconstruction,
-parent-child semi-join search, merge-patch mutation, write-behind streaming
+parent-child search, merge-patch mutation, write-behind streaming
 index maintenance — rebuilt Spark-first on DataFrames, Catalyst, and
 Structured Streaming — plus a full relational operator set and
 training-data-pipeline operators (dedup, similarity search, text analysis,

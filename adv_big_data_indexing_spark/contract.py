@@ -18,6 +18,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from adv_big_data_indexing_spark.lifetime import release_held
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -46,16 +48,13 @@ def query(
     """Decorator: register a (spark, sf_dir) -> DataFrame query.
 
     The registered ``fn`` first releases the frames the session's
-    previous build held (``operators.advanced.hold``), then builds. The
+    previous build held (``lifetime.hold``), then builds. The
     decorator returns the raw function, so a query composing another
     inside the package releases nothing in the middle of its own build."""
 
     def wrap(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # deferred: operators.advanced imports this module
-            from adv_big_data_indexing_spark.operators.advanced import release_held  # noqa: PLC0415
-
             release_held(spark)
             return fn(spark, sf_dir)
 

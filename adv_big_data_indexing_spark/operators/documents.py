@@ -180,7 +180,8 @@ def doc_roundtrip_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="OP-C2 has_child over the real document tables, oracle-checked: "
     "plans having a planservice whose linkedService.name matches — the "
     "/allParentsHaving route (apiLogicForSearch.ts:245-294) end-to-end "
-    "through shred() + the param→predicate translator + semi-joins.",
+    "through shred() + the param→predicate translator, evaluated per "
+    "document over its own child rows (one scan, no join).",
 )
 def doc_parents_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     from adv_big_data_indexing_spark.operators.search import parents_having
@@ -265,7 +266,7 @@ def doc_etag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN matching m ON c.c_custkey = m.c_custkey
     JOIN orders o ON o.o_custkey = c.c_custkey
     """,
-    doc="OP-C6 fan-out hit rehydration: search hits (has_child semi-join) "
+    doc="OP-C6 fan-out hit rehydration: search hits (has_child) "
     "joined back to the reconstructed nested view and re-flattened — the "
     "reference reconstructs per hit in a loop (apiLogicForSearch.ts:280-286); "
     "here it is one set-oriented join against the reconstruct view.",

@@ -1,6 +1,6 @@
 """The search API over shredded document tables (OP-B*, OP-C2-C4, OP-D,
 OP-A5/A13) — the reference's three search routes plus introspection,
-re-expressed as semi-joins.
+each answered per document, in place.
 
 Reference surface (src/utils/apiLogicForSearch.ts):
 - /search/plans — conjunctive exact-match on top-level plan fields
@@ -14,23 +14,35 @@ Reference surface (src/utils/apiLogicForSearch.ts):
 - match_all with the fixed size:1000 cap (elasticSearch.ts:209),
   mapping introspection (:301-310).
 
-Scale: all predicates are Columns (pushed to parquet); semi-joins keep
-only the output side flowing; child tables pre-partitioned by
-parent_key make the joins co-partitioned (the ES routing trick).
+Read rule: a child belongs to the document it is nested in. has_child
+tests each document's own child rows (``shred.child_rows``) in place
+with ``exists``; has_parent filters the documents, then explodes only
+the matching ones into child rows. Neither joins, so each read is one
+scan of the documents. This is the index the reference keeps by
+routing every child to its parent (the ES join field): here the
+nesting itself pairs each child with its parent. While objectIds are
+unique (the reference's ``objectType_objectId`` keyspace invariant) it
+is also the answer of joining children to parents by key; where an
+objectId repeats, only the rule above holds.
+
+Scale: the plan-field predicates are Columns over the scan (pushed to
+parquet); the child predicates are evaluated per document, so no
+exchange, broadcast or second scan is planned.
 """
 
 from __future__ import annotations
 
 from typing import Any, Mapping
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adv_big_data_indexing_spark.operators.shred import Shredded
 from adv_big_data_indexing_spark.plans.predicate import compile_params
 
 FULL_SCAN_CAP = 1000  # elasticSearch.ts:209
 
-#: child type name → (table key, parent level). Mirrors the ES join
+#: child type name → the table its rows are in. Mirrors the ES join
 #: mapping's type vocabulary (elasticSearch.ts:156-165).
 CHILD_TABLES = {
     "plan_membercostshare": "membercostshares",
@@ -40,7 +52,7 @@ CHILD_TABLES = {
 }
 
 
-def search_plans(tables: Mapping[str, DataFrame], params: Mapping[str, Any]) -> DataFrame:
+def search_plans(tables: Shredded, params: Mapping[str, Any]) -> DataFrame:
     """OP-B1: conjunctive exact-match over top-level plan fields only."""
     return tables["plans"].filter(compile_params(params))
 
@@ -60,74 +72,49 @@ def get_mapping(tables: Mapping[str, DataFrame]) -> dict[str, str]:
     return {name: df.schema.json() for name, df in tables.items()}
 
 
+def _fields_of(row: Column):
+    """The resolver that reads a param's field from the struct ``row``:
+    a field the row lacks fails analysis, as a missing column does."""
+    return lambda name: row[name]
+
+
 def parents_having(
-    tables: Mapping[str, DataFrame],
+    tables: Shredded,
     child_type: str,
     params: Mapping[str, Any],
 ) -> DataFrame:
     """OP-C2: plans having ≥1 ``child_type`` child matching ``params``
-    (the /allParentsHaving route, apiLogicForSearch.ts:245-294)."""
-    tbl = tables[CHILD_TABLES[child_type]]
-    child = tbl.filter(F.col("rel_name") == child_type) if "rel_name" in tbl.columns else tbl
-    matching = child.filter(compile_params(params))
-    if child_type.startswith("planservice_"):
-        # grandchild → hop through planservices to the plan
-        ps = tables["planservices"]
-        ps_keys = ps.join(
-            matching.select(F.col("parent_key").alias("mk")),
-            ps.id == F.col("mk"),
-            "left_semi",
-        )
-        plan_keys = ps_keys.select(F.col("parent_key").alias("plan_key"))
-    else:
-        plan_keys = matching.select(F.col("parent_key").alias("plan_key"))
-    plans = tables["plans"]
-    return plans.join(plan_keys, plans.id == plan_keys.plan_key, "left_semi")
+    (the /allParentsHaving route, apiLogicForSearch.ts:245-294): the
+    ``plans`` rows of the documents one of whose own ``child_type``
+    rows matches."""
+    table = CHILD_TABLES[child_type]
+
+    def hit(r: Column) -> Column:
+        match = compile_params(params, _fields_of(r))
+        return match if table == "planservices" else match & (r["rel_name"] == child_type)
+
+    return tables.where(F.exists(tables.rows(table), hit))["plans"]
 
 
-def parents_by_copay(
-    tables: Mapping[str, DataFrame], less_than: bool, value: float
-) -> DataFrame:
-    """OP-C3: /allChildrenHavingCopayLessOrGreater — plans whose costshare
-    child has copay strictly < / > value (strict per the DSL,
-    apiLogicForSearch.ts:201,216)."""
+def parents_by_copay(tables: Shredded, less_than: bool, value: float) -> DataFrame:
+    """OP-C3: /allChildrenHavingCopayLessOrGreater — plans with a
+    costshare, plan-level or planservice-level, whose copay is strictly
+    < / > value (strict per the DSL, apiLogicForSearch.ts:201,216)."""
     op = {"copay": {"lt": value}} if less_than else {"copay": {"gt": value}}
-    cs = tables["membercostshares"].filter(compile_params(op))
-    # both plan-level and planservice-level costshares count; climb each.
-    direct = cs.filter(F.col("rel_name") == "plan_membercostshare").select(
-        F.col("parent_key").alias("plan_key")
-    )
-    ps = tables["planservices"]
-    via_ps = (
-        ps.join(
-            cs.filter(F.col("rel_name") == "planservice_membercostshare")
-            .select(F.col("parent_key").alias("mk")),
-            ps.id == F.col("mk"),
-            "left_semi",
-        )
-        .select(F.col("parent_key").alias("plan_key"))
-    )
-    # a left-semi join ignores duplicate keys: no distinct() needed
-    keys = direct.unionByName(via_ps)
-    plans = tables["plans"]
-    return plans.join(keys, plans.id == keys.plan_key, "left_semi")
+    hit = F.exists(tables.rows("membercostshares"), lambda r: compile_params(op, _fields_of(r)))
+    return tables.where(hit)["plans"]
 
 
 def children_of_matching_parents(
-    tables: Mapping[str, DataFrame],
+    tables: Shredded,
     child_table: str,
     parent_params: Mapping[str, Any],
 ) -> DataFrame:
-    """OP-C4 has_parent — children whose root plan matches ``params``.
-    The reference's two attempts are both labeled 'Failed Query'
-    (apiLogicForSearch.ts:123-162); shipped working here."""
-    plans = tables["plans"].filter(compile_params(parent_params))
-    child = tables[child_table]
-    if child_table == "planservices":
-        return child.join(plans, child.parent_key == plans.id, "left_semi")
-    # grandchild tables: parent may be the plan itself or a planservice of it
-    ps = tables["planservices"]
-    ps_of_plan = ps.join(plans, ps.parent_key == plans.id, "left_semi")
-    direct = child.join(plans, child.parent_key == plans.id, "left_semi")
-    via_ps = child.join(ps_of_plan, child.parent_key == ps_of_plan.id, "left_semi")
-    return direct.unionByName(via_ps).distinct()
+    """OP-C4 has_parent — the ``child_table`` rows of the documents whose
+    plan matches ``parent_params``: exactly the rows ``shred`` gives that
+    table for the matching documents. A grandchild's parent chain ends
+    at the plan it is nested in. The reference's two attempts are both
+    labeled 'Failed Query' (apiLogicForSearch.ts:123-162); shipped
+    working here."""
+    match = compile_params(parent_params, _fields_of(tables.rows("plans")))
+    return tables.where(match)[child_table]

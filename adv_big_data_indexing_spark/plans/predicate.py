@@ -14,7 +14,7 @@ lt/gt (strict), lte/gte (the README's prose variant), conjunction.
 
 from __future__ import annotations
 
-from typing import Any, Mapping
+from typing import Any, Callable, Mapping
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,23 +27,25 @@ _RANGE_OPS = {
 }
 
 
-def compile_params(params: Mapping[str, Any]) -> Column:
-    """AND-of-clauses predicate from a param dict.
+def compile_params(params: Mapping[str, Any], col: Callable[[str], Column] = F.col) -> Column:
+    """AND-of-clauses predicate from a param dict. ``col`` resolves a
+    field name to the Column it tests: a column of the frame by default,
+    or, e.g., a field of a struct (a child row inside a lambda).
 
     >>> compile_params({"planType": "inNetwork", "copay": {"lt": 100}})
     Column<...(planType = inNetwork) AND (copay < 100)...>
     """
     clauses: list[Column] = []
     for field, value in params.items():
-        col = F.col(field)
+        c = col(field)
         if isinstance(value, Mapping):
             for op, v in value.items():
                 try:
-                    clauses.append(_RANGE_OPS[op](col, F.lit(v)))
+                    clauses.append(_RANGE_OPS[op](c, F.lit(v)))
                 except KeyError:
                     raise ValueError(f"unsupported range op {op!r} (have {sorted(_RANGE_OPS)})")
         else:
-            clauses.append(col == F.lit(value))
+            clauses.append(c == F.lit(value))
     if not clauses:
         return F.lit(True)
     out = clauses[0]

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from adv_big_data_indexing_spark.operators.advanced import hold
+from adv_big_data_indexing_spark.lifetime import hold
 
 
 def read_json_documents(

@@ -49,9 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.window import Window
 
-from adv_big_data_indexing_spark.streaming.events import start_fold
+from adv_big_data_indexing_spark.lifetime import hold, start_fold
 
 CDC_SCHEMA = T.StructType(
     [
@@ -179,8 +178,6 @@ def run_document_indexer(
     reference's 10-step Redis→AMQP→poll→ES choreography
     (apiLogicForCRUD.ts:82-144) with one exactly-once pipeline.
     """
-    from adv_big_data_indexing_spark.operators.advanced import hold
-
     def process(batch: DataFrame, batch_id: int) -> None:
         store = None
         if os.path.exists(entities_dir):
@@ -195,13 +192,11 @@ def _stage_documents(batch: DataFrame, store: DataFrame | None, schema: dict) ->
     """The latest record per key of one batch, validated: ``kind`` is
     upsert, delete or reject; ``applied`` says whether the record is new
     enough (seq at least the stored seq of its root) to change the stores."""
+    from adv_big_data_indexing_spark.operators.mutate import upsert_last_writer
     from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
 
-    w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("key", "op", "seq", F.col("doc").alias("raw"))
+    latest = upsert_last_writer(batch.limit(0), batch, "key", "seq").select(
+        "key", "op", "seq", F.col("doc").alias("raw")
     )
     staged = validate(latest, schema)
     if store is not None:

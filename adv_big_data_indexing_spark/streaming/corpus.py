@@ -80,7 +80,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adv_big_data_indexing_spark.streaming import statelog
-from adv_big_data_indexing_spark.streaming.events import start_fold
+from adv_big_data_indexing_spark.lifetime import hold, start_fold
 
 #: compact a set log's delta batches into its base once this many
 #: accumulate (same knob shape as events.SURVIVAL_COMPACT_FANIN).
@@ -183,7 +183,6 @@ def run_streaming_dedup_index(
     """
     from pyspark import StorageLevel  # noqa: PLC0415
 
-    from adv_big_data_indexing_spark.operators.advanced import hold
     from adv_big_data_indexing_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         _banded,

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adv_big_data_indexing_spark.functions.exact import dec
+from adv_big_data_indexing_spark.lifetime import hold, start_fold
 
 
 def _concat_batches(pdf_iter, **empty_dtypes):
@@ -347,36 +348,11 @@ def enrich_events(events: DataFrame, customer: DataFrame) -> DataFrame:
     return events.join(dim, "user_id", "left")
 
 
-# --- shared micro-batch harness and parquet state-store plumbing ----------
+# --- parquet state-store plumbing -----------------------------------------
 #
 # A plain-parquet state table is the DEMO harness (zero dependencies);
 # production deployments swap the state helpers for a transactional
 # table format — the fold logic on top is format-agnostic.
-
-
-def start_fold(stream: DataFrame, fold, checkpoint_dir: str) -> "StreamingQuery":
-    """Start ``stream`` with ``fold(batch, batch_id)`` as its per-micro-
-    batch sink, checkpointed in ``checkpoint_dir``, over the input
-    available now.
-
-    Every frame the fold holds (``operators.advanced.hold``) is
-    released when its micro-batch ends, whether the fold returns or
-    raises: each batch's ``sparkSession`` is its own wrapper, so the
-    frames held under it are exactly that batch's."""
-    from adv_big_data_indexing_spark.operators.advanced import release_held  # noqa: PLC0415
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        try:
-            fold(batch, batch_id)
-        finally:
-            release_held(batch.sparkSession)
-
-    return (
-        stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _merge_state(prev, delta: DataFrame, keys: tuple[str, ...], value: str, combine) -> DataFrame:
@@ -1486,7 +1462,6 @@ def run_streaming_seasonal(
 
     from pyspark.sql import functions as F
 
-    from adv_big_data_indexing_spark.operators.advanced import hold
     from adv_big_data_indexing_spark.operators.timeseries import (
         detrend_hourly,
         hour_bucket,
@@ -2000,7 +1975,6 @@ def run_streaming_funnel(
     from pyspark import StorageLevel
 
     from adv_big_data_indexing_spark.functions.exact import epoch_us
-    from adv_big_data_indexing_spark.operators.advanced import hold
     from adv_big_data_indexing_spark.streaming import statelog
 
     delay_us = int(delay_sec) * 1_000_000

@@ -257,9 +257,9 @@ def test_lsh_persist_drained_on_next_build(spark):
     instead of recomputing."""
     from pyspark.storagelevel import StorageLevel
 
-    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark import lifetime
 
-    adv.release_held(spark)
+    lifetime.release_held(spark)
     rows_read = spark.sparkContext.accumulator(0)
 
     def tag(doc_id):
@@ -268,19 +268,19 @@ def test_lsh_persist_drained_on_next_build(spark):
 
     sh = _synthetic_sh(spark, n_hot=6).withColumn("doc_id", F.udf(tag, "long")("doc_id"))
     first = _pairset(_lsh_pair_stats(sh))
-    ((held, barrier),) = adv._held[spark]
+    ((held, barrier),) = lifetime._held[spark]
     assert barrier is None
     assert held.storageLevel == StorageLevel.DISK_ONLY
     once = rows_read.value
     assert once > 0
 
-    adv.release_held(spark)
-    assert spark not in adv._held
+    lifetime.release_held(spark)
+    assert spark not in lifetime._held
     assert held.storageLevel == StorageLevel.NONE
     # the rebuild computes the band rows from the input again
     assert _pairset(_lsh_pair_stats(sh)) == first
     assert rows_read.value == 2 * once
-    adv.release_held(spark)
+    lifetime.release_held(spark)
 
 
 def test_lsh_hold_released_by_non_lsh_build(spark):
@@ -289,16 +289,16 @@ def test_lsh_hold_released_by_non_lsh_build(spark):
     from pyspark.storagelevel import StorageLevel
 
     from adv_big_data_indexing_spark.contract import registry
-    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark import lifetime
     from tests.conftest import SF_CORRECTNESS
 
     reg = registry()
     reg["ns_dedup_minhash_lsh"].fn(spark, SF_CORRECTNESS)
-    ((lsh, _),) = adv._held[spark]
+    ((lsh, _),) = lifetime._held[spark]
     assert lsh.storageLevel == StorageLevel.DISK_ONLY
     reg["ns_dedup_exact"].fn(spark, SF_CORRECTNESS)
     assert lsh.storageLevel == StorageLevel.NONE
-    assert spark not in adv._held
+    assert spark not in lifetime._held
 
 
 def test_build_in_another_session_keeps_held_frames(spark):
@@ -307,18 +307,18 @@ def test_build_in_another_session_keeps_held_frames(spark):
     from pyspark.storagelevel import StorageLevel
 
     from adv_big_data_indexing_spark.contract import registry
-    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark import lifetime
     from tests.conftest import SF_CORRECTNESS
 
     reg = registry()
     other = spark.newSession()
     reg["ns_dedup_minhash_lsh"].fn(spark, SF_CORRECTNESS)
-    ((lsh, _),) = adv._held[spark]
+    ((lsh, _),) = lifetime._held[spark]
     try:
         reg["ns_minhash_jaccard_estimate"].fn(other, SF_CORRECTNESS)
-        assert len(adv._held[other]) == 1
+        assert len(lifetime._held[other]) == 1
         assert lsh.storageLevel == StorageLevel.DISK_ONLY
     finally:
-        adv.release_held(other)
-        adv.release_held(spark)
+        lifetime.release_held(other)
+        lifetime.release_held(spark)
     assert lsh.storageLevel == StorageLevel.NONE

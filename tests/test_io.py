@@ -30,7 +30,7 @@ def test_split_corrupt_hold_released_by_next_build(spark, tmp_path):
     lifetime rule: released when the session's next build starts."""
     from pyspark.storagelevel import StorageLevel
 
-    from adv_big_data_indexing_spark.operators.advanced import release_held
+    from adv_big_data_indexing_spark.lifetime import release_held
 
     p = tmp_path / "in.jsonl"
     p.write_text("\n".join(plan_jsons(2) + ["{broken json"]))

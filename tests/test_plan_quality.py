@@ -287,7 +287,7 @@ def test_persists_live_only_in_hold():
     or a try/finally of its own."""
     sites = _package_sites(lambda line: ".persist(" in line or ".cache()" in line)
     owners = {(rel, fn) for rel, fn, _ in sites}
-    assert owners == {("operators/advanced.py", "hold")}, sites
+    assert owners == {("lifetime.py", "hold")}, sites
 
 
 def test_streams_start_only_in_start_fold():
@@ -295,7 +295,7 @@ def test_streams_start_only_in_start_fold():
     releases a micro-batch's held frames when the batch ends."""
     sites = _package_sites(lambda line: ".foreachBatch(" in line)
     owners = {(rel, fn) for rel, fn, _ in sites}
-    assert owners == {("streaming/events.py", "start_fold")}, sites
+    assert owners == {("lifetime.py", "start_fold")}, sites
 
 
 def test_preference_pairs_pooled_topk_single_pass(spark):
@@ -794,3 +794,27 @@ def test_registry_wide_no_unpooled_global_rank_window(spark):
             if unpartitioned and "TakeOrderedAndProject" not in child_window:
                 offenders.append((name, ln.strip()[:140]))
     assert not offenders, "\n".join(f"{n}: {l}" for n, l in offenders)
+
+
+def test_document_path_imports_no_operator_modules():
+    """The document write and read path (cdc, search, shred) takes the
+    held-frame lifetime from ``lifetime`` and imports neither the
+    streaming folds nor the relational operators, each several MB of
+    driver memory once imported."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import adv_big_data_indexing_spark.streaming.cdc\n"
+        "import adv_big_data_indexing_spark.operators.search\n"
+        "import adv_big_data_indexing_spark.operators.shred\n"
+        "heavy = {'adv_big_data_indexing_spark.streaming.events',\n"
+        "         'adv_big_data_indexing_spark.operators.advanced'}\n"
+        "print(sorted(heavy & set(sys.modules)))\n"
+    )
+    root = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120, check=True
+    )
+    assert out.stdout.strip() == "[]", out.stdout + out.stderr

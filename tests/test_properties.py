@@ -440,21 +440,22 @@ def test_lazy_reliable_checkpoint_releases_previous_cache(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
+    from adv_big_data_indexing_spark import lifetime
     from adv_big_data_indexing_spark.operators import advanced as adv
 
     spark.sparkContext.setCheckpointDir(str(tmp_path))
     spark.conf.set("spark.advbdi.checkpoint", "reliable")
     try:
-        adv.release_held(spark)
+        lifetime.release_held(spark)
         out1 = adv.consistent_materialize(spark.range(50), eager=False)
         assert out1.count() == 50  # checkpoint job fires at first action
         out2 = adv.consistent_materialize(spark.range(30), eager=False)
         assert out2.count() == 30
-        held = [h for h, _ in adv._held[spark]]
+        held = [h for h, _ in lifetime._held[spark]]
         assert len(held) == 2
         assert all(h.storageLevel != StorageLevel.NONE for h in held)
-        adv.release_held(spark)  # what the next registered build does first
-        assert spark not in adv._held
+        lifetime.release_held(spark)  # what the next registered build does first
+        assert spark not in lifetime._held
         assert all(h.storageLevel == StorageLevel.NONE for h in held)
         assert out1.count() == 50  # read from the written checkpoint
 
@@ -464,13 +465,13 @@ def test_lazy_reliable_checkpoint_releases_previous_cache(spark, tmp_path):
         nd = adv.consistent_materialize(
             spark.range(20).select("id", noise("id").alias("r")), eager=False
         )
-        adv.release_held(spark)  # never acted on: the release writes it
+        lifetime.release_held(spark)  # never acted on: the release writes it
         v1 = sorted((r.id, r.r) for r in nd.collect())
         v2 = sorted((r.id, r.r) for r in nd.collect())
         assert v1 == v2
     finally:
         spark.conf.set("spark.advbdi.checkpoint", "local")
-        adv.release_held(spark)
+        lifetime.release_held(spark)
 
 
 def test_repo_wide_reliable_checkpoint_mode(spark, tmp_path):
@@ -503,7 +504,7 @@ def test_reliable_components_keep_lsh_hold(spark, tmp_path, monkeypatch):
     from pyspark.storagelevel import StorageLevel
 
     from adv_big_data_indexing_spark.contract import registry
-    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark import lifetime
     from adv_big_data_indexing_spark.operators import dedup as D
     from tests.conftest import SF_CORRECTNESS
 
@@ -515,12 +516,12 @@ def test_reliable_components_keep_lsh_hold(spark, tmp_path, monkeypatch):
     spark.conf.set("spark.advbdi.checkpoint", "reliable")
     try:
         df = fn(spark, SF_CORRECTNESS)
-        levels = [h.storageLevel for h, _ in adv._held[spark]]
+        levels = [h.storageLevel for h, _ in lifetime._held[spark]]
         assert levels == [StorageLevel.DISK_ONLY]
         assert sorted(map(tuple, df.collect())) == base
     finally:
         spark.conf.set("spark.advbdi.checkpoint", "local")
-        adv.release_held(spark)
+        lifetime.release_held(spark)
 
 
 def test_reliable_bfs_matches_oracle(spark, duck, tmp_path):
@@ -528,7 +529,7 @@ def test_reliable_bfs_matches_oracle(spark, duck, tmp_path):
     layer per hop after the build, and the result still matches the
     DuckDB oracle."""
     from adv_big_data_indexing_spark.contract import registry
-    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark import lifetime
     from adv_big_data_indexing_spark.operators.mining import BFS_MAX_HOPS
     from tests.conftest import SF_CORRECTNESS
     from tests.parity import compare
@@ -538,11 +539,11 @@ def test_reliable_bfs_matches_oracle(spark, duck, tmp_path):
     spark.conf.set("spark.advbdi.checkpoint", "reliable")
     try:
         sdf = spec.fn(spark, SF_CORRECTNESS)
-        assert 1 <= len(adv._held[spark]) <= BFS_MAX_HOPS
+        assert 1 <= len(lifetime._held[spark]) <= BFS_MAX_HOPS
         assert compare(sdf, duck.execute(spec.oracle)) == []
     finally:
         spark.conf.set("spark.advbdi.checkpoint", "local")
-        adv.release_held(spark)
+        lifetime.release_held(spark)
 
 
 @settings(

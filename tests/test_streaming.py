@@ -149,19 +149,19 @@ def test_start_fold_releases_held_frames_when_the_batch_ends(
     so a failed batch leaves no cached blocks and no registry entry."""
     from pyspark.storagelevel import StorageLevel
 
-    from adv_big_data_indexing_spark.operators import advanced as adv
+    from adv_big_data_indexing_spark import lifetime
 
     path, batch_df = event_stream_dir
     seen = []
 
     def fold(batch, batch_id):
-        frame = adv.hold(batch.groupBy("user_id").count(), StorageLevel.DISK_ONLY)
+        frame = lifetime.hold(batch.groupBy("user_id").count(), StorageLevel.DISK_ONLY)
         frame.count()
         seen.append((batch.sparkSession, frame, frame.storageLevel))
         if fails:
             raise RuntimeError("fold failed after holding a frame")
 
-    q = ev.start_fold(
+    q = lifetime.start_fold(
         spark.readStream.schema(batch_df.schema).parquet(path), fold, str(tmp_path / "ck")
     )
     if fails:
@@ -173,7 +173,7 @@ def test_start_fold_releases_held_frames_when_the_batch_ends(
     ((session, frame, level_in_fold),) = seen
     assert level_in_fold == StorageLevel.DISK_ONLY
     assert frame.storageLevel == StorageLevel.NONE
-    assert session not in adv._held
+    assert session not in lifetime._held
 
 
 def test_streaming_sessions(spark, event_stream_dir):
