@@ -37,12 +37,6 @@ def sum_money(col: Column | str, alias: str) -> Column:
     return F.sum(dec(col)).cast("double").alias(alias)
 
 
-def avg_money(col: Column | str, alias: str) -> Column:
-    """Exact-sum / count, single double division at the end."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
-
-
 def cents(col: Column | str) -> Column:
     """Exact integer cents from a ≤2-decimal money double.
 
@@ -81,19 +75,6 @@ def epoch_us(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
-
-
-def int_dot(a: Column, b: Column) -> Column:
-    """Exact dot product of two array<bigint> columns (any length).
-
-    Higher-order functions are interpreted row-at-a-time in Spark; for
-    the fixed-dim hot paths use :func:`int_dot_fixed` instead.
-    """
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
 
 
 def int_dot_fixed(a: Column, b: Column, dim: int) -> Column:

@@ -61,18 +61,6 @@ DUCK_SHINGLES3 = (
 )
 
 
-def minhash_hex(shingle: Column, seed: Column) -> Column:
-    """64-bit-hex hash material: first 16 hex chars of md5(seed ':' shingle).
-
-    Fixed-width lowercase hex ⇒ lexicographic MIN == numeric MIN, so
-    min-hashing works on strings — portable to any engine with md5.
-    """
-    return F.substring(F.md5(F.concat_ws(":", seed.cast("string"), shingle)), 1, 16)
-
-
-#: DuckDB mirror of :func:`minhash_hex`.
-DUCK_MINHASH = "substr(md5(CAST({seed} AS VARCHAR) || ':' || {shingle}), 1, 16)"
-
 # --- Universal-hash minhash family -----------------------------------------
 #
 # One strong base hash per shingle (48 bits of md5), then each minhash

@@ -27,7 +27,7 @@ from pyspark.storagelevel import StorageLevel
 from adv_big_data_indexing_spark.contract import query
 from adv_big_data_indexing_spark.lifetime import hold
 from adv_big_data_indexing_spark.operators.advanced import consistent_materialize
-from adv_big_data_indexing_spark.functions.exact import DUCK_QUANTIZE, int_dot, quantize_vec
+from adv_big_data_indexing_spark.functions.exact import DUCK_QUANTIZE, quantize_vec
 from adv_big_data_indexing_spark.functions.text import (
     DUCK_BASE48,
     DUCK_SHINGLES3,

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adv_big_data_indexing_spark.contract import query
-from adv_big_data_indexing_spark.functions.exact import avg_money, cents, dec, epoch_us, rev_c2, sum_money
+from adv_big_data_indexing_spark.functions.exact import cents, dec, epoch_us, rev_c2, sum_money
 from adv_big_data_indexing_spark.sources.catalog import load_table, spread
 
 # ---------------------------------------------------------------------------

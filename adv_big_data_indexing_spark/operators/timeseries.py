@@ -20,7 +20,7 @@ from adv_big_data_indexing_spark.contract import query
 from adv_big_data_indexing_spark.operators.advanced import (
     consistent_materialize,
 )
-from adv_big_data_indexing_spark.functions.exact import DUCK_ILOG2_Q4, epoch_us, sum_money
+from adv_big_data_indexing_spark.functions.exact import DUCK_ILOG2_Q4, epoch_us, ilog2_q4, sum_money
 from adv_big_data_indexing_spark.sources.catalog import load_table
 
 
@@ -147,6 +147,54 @@ def ts_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _funnel_stages(log: DataFrame):
+    """(s, c, p) per-user stage frames from ``(user_id, kind, val)`` rows
+    (kind s/c/p = signup/click/purchase, val = epoch µs): min signup,
+    min click strictly after it, min purchase strictly after that. A
+    min is order-free, so the result is the same for any row order and
+    for any superset of rows that keeps every stage minimum — the
+    streaming funnel log relies on that (streaming/events.py)."""
+    s = (
+        log.filter(F.col("kind") == "s")
+        .groupBy("user_id")
+        .agg(F.min("val").alias("signup_us"))
+    )
+    c = (
+        log.filter(F.col("kind") == "c")
+        .join(s, "user_id")
+        .filter(F.col("val") > F.col("signup_us"))
+        .groupBy("user_id")
+        .agg(F.min("val").alias("click_us"))
+    )
+    p = (
+        log.filter(F.col("kind") == "p")
+        .join(c, "user_id")
+        .filter(F.col("val") > F.col("click_us"))
+        .groupBy("user_id")
+        .agg(F.min("val").alias("purchase_us"))
+    )
+    return s, c, p
+
+
+def funnel_table(log: DataFrame) -> DataFrame:
+    """The funnel row per user who signed up, from ``(user_id, kind,
+    val)`` rows — the finisher ``ts_funnel`` and the streaming funnel
+    reader share."""
+    s, c, p = _funnel_stages(log)
+    return (
+        s.join(c, "user_id", "left")
+        .join(p, "user_id", "left")
+        .select(
+            "user_id",
+            "signup_us",
+            "click_us",
+            "purchase_us",
+            F.col("click_us").isNotNull().alias("reached_click"),
+            F.col("purchase_us").isNotNull().alias("reached_purchase"),
+        )
+    )
+
+
 @query(
     "ts_funnel",
     oracle="""
@@ -177,36 +225,39 @@ def ts_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    s = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("signup_ts"))
+    kind = (
+        F.when(F.col("event_type") == "signup", "s")
+        .when(F.col("event_type") == "click", "c")
+        .when(F.col("event_type") == "purchase", "p")
     )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(s, "user_id")
-        .filter(F.col("ts") > F.col("signup_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ts"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("click_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("purchase_ts"))
+    log = e.select("user_id", kind.alias("kind"), epoch_us("ts").alias("val"))
+    return funnel_table(log.filter(F.col("kind").isNotNull()))
+
+
+#: the cohort-retention window: offsets beyond this are not reported
+RETENTION_MAX_OFFSET = 7
+
+
+def retention_state(events: DataFrame):
+    """(first, days) from events: each user's distinct active epoch days
+    and the first of them (``cohort_day``)."""
+    day = (epoch_us("ts") / F.lit(86_400_000_000)).cast("bigint")
+    days = events.select("user_id", day.alias("day")).distinct()
+    first = days.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
+    return first, days
+
+
+def retention_table(first: DataFrame, days: DataFrame) -> DataFrame:
+    """Distinct active users per (cohort_day, day_offset ≤
+    RETENTION_MAX_OFFSET) — the finisher ``ts_retention_cohort`` and the
+    streaming retention reader share."""
+    j = days.join(first, "user_id").withColumn(
+        "day_offset", F.col("day") - F.col("cohort_day")
     )
     return (
-        s.join(c, "user_id", "left")
-        .join(p, "user_id", "left")
-        .select(
-            "user_id",
-            epoch_us("signup_ts").alias("signup_us"),
-            epoch_us("click_ts").alias("click_us"),
-            epoch_us("purchase_ts").alias("purchase_us"),
-            F.col("click_ts").isNotNull().alias("reached_click"),
-            F.col("purchase_ts").isNotNull().alias("reached_purchase"),
-        )
+        j.filter(F.col("day_offset") <= RETENTION_MAX_OFFSET)
+        .groupBy("cohort_day", "day_offset")
+        .agg(F.countDistinct("user_id").alias("active_users"))
     )
 
 
@@ -228,16 +279,7 @@ def ts_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "freshness/engagement rollup.",
 )
 def ts_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    day = (epoch_us("ts") / F.lit(86_400_000_000)).cast("bigint")
-    daily = e.select("user_id", day.alias("day")).distinct()
-    first = daily.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    j = daily.join(first, "user_id").withColumn("day_offset", F.col("day") - F.col("cohort_day"))
-    return (
-        j.filter(F.col("day_offset") <= 7)
-        .groupBy("cohort_day", "day_offset")
-        .agg(F.countDistinct("user_id").alias("active_users"))
-    )
+    return retention_table(*retention_state(load_table(spark, sf_dir, "events")))
 
 
 @query(
@@ -451,6 +493,20 @@ def ts_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def transition_probabilities(counts: DataFrame) -> DataFrame:
+    """(from_state, to_state, n, p = n / Σ_from n) from transition counts
+    — the finisher ``ts_markov_transitions`` and the streaming Markov
+    reader share. The window sum is over BIGINTs, so the one division is
+    correctly rounded in every engine."""
+    total = Window.partitionBy("from_state")
+    return counts.select(
+        "from_state",
+        "to_state",
+        "n",
+        (F.col("n").cast("double") / F.sum("n").over(total)).alias("p"),
+    )
+
+
 @query(
     "ts_markov_transitions",
     oracle="""
@@ -480,13 +536,8 @@ def ts_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("from_state"),
         F.lead("event_type").over(w).alias("to_state"),
     ).filter(F.col("to_state").isNotNull())
-    t = seq.groupBy("from_state", "to_state").agg(F.count("*").alias("n"))
-    total = Window.partitionBy("from_state")
-    return t.select(
-        "from_state",
-        "to_state",
-        "n",
-        (F.col("n").cast("double") / F.sum("n").over(total)).alias("p"),
+    return transition_probabilities(
+        seq.groupBy("from_state", "to_state").agg(F.count("*").alias("n"))
     )
 
 
@@ -1000,6 +1051,49 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: standard parameterization for unlabeled drift monitoring.
 CUSUM_KDIV = 10
 CUSUM_HMUL = 3
+#: rows per block of the alarm-segment recompute; bounds the dense-alarm
+#: worst case of :func:`cusum_fold` to Θ(rows · block) element ops
+_CUSUM_BLOCK = 4096
+
+
+def cusum_fold(x, mu: int, s0: int = 0):
+    """One-sided CUSUM over the in-order int64 milli-values ``x`` against
+    target mean ``mu``, resumed from the carried sum ``s0``: s_i =
+    max(0, s_(i-1) + x_i − mu − k), alarm and restart at 0 when s_i > h
+    (k = mu // CUSUM_KDIV, h = CUSUM_HMUL·mu). Returns (alarm row
+    indices, their s values, the carry after the last row). The kernel
+    ``ts_cusum_alarm`` and the streaming ``cusum_alarms`` both run.
+
+    Between alarms the clipped recurrence has the closed form s_i =
+    max(0, P_i − min(−s0, min_(u<i) P_u)) (P = running sum of the
+    drifts), so a segment is one cumsum and one running min, and the
+    Python loop runs once per alarm. Each alarm's recompute is bounded
+    to a ``_CUSUM_BLOCK``-row block, so a series where every row alarms
+    stays linear in its length. The arithmetic is int64, the oracle's
+    BIGINT."""
+    import numpy as np  # noqa: PLC0415
+
+    k, h = mu // CUSUM_KDIV, CUSUM_HMUL * mu
+    d = np.asarray(x, dtype=np.int64) - (mu + k)
+    idx, sq = [], []
+    n_rows = len(d)
+    for b0 in range(0, n_rows, _CUSUM_BLOCK):
+        b1 = min(b0 + _CUSUM_BLOCK, n_rows)
+        j = b0
+        while j < b1:
+            p = np.cumsum(d[j:b1])
+            m = np.minimum.accumulate(np.concatenate(([np.int64(-s0)], p[:-1])))
+            s = np.maximum(0, p - m)
+            over = np.nonzero(s > h)[0]
+            if not len(over):
+                s0 = int(s[-1])
+                break
+            a = int(over[0])
+            idx.append(j + a)
+            sq.append(int(s[a]))
+            s0 = 0
+            j += a + 1
+    return idx, sq, s0
 
 
 @query(
@@ -1067,17 +1161,8 @@ def ts_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cusum(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        xs = [int(v) for v in pdf["x"]]
-        mu = sum(xs) // len(xs)
-        k, h = mu // CUSUM_KDIV, CUSUM_HMUL * mu
-        s = 0
-        keep, sq = [], []
-        for i, x in enumerate(xs):
-            s = max(0, s + x - mu - k)
-            if s > h:
-                keep.append(i)
-                sq.append(s)
-                s = 0
+        xs = pdf["x"].to_numpy(dtype="int64")
+        keep, sq, _ = cusum_fold(xs, sum(xs.tolist()) // len(xs))
         out = pdf.iloc[keep].copy()
         out["s_q"] = sq
         return out[["user_id", "event_id", "ts", "value", "s_q"]]
@@ -1173,6 +1258,24 @@ _HOLT_OFF = 1 << 42
 _HOLT_D = f"((o.x - r.l - r.b + {_HOLT_OFF}) // {HOLT_ADIV} - {_HOLT_OFF // HOLT_ADIV})"
 
 
+def holt_fold(xs: list[int], l: int = 0, b: int = 0, n: int = 0) -> tuple[int, int, int]:
+    """Holt level/trend recurrence over the in-order milli-value ints
+    ``xs``, resumed from (level, trend, observations folded so far); a
+    series' first observation seeds the level with trend 0. Returns the
+    new (l, b, n). The kernel ``ts_holt_forecast`` and the streaming
+    ``holt_forecasts`` both run: one loop of Python int ops per call,
+    since each step's floor divisions feed the next step's inputs and
+    no closed form exists."""
+    start = 0
+    if n == 0 and xs:
+        l, b, start = xs[0], 0, 1
+    for x in xs[start:]:
+        d = (x - l - b) // HOLT_ADIV  # Python // floors: matches the guard
+        l = l + b + d
+        b = b + d // HOLT_BDIV
+    return l, b, n + len(xs)
+
+
 @query(
     "ts_holt_forecast",
     bench=True,
@@ -1221,16 +1324,11 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def holt(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        xs = [int(v) for v in pdf["x"]]
-        l, b = xs[0], 0
-        for x in xs[1:]:
-            d = (x - l - b) // HOLT_ADIV  # Python // floors: matches the guard
-            l = l + b + d
-            b = b + d // HOLT_BDIV
+        l, b, n = holt_fold(pdf["x"].tolist())
         return pd.DataFrame(
             {
                 "user_id": [pdf["user_id"].iloc[0]],
-                "n_obs": [len(xs)],
+                "n_obs": [n],
                 "level_m": [l],
                 "trend_m": [b],
                 "forecast_m": [l + b],
@@ -1430,9 +1528,6 @@ def ts_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BT_D = f"((o.x - r.l - r.b + {_HOLT_OFF}) // {HOLT_ADIV} - {_HOLT_OFF // HOLT_ADIV})"
-
-
 @query(
     "ts_forecast_backtest",
     oracle=f"""
@@ -1448,8 +1543,8 @@ _BT_D = f"((o.x - r.l - r.b + {_HOLT_OFF}) // {HOLT_ADIV} - {_HOLT_OFF // HOLT_A
       FROM ordered WHERE rn = 1
       UNION ALL
       SELECT o.user_id, o.rn, o.n, o.x,
-             r.l + r.b + {_BT_D} AS l,
-             r.b + (({_BT_D}) + {_HOLT_OFF}) // {HOLT_BDIV}
+             r.l + r.b + {_HOLT_D} AS l,
+             r.b + (({_HOLT_D}) + {_HOLT_OFF}) // {HOLT_BDIV}
                  - {_HOLT_OFF // HOLT_BDIV} AS b,
              r.sae_naive + abs(o.x - r.x) AS sae_naive,
              r.sae_holt + abs(o.x - r.l - r.b) AS sae_holt
@@ -1818,6 +1913,41 @@ def _hw_fd(e: str) -> str:
     return f"(({e}) + {_HW_OFF}) // {HW_DIV} - {_HW_OFF // HW_DIV}"
 
 
+def holt_winters_fold(
+    hs: list[int],
+    xs: list[int],
+    l: int = 0,
+    b: int = 0,
+    n: int = 0,
+    s: list[int] | None = None,
+):
+    """Holt-Winters additive recurrence over in-order hourly buckets
+    (hour ``hs``, milli-value ``xs``), resumed from (level, trend,
+    buckets folded so far, seasonal vector); a series' first bucket
+    seeds the level. Returns (l, b, n, s, fitted), ``fitted`` holding
+    each bucket's one-step-ahead fit l + b + s[h % HW_PERIOD] made
+    before seeing it (the first bucket fits itself). The seasonal index
+    is the true hour of day, so gaps in the grid stay aligned. The
+    kernel ``ts_holt_winters`` and the streaming
+    ``holt_winters_monitor`` both run; Python ``//`` floors, which the
+    oracle reproduces with the offset guard."""
+    s = [0] * HW_PERIOD if s is None else list(s)
+    fitted = []
+    start = 0
+    if n == 0 and xs:
+        l, b, start = xs[0], 0, 1
+        fitted.append(xs[0])
+    for h, x in zip(hs[start:], xs[start:]):
+        i = h % HW_PERIOD
+        s_i = s[i]
+        fitted.append(l + b + s_i)
+        l_new = l + b + (x - l - b - s_i) // HW_DIV
+        b = b + (l_new - l - b) // HW_DIV
+        s[i] = s_i + (x - l_new - s_i) // HW_DIV
+        l = l_new
+    return l, b, n + len(xs), s, fitted
+
+
 @query(
     "ts_holt_winters",
     bench=True,
@@ -1878,39 +2008,20 @@ def _hw_fd(e: str) -> str:
 def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: PLC0415
 
-    e = load_table(spark, sf_dir, "events")
-    hourly = e.groupBy(
-        "event_type",
-        ((epoch_us("ts") - epoch_us("ts") % 3_600_000_000) / 3_600_000_000)
-        .cast("bigint")
-        .alias("h"),
-    ).agg(
-        F.sum(F.expr("CAST(floor(value * 1000) AS BIGINT)"))
-        .cast("bigint")
-        .alias("x")
-    )
+    hourly = hourly_series(load_table(spark, sf_dir, "events"))
 
     def hw(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("h").reset_index(drop=True)
-        l, b, s = None, 0, [0] * HW_PERIOD
-        out = []
-        for rn, (h, x) in enumerate(
-            zip((int(v) for v in pdf["h"]), (int(v) for v in pdf["x"])), 1
-        ):
-            if rn == 1:
-                l, fitted, err = x, x, 0
-            else:
-                i = h % HW_PERIOD
-                s_i = s[i]
-                fitted = l + b + s_i
-                err = x - fitted
-                l_new = l + b + (x - l - b - s_i) // HW_DIV
-                b = b + (l_new - l - b) // HW_DIV
-                s[i] = s_i + (x - l_new - s_i) // HW_DIV
-                l = l_new
-            out.append((pdf["event_type"].iat[0], rn, x, fitted, err))
+        xs = pdf["x"].tolist()
+        *_, fitted = holt_winters_fold(pdf["h"].tolist(), xs)
         return pd.DataFrame(
-            out, columns=["event_type", "rn", "x", "fitted_q", "err_q"]
+            {
+                "event_type": pdf["event_type"],
+                "rn": range(1, len(xs) + 1),
+                "x": xs,
+                "fitted_q": fitted,
+                "err_q": [x - f for x, f in zip(xs, fitted)],
+            }
         )
 
     return hourly.groupBy("event_type").applyInPandas(
@@ -1921,6 +2032,59 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Kaplan-Meier survival (time-to-churn), portable quarter-bit log space
 # ---------------------------------------------------------------------------
+
+
+def churn_frontier(events: DataFrame) -> DataFrame:
+    """(user_id, day): each user's churn day, the epoch day of their last
+    event. Over a micro-batch it is the batch's frontier delta; the max
+    of deltas is the frontier of their union."""
+    return events.groupBy("user_id").agg(
+        (
+            (epoch_us(F.max("ts")) - epoch_us(F.max("ts")) % 86_400_000_000)
+            / 86_400_000_000
+        ).cast("bigint").alias("day")
+    )
+
+
+def km_curve(frontier: DataFrame) -> DataFrame:
+    """Kaplan-Meier curve from the per-user churn frontier: per churn
+    day the risk set, the churn count and the quarter-bit log-survival
+    sum, NULL from the day S reaches 0 — the finisher ``ts_survival_km``
+    and the streaming survival reader share."""
+    days = frontier.groupBy("day").agg(F.count("*").alias("n_churn"))
+    n_users = frontier.select(F.count("*").alias("n_users"))
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    risk = (
+        days.crossJoin(F.broadcast(n_users))
+        .select(
+            "day",
+            "n_churn",
+            (
+                F.col("n_users")
+                - (F.sum("n_churn").over(w) - F.col("n_churn"))
+            ).alias("n_risk"),
+        )
+    )
+    alive = F.col("n_risk") > F.col("n_churn")
+    terms = risk.select(
+        "day",
+        "n_risk",
+        "n_churn",
+        F.when(
+            alive,
+            ilog2_q4(F.col("n_risk") - F.col("n_churn")) - ilog2_q4(F.col("n_risk")),
+        )
+        .otherwise(0)
+        .alias("term"),
+    )
+    return terms.select(
+        "day",
+        F.col("n_risk").cast("bigint").alias("n_risk"),
+        F.col("n_churn").cast("bigint").alias("n_churn"),
+        F.when(alive, F.sum("term").over(w).cast("bigint"))
+        .otherwise(F.lit(None))
+        .alias("log_s_q4"),
+    )
 
 
 @query(
@@ -1966,49 +2130,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "windows are trivially small at any SF.",
 )
 def ts_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from adv_big_data_indexing_spark.functions.exact import ilog2_q4  # noqa: PLC0415
-
-    e = load_table(spark, sf_dir, "events")
-    churn = e.groupBy("user_id").agg(
-        (
-            (epoch_us(F.max("ts")) - epoch_us(F.max("ts")) % 86_400_000_000)
-            / 86_400_000_000
-        ).cast("bigint").alias("day")
-    )
-    days = churn.groupBy("day").agg(F.count("*").alias("n_churn"))
-    n_users = churn.select(F.count("*").alias("n_users"))
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    risk = (
-        days.crossJoin(F.broadcast(n_users))
-        .select(
-            "day",
-            "n_churn",
-            (
-                F.col("n_users")
-                - (F.sum("n_churn").over(w) - F.col("n_churn"))
-            ).alias("n_risk"),
-        )
-    )
-    alive = F.col("n_risk") > F.col("n_churn")
-    terms = risk.select(
-        "day",
-        "n_risk",
-        "n_churn",
-        F.when(
-            alive,
-            ilog2_q4(F.col("n_risk") - F.col("n_churn")) - ilog2_q4(F.col("n_risk")),
-        )
-        .otherwise(0)
-        .alias("term"),
-    )
-    return terms.select(
-        "day",
-        F.col("n_risk").cast("bigint").alias("n_risk"),
-        F.col("n_churn").cast("bigint").alias("n_churn"),
-        F.when(alive, F.sum("term").over(w).cast("bigint"))
-        .otherwise(F.lit(None))
-        .alias("log_s_q4"),
-    )
+    return km_curve(churn_frontier(load_table(spark, sf_dir, "events")))
 
 
 # ---------------------------------------------------------------------------

@@ -142,6 +142,39 @@ _HLL_ESTIMATE = (
 )
 
 
+def hll_registers(hashed: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """(keys, bucket, mj): the max-rho register of every non-empty bucket
+    per ``keys`` group, from md5 hex strings ``h``. Registers merge by
+    max, so the registers of a union are the max of each part's."""
+    return (
+        hashed.selectExpr(*keys, f"({_SPARK_BUCKET}) AS bucket", f"({_SPARK_HEX}) AS hv")
+        .selectExpr(
+            *keys,
+            "bucket",
+            "CASE WHEN hv = 0 THEN 53 ELSE 53 - length(trim(LEADING '0' FROM bin(hv))) END AS rho",
+        )
+        .groupBy(*keys, "bucket")
+        .agg(F.max("rho").alias("mj"))
+    )
+
+
+def hll_estimate(registers: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """(keys, approx_nd): the distinct-count estimate per ``keys`` group
+    from its registers — the finisher ``ext_approx_distinct_portable``
+    and the streaming HLL reader share."""
+    agg = registers.groupBy(*keys).agg(
+        F.sum(
+            F.expr("CASE WHEN mj <= 50 THEN shiftleft(CAST(1 AS BIGINT), 50 - mj) ELSE 0 END")
+        ).alias("s_present"),
+        F.count("*").alias("n_buckets"),
+    )
+    return agg.selectExpr(
+        *keys,
+        f"s_present + ({HLL_M} - n_buckets) * shiftleft(CAST(1 AS BIGINT), 50) AS sum_total",
+        f"{HLL_M} - n_buckets AS zeros",
+    ).selectExpr(*keys, _HLL_ESTIMATE)
+
+
 @query(
     "ext_approx_distinct_portable",
     oracle=f"""
@@ -183,25 +216,8 @@ def ext_approx_distinct_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stack(2, 'l_partkey', CAST(l_partkey AS STRING),"
         " 'l_orderkey', CAST(l_orderkey AS STRING)) AS (key, val)",
     ).selectExpr("g", "key", "md5(val) AS h")
-    r = v.selectExpr("g", "key", f"({_SPARK_BUCKET}) AS bucket", f"({_SPARK_HEX}) AS hv")
-    pb = r.selectExpr(
-        "g",
-        "key",
-        "bucket",
-        "CASE WHEN hv = 0 THEN 53 ELSE 53 - length(trim(LEADING '0' FROM bin(hv))) END AS rho",
-    ).groupBy("g", "key", "bucket").agg(F.max("rho").alias("mj"))
-    agg = pb.groupBy("g", "key").agg(
-        F.sum(
-            F.expr("CASE WHEN mj <= 50 THEN shiftleft(CAST(1 AS BIGINT), 50 - mj) ELSE 0 END")
-        ).alias("s_present"),
-        F.count("*").alias("n_buckets"),
-    )
-    return agg.selectExpr(
-        "g AS l_returnflag",
-        "key",
-        f"s_present + ({HLL_M} - n_buckets) * shiftleft(CAST(1 AS BIGINT), 50) AS sum_total",
-        f"{HLL_M} - n_buckets AS zeros",
-    ).selectExpr("l_returnflag", "key", _HLL_ESTIMATE)
+    keys = ("g", "key")
+    return hll_estimate(hll_registers(v, keys), keys).withColumnRenamed("g", "l_returnflag")
 
 
 # Sketch is EXACT below this many rows per group (sf0.01 gate: ~20k/group,

@@ -1,3 +1,3 @@
-from adv_big_data_indexing_spark.sources.catalog import TABLES, load_table, load_tables
+from adv_big_data_indexing_spark.sources.catalog import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

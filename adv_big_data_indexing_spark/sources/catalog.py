@@ -159,7 +159,3 @@ def spread(df: DataFrame, factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() * factor <= target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -18,14 +18,28 @@ from pyspark.sql import functions as F
 
 from adv_big_data_indexing_spark.functions.exact import dec
 from adv_big_data_indexing_spark.lifetime import hold, start_fold
+from adv_big_data_indexing_spark.operators.timeseries import (
+    HW_PERIOD,
+    RETENTION_MAX_OFFSET,
+    _funnel_stages,
+    churn_frontier,
+    cusum_fold,
+    funnel_table,
+    holt_fold,
+    holt_winters_fold,
+    km_curve,
+    retention_state,
+    retention_table,
+    transition_probabilities,
+)
+from adv_big_data_indexing_spark.operators.udfs import hll_estimate, hll_registers
 
 
 def _concat_batches(pdf_iter, **empty_dtypes):
     """Total concat over ``applyInPandasWithState``'s per-key batch
     iterator: ``pd.concat([])`` raises, so a yield-nothing delivery
     (latent — Spark normally delivers data per key) gets an empty
-    TYPED frame carrying exactly the columns the fold touches
-    (ADVICE r10, applied to every state fold, not just rate_flag)."""
+    TYPED frame carrying exactly the columns the fold touches."""
     import pandas as pd  # noqa: PLC0415
 
     chunks = list(pdf_iter)
@@ -150,7 +164,7 @@ def anomaly_zscores(events: DataFrame) -> DataFrame:
             pdf_iter, ts="datetime64[ns]", event_id="int64", value="float64"
         )
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        # vectorized sliding-window fold (VERDICT r10 item 2): the carry
+        # vectorized sliding-window fold: the carry
         # is the trailing ANOM_WINDOW quantized values and NOTHING the
         # output feeds back into (buf appends unconditionally), so each
         # row's (n, sum, sumsq) window is a prefix-sum difference over
@@ -158,8 +172,8 @@ def anomaly_zscores(events: DataFrame) -> DataFrame:
         # batch, but the DIFFERENCE is exact mod 2^64 and the true
         # window sum fits (≤ ANOM_WINDOW terms — the identical bound the
         # per-row fold relied on), so wrapped-prefix differences are
-        # bit-exact. Same fixed-order float64 ops as before: s/n,
-        # ss/n - mean², (qx - mean)/sqrt(var).
+        # bit-exact. The float64 ops run in the batch twin's fixed
+        # order: s/n, ss/n - mean², (qx - mean)/sqrt(var).
         if len(pdf):
             # HALF_UP like Spark's F.round (Python round() is banker's):
             # sign-aware so negative values round half-away-from-zero
@@ -205,9 +219,6 @@ def anomaly_zscores(events: DataFrame) -> DataFrame:
 
 
 CUSUM_OUTPUT = "user_id long, event_id long, ts timestamp, value double, s_q long"
-#: per-alarm segment recompute bound (code-review r11: keeps the
-#: dense-alarm worst case linear in batch size)
-_CUSUM_BLOCK = 4096
 CUSUM_STATE = "s_carry bigint"
 
 
@@ -217,18 +228,12 @@ def cusum_alarms(events: DataFrame, mu_q: int) -> DataFrame:
     self-calibrates mu from the whole series, which a stream cannot see,
     so the streaming form monitors drift against a configured target —
     the standard deployment of CUSUM monitors. State is ONE bigint per
-    user (the carried cusum), alarm resets it — when events arrive in
-    event-time order the output equals the batch recurrence with the
-    same mu bit-for-bit (pure integer arithmetic on both paths).
+    user (the carried cusum), alarm resets it. Each micro-batch runs the
+    batch query's own kernel, ``cusum_fold``, from the carried sum, so on
+    in-order events the output equals the batch recurrence with the same
+    mu bit-for-bit.
     """
     import pandas as pd  # noqa: PLC0415
-
-    from adv_big_data_indexing_spark.operators.timeseries import (  # noqa: PLC0415
-        CUSUM_HMUL,
-        CUSUM_KDIV,
-    )
-
-    k, h = mu_q // CUSUM_KDIV, CUSUM_HMUL * mu_q
 
     def update(key, pdf_iter, state):
         import numpy as np  # noqa: PLC0415
@@ -240,46 +245,15 @@ def cusum_alarms(events: DataFrame, mu_q: int) -> DataFrame:
             pdf_iter, ts="datetime64[ns]", event_id="int64", value="float64"
         )
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        # vectorized alarm-segment fold (VERDICT r10 item 2): between
-        # alarms the clipped recurrence s_i = max(0, s_{i-1} + d_i) has
-        # the closed form s_i = max(0, P_i - min(-s0, min_{u<i} P_u))
-        # (P = running sum of d), so each segment is one cumsum + one
-        # running min, and the Python loop runs once PER ALARM. Each
-        # alarm's recompute is bounded to a FIXED BLOCK (code-review
-        # r11): an adversarial batch where every row alarms would
-        # otherwise recompute O(rest-of-batch) numpy per alarm —
-        # blocking caps total work at Θ(n·BLOCK) element ops (linear
-        # in n), while the common sparse-alarm case stays ~one pass
-        # per block. Same int arithmetic as before (int64 vs unbounded
-        # Python int: the batch twin's Spark-side recurrence is BIGINT
-        # too, so the bound is shared).
         if len(pdf):
             vals = pdf["value"].to_numpy(dtype="float64")
-            d = np.floor(vals * 1000.0).astype(np.int64) - mu_q - k
-            eids = pdf["event_id"].to_numpy(dtype="int64")
-            s0, n_rows = s_carry, len(d)
-            for b0 in range(0, n_rows, _CUSUM_BLOCK):
-                b1 = min(b0 + _CUSUM_BLOCK, n_rows)
-                j = b0
-                while j < b1:
-                    p = np.cumsum(d[j:b1])
-                    m = np.minimum.accumulate(
-                        np.concatenate(([np.int64(-s0)], p[:-1]))
-                    )
-                    s = np.maximum(0, p - m)
-                    over = np.nonzero(s > h)[0]
-                    if not len(over):
-                        s0 = int(s[-1])
-                        break
-                    a = int(over[0])
-                    out["user_id"].append(user_id)
-                    out["event_id"].append(int(eids[j + a]))
-                    out["ts"].append(pdf["ts"].iloc[j + a])
-                    out["value"].append(float(vals[j + a]))
-                    out["s_q"].append(int(s[a]))
-                    s0 = 0
-                    j += a + 1
-            s_carry = s0
+            idx, out["s_q"], s_carry = cusum_fold(
+                np.floor(vals * 1000.0).astype(np.int64), mu_q, s_carry
+            )
+            out["user_id"] = [user_id] * len(idx)
+            out["event_id"] = pdf["event_id"].iloc[idx].tolist()
+            out["ts"] = list(pdf["ts"].iloc[idx])
+            out["value"] = vals[idx].tolist()
         state.update((s_carry,))
         yield pd.DataFrame(out)
 
@@ -394,7 +368,7 @@ def _read_state(spark, path: str):
         # A torn overwrite can leave a dir that still PARSES (some part
         # files committed) — a successful read is not authority. The
         # _SUCCESS marker is: it is written last by the committer, so
-        # its absence means the overwrite never finished (ADVICE r7).
+        # its absence means the overwrite never finished.
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             try:
                 df = spark.read.parquet(path)
@@ -420,8 +394,8 @@ def _read_state(spark, path: str):
 def _applied_batch(prev) -> int:
     """Last applied batch_id, None-safe: an ABSENT or EMPTY state table
     (e.g. the first micro-batch carried zero rows) means nothing was
-    applied — return -1, never compare against a None aggregate (the
-    pre-r7 folds raised TypeError and wedged the stream on replay)."""
+    applied — return -1, never compare against a None aggregate (a
+    TypeError there would wedge the stream on replay)."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     if prev is None:
@@ -462,7 +436,7 @@ def _commit_state(
     scale instead, not this.
 
     ``sort_within`` re-applies a partition-local sort to the READ-BACK
-    frame before the main write (code-review r12): the read of tmp can
+    frame before the main write: the read of tmp can
     PACK several small files into one task, whose output would
     otherwise be a concatenation of sorted runs — per-FILE sortedness
     of the committed base must be applied on the last write, not
@@ -545,38 +519,21 @@ def holt_forecasts(events: DataFrame) -> DataFrame:
     the recurrence and emits the user's refreshed one-step-ahead
     forecast — the live capacity-planning feed. On in-order input the
     emitted (level, trend, forecast) after the last batch equals the
-    batch operator's output bit-for-bit: both run the identical integer
-    recurrence (floor(err/4) level gain, floor(floor(err/4)/4) trend
-    gain, Python floor division on both paths).
+    batch operator's output bit-for-bit: each micro-batch resumes the
+    batch query's own kernel, ``holt_fold``, from the carried state.
     """
-    import math  # noqa: PLC0415
-
+    import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
-
-    from adv_big_data_indexing_spark.operators.timeseries import (  # noqa: PLC0415
-        HOLT_ADIV,
-        HOLT_BDIV,
-    )
 
     def update(key, pdf_iter, state):
         (user_id,) = key
-        if state.exists:
-            l, b, n = (int(v) for v in state.get)
-        else:
-            l, b, n = 0, 0, 0
+        l, b, n = (int(v) for v in state.get) if state.exists else (0, 0, 0)
         pdf = _concat_batches(
             pdf_iter, ts="datetime64[ns]", event_id="int64", value="float64"
         )
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        for v in pdf["value"]:
-            x = int(math.floor(float(v) * 1000.0))
-            if n == 0:
-                l, b = x, 0
-            else:
-                d = (x - l - b) // HOLT_ADIV
-                l = l + b + d
-                b = b + d // HOLT_BDIV
-            n += 1
+        xs = np.floor(pdf["value"].to_numpy(dtype="float64") * 1000.0).astype(np.int64)
+        l, b, n = holt_fold(xs.tolist(), l, b, n)
         state.update((l, b, n))
         if len(pdf):
             yield pd.DataFrame(
@@ -647,18 +604,13 @@ def holt_winters_monitor(hourly: DataFrame) -> DataFrame:
     stream of HOURLY rollup rows ``(event_type, h, x)`` (in production
     the upstream windowed pre-aggregate), with 28 bigints of state —
     4 scalars (level, trend, observation count, last hour) plus the
-    24-slot seasonal vector. Each micro-batch folds its in-order buckets into
-    the identical integer recurrence (Python floor division on both
-    paths) and emits the refreshed one-step-ahead forecast for the
-    NEXT hour slot; after the last batch the state equals the batch
-    operator's final state bit-for-bit on in-order input.
+    24-slot seasonal vector. Each micro-batch resumes the batch query's
+    own kernel, ``holt_winters_fold``, over its in-order buckets and
+    emits the refreshed one-step-ahead forecast for the NEXT hour slot;
+    after the last batch the state equals the batch operator's final
+    state bit-for-bit on in-order input.
     """
     import pandas as pd  # noqa: PLC0415
-
-    from adv_big_data_indexing_spark.operators.timeseries import (  # noqa: PLC0415
-        HW_DIV,
-        HW_PERIOD,
-    )
 
     def update(key, pdf_iter, state):
         (event_type,) = key
@@ -667,22 +619,12 @@ def holt_winters_monitor(hourly: DataFrame) -> DataFrame:
             l, b, n, last_h = (int(v) for v in row[:4])
             s = [int(v) for v in row[4]]
         else:
-            l, b, n, last_h = 0, 0, 0, -1
-            s = [0] * HW_PERIOD
+            l, b, n, last_h, s = 0, 0, 0, -1, None
         pdf = _concat_batches(pdf_iter, h="int64", x="int64")
         pdf = pdf.sort_values("h").reset_index(drop=True)
-        for h, x in zip((int(v) for v in pdf["h"]), (int(v) for v in pdf["x"])):
-            if n == 0:
-                l, b = x, 0
-            else:
-                i = h % HW_PERIOD
-                s_i = s[i]
-                l_new = l + b + (x - l - b - s_i) // HW_DIV
-                b = b + (l_new - l - b) // HW_DIV
-                s[i] = s_i + (x - l_new - s_i) // HW_DIV
-                l = l_new
-            n += 1
-            last_h = h
+        hs = pdf["h"].tolist()
+        l, b, n, s, _ = holt_winters_fold(hs, pdf["x"].tolist(), l, b, n, s)
+        last_h = hs[-1] if hs else last_h
         state.update((l, b, n, last_h, s))
         if len(pdf):
             nxt = (last_h + 1) % HW_PERIOD
@@ -780,7 +722,7 @@ def lttb_window_monitor(
             (list(c) for c in state.get) if state.exists else ([], [], [], [])
         )
         # pure columnwise append — no carry, so fully vectorized
-        # (VERDICT r10 item 2; per-row A/B in docs/EXPANSION_SITES.md)
+        # (per-row A/B in docs/EXPANSION_SITES.md)
         for pdf in pdf_iter:
             if not len(pdf):
                 continue
@@ -832,7 +774,7 @@ def locf_monitor(events: DataFrame) -> DataFrame:
     every empty bucket in between emitted as a carried-forward gap row —
     TimescaleDB's time_bucket_gapfill/locf as an incremental recurrence.
 
-    Out-of-order hardened (ADVICE r6): a row whose bucket is BEHIND the
+    Out-of-order hardened: a row whose bucket is BEHIND the
     pending bucket but at-or-after the user's FIRST chain bucket arrives
     only via a late micro-batch — its bucket's row (observed or gap) is
     already in the append sink, so re-emitting would write a second,
@@ -840,7 +782,7 @@ def locf_monitor(events: DataFrame) -> DataFrame:
     and counted in state (``n_late``, the monitor's lateness observable
     — the same drop-and-count contract as Spark's own watermark on
     append sinks). A late row EARLIER than the first chain bucket
-    (ADVICE r7) has nothing in the sink to contradict — those buckets
+    has nothing in the sink to contradict — those buckets
     were never emitted — so it is EMITTED: the batch's prefix events
     (last-wins per bucket) flush at end-of-batch as observed rows plus
     carried-forward gaps up to the old first bucket, exactly the rows
@@ -855,7 +797,7 @@ def locf_monitor(events: DataFrame) -> DataFrame:
 
     State is six bigints per user: pending bucket, its carried value,
     the (ts_us, event_id) of the winning observation, the late-drop
-    count, and the first chain bucket. State-schema v3 (r8; v2 lacked
+    count, and the first chain bucket. State-schema v3 (v2 lacked
     first_bucket, v1 was two bigints): a query restarted from an older
     checkpoint fails Spark's state-store schema check — start with a
     fresh checkpoint directory after upgrading (the pending bucket
@@ -893,7 +835,7 @@ def locf_monitor(events: DataFrame) -> DataFrame:
             pdf_iter, ts="datetime64[ns]", event_id="int64", value="float64"
         )
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        # vectorized per-row reduction (VERDICT r10 item 2): buckets are
+        # vectorized per-row reduction: buckets are
         # MONOTONE in the (ts, event_id)-sorted batch, so the running
         # prefix/late/chain classification collapses to two searchsorted
         # splits against the carried (first_b, pend_b), last-wins per
@@ -960,9 +902,8 @@ def locf_monitor(events: DataFrame) -> DataFrame:
         if pend_b is not None:
             # a fresh key whose delivery yielded zero rows has no chain
             # to record — skip the update so the fold is total on the
-            # empty-iterator edge like every other twin (code-review
-            # r11: int(None) crashed here after _concat_batches made
-            # the concat itself total)
+            # empty-iterator edge like every other twin (int(None)
+            # would crash here on such a delivery)
             state.update(
                 (
                     int(pend_b), int(pend_x), int(pend_ts), int(pend_eid),
@@ -995,7 +936,7 @@ def rate_flag_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
     """Streaming twin of ``ts_sliding_rate_flags`` (operators/
     timeseries.py): per user, each event's trailing-``RATE_WINDOW_SEC``
     event count, flagged past ``RATE_LIMIT`` — the online rate limiter /
-    burst detector (VERDICT r7 item 8).
+    burst detector.
 
     Event-time semantics under an allowed lateness of ``delay_sec``:
 
@@ -1004,9 +945,9 @@ def rate_flag_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
       trailing count provably complete (the batch RANGE frame counts
       PEERS at the same second too, and while ``max_sec`` merely equals
       ``sec + delay_sec`` a peer at exactly ``sec`` is still inside
-      tolerance, so finalizing then would be premature — ADVICE r8
-      boundary fix, mirroring Spark's own watermark which keeps rows AT
-      the watermark and drops strictly older). Finalized flags equal
+      tolerance, so finalizing then would be premature — mirroring
+      Spark's own watermark which keeps rows AT the watermark and drops
+      strictly older). Finalized flags equal
       the batch operator's rows restricted to each user's finalized
       horizon, bit-for-bit.
     - A late event INSIDE the horizon (sec ≥ max_sec − delay) slots
@@ -1046,10 +987,9 @@ def rate_flag_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
 
         pdf = _concat_batches(pdf_iter, ts="datetime64[ns]", event_id="int64")
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        # lateness partition, vectorized (VERDICT r9 item 6: this was
-        # the last per-row Python loop in a hot kernel — same numpy
-        # mask idiom as the finalize step below; A/B on a 100k-row
-        # batch: iterrows 3099 ms -> 0.8 ms, BASELINE.md r10)
+        # lateness partition, vectorized with the same numpy mask
+        # idiom as the finalize step below (A/B on a 100k-row batch:
+        # iterrows 3099 ms -> 0.8 ms, BASELINE.md)
         b_ts = pdf["ts"].to_numpy(dtype="datetime64[ns]").view(np.int64) // 1000
         b_eid = pdf["event_id"].to_numpy(dtype=np.int64)
         b_sec = b_ts // 1_000_000
@@ -1072,10 +1012,9 @@ def rate_flag_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
             order = np.lexsort((a_eid[fin], a_ts[fin]))
             f_sec, f_eid, f_ts = a_sec[fin][order], a_eid[fin][order], a_ts[fin][order]
             # trailing counts via two searchsorted sweeps on the sorted
-            # second array (VERDICT r10 item 2): the old per-row mask
-            # re-scanned the WHOLE buffer per finalized event — Θ(n·m)
-            # numpy where this is Θ((n+m)·log m) total, and no Python
-            # loop at all
+            # second array: Θ((n+m)·log m) total and no Python loop,
+            # where a per-event mask would re-scan the WHOLE buffer
+            # per finalized event — Θ(n·m)
             srt = np.sort(a_sec)
             n_tr = np.searchsorted(srt, f_sec, side="right") - np.searchsorted(
                 srt, f_sec - RATE_WINDOW_SEC, side="right"
@@ -1145,10 +1084,10 @@ def markov_transition_deltas(events: DataFrame) -> DataFrame:
             pdf_iter, ts="datetime64[ns]", event_id="int64", event_type="object"
         )
         pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        # vectorized chain advance (VERDICT r10 item 2): on the sorted
-        # batch the running (last_ts, last_eid) carry reduces to (a) a
-        # mask against the carried chain head, plus (b) adjacent-equal
-        # in-batch duplicates, which the per-row fold also counted late;
+        # vectorized chain advance: on the sorted batch the running
+        # (last_ts, last_eid) carry reduces to (a) a mask against the
+        # carried chain head, plus (b) adjacent-equal in-batch
+        # duplicates, which count as late like any row not past the head;
         # the transition pairs are then a plain shift of the live types
         n = len(pdf)
         if n:
@@ -1223,19 +1162,11 @@ def run_streaming_markov(
 
 
 def streaming_markov_result(spark, state_dir: str) -> DataFrame:
-    """Transition probabilities from the maintained count matrix — the
-    same (n, p = n / Σ_from n) shape as the batch operator, so after a
-    drain the two are comparable row-for-row."""
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
-    t = spark.read.parquet(state_dir).drop("batch_id")
-    total = Window.partitionBy("from_state")
-    return t.select(
-        "from_state",
-        "to_state",
-        "n",
-        (F.col("n").cast("double") / F.sum("n").over(total)).alias("p"),
-    )
+    """Transition probabilities from the maintained count matrix through
+    the batch finisher ``transition_probabilities``
+    (operators/timeseries.py), so after a drain the streaming and batch
+    tables agree row-for-row."""
+    return transition_probabilities(spark.read.parquet(state_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1259,8 +1190,8 @@ _FUNNEL_STEPS = ("signup", "click", "purchase")
 def funnel_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
     """Streaming twin of ``ts_funnel`` (operators/timeseries.py): per
     user, min signup time, first click strictly after it, first purchase
-    strictly after that — the ordered multi-step funnel (VERDICT r8
-    item 5: out-of-order STEP arrival is the genuinely stateful part —
+    strictly after that — the ordered multi-step funnel (out-of-order
+    STEP arrival is the genuinely stateful part —
     a late-but-in-tolerance signup can retro-qualify a click already
     buffered, which can retro-qualify a purchase).
 
@@ -1308,10 +1239,9 @@ def funnel_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
         pdf = _concat_batches(
             pdf_iter, ts="datetime64[ns]", event_id="int64", event_type="object"
         )
-        # vectorized ingest (VERDICT r10 item 2): the per-row carry here
-        # was only max_us, and max() is order-free — mask the late rows
-        # against the PRE-BATCH horizon (exactly what the fold compared
-        # against: horizon_old never moves mid-batch), then buffer the
+        # vectorized ingest: the only per-row carry is max_us, and max()
+        # is order-free — mask the late rows against the PRE-BATCH
+        # horizon (horizon_old never moves mid-batch), then buffer the
         # step rows columnwise
         if len(pdf):
             b_us = pdf["ts"].to_numpy(dtype="datetime64[ns]").view("int64") // 1000
@@ -1343,7 +1273,7 @@ def funnel_monitor(events: DataFrame, delay_sec: int = 3600) -> DataFrame:
             horizon_new = max_us - delay_us
             buf.sort()
             changed = False
-            # closed-form fold (VERDICT r10 item 2): the in-order
+            # closed-form fold: the in-order
             # each-slot-sets-once recurrence IS the chained min — sig =
             # min finalized signup, clk = min finalized click with
             # ts > sig, pur = min finalized purchase with ts > clk (an
@@ -1415,7 +1345,7 @@ def run_streaming_seasonal(
     checkpoint_dir: str,
     delay_hours: int = 1,
 ) -> "StreamingQuery":
-    """Streaming twin of ``ts_seasonal_decompose`` (VERDICT r6 item 7):
+    """Streaming twin of ``ts_seasonal_decompose``:
     watermark-bounded incremental maintenance of the hourly series, the
     trend/detrended rows, and (through them) the hour-of-day seasonal
     index, in ``foreachBatch`` with the exactly-once batch_id guard of
@@ -1587,31 +1517,13 @@ def run_streaming_hll(
     aggregate of the batch — live cardinality dashboards over a
     100 TB/day stream without re-scanning history.
     """
-    from adv_big_data_indexing_spark.operators.udfs import (
-        _SPARK_BUCKET,
-        _SPARK_HEX,
-    )
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         prev = _read_state(spark, state_dir)
-        delta = (
-            batch.selectExpr(
-                "event_type AS g", "md5(CAST(user_id AS STRING)) AS h"
-            )
-            .selectExpr(
-                "g",
-                f"({_SPARK_BUCKET}) AS bucket",
-                f"({_SPARK_HEX}) AS hv",
-            )
-            .selectExpr(
-                "g",
-                "bucket",
-                "CASE WHEN hv = 0 THEN 53"
-                " ELSE 53 - length(trim(LEADING '0' FROM bin(hv))) END AS rho",
-            )
-            .groupBy("g", "bucket")
-            .agg(F.max("rho").alias("mj"))
+        delta = hll_registers(
+            batch.selectExpr("event_type AS g", "md5(CAST(user_id AS STRING)) AS h"),
+            ("g",),
         )
         merged = _merge_state(prev, delta, ("g", "bucket"), "mj", F.greatest)
         _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
@@ -1621,29 +1533,13 @@ def run_streaming_hll(
 
 def streaming_hll_result(spark, state_dir: str) -> DataFrame:
     """Distinct-user estimate per event type from the maintained
-    registers — the identical estimator expression as the batch
-    portable sketch, so on the same data the streaming and batch
+    registers through the batch finisher ``hll_estimate``
+    (operators/udfs.py), so on the same data the streaming and batch
     estimates agree bit-for-bit (tests/test_streaming.py)."""
-    from adv_big_data_indexing_spark.operators.udfs import _HLL_ESTIMATE, HLL_M
-
     st = _read_state(spark, state_dir)
     if st is None:
         return spark.createDataFrame([], "event_type string, approx_nd double")
-    agg = st.groupBy("g").agg(
-        F.sum(
-            F.expr(
-                "CASE WHEN mj <= 50 THEN shiftleft(CAST(1 AS BIGINT), 50 - mj)"
-                " ELSE 0 END"
-            )
-        ).alias("s_present"),
-        F.count("*").alias("n_buckets"),
-    )
-    return agg.selectExpr(
-        "g AS event_type",
-        f"s_present + ({HLL_M} - n_buckets)"
-        " * shiftleft(CAST(1 AS BIGINT), 50) AS sum_total",
-        f"{HLL_M} - n_buckets AS zeros",
-    ).selectExpr("event_type", _HLL_ESTIMATE)
+    return hll_estimate(st, ("g",)).withColumnRenamed("g", "event_type")
 
 
 #: Compact the survival frontier's delta log into its base table once
@@ -1705,19 +1601,11 @@ def run_streaming_survival(
     way — a duplicate delta file would double-count; their single-table
     guarded commit IS their correctness.
     """
-    from adv_big_data_indexing_spark.functions.exact import epoch_us
     from adv_big_data_indexing_spark.streaming import statelog
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        delta = batch.groupBy("user_id").agg(
-            (
-                (epoch_us(F.max("ts")) - epoch_us(F.max("ts")) % 86_400_000_000)
-                / 86_400_000_000
-            )
-            .cast("bigint")
-            .alias("day")
-        )
+        delta = churn_frontier(batch)
         # Θ(batch) append at AQE's natural partitioning; the compaction
         # trigger counts delta BATCHES, not part files (statelog.py)
         statelog.append_delta(delta, state_dir, batch_id)
@@ -1734,58 +1622,21 @@ def run_streaming_survival(
 
 
 def streaming_survival_result(spark, state_dir: str) -> DataFrame:
-    """KM survival curve from the maintained per-user frontier — the
-    identical day/risk/term expressions as the batch ``ts_survival_km``
-    (operators/timeseries.py), so on the same data the streaming and
-    batch curves agree exactly (tests/test_streaming.py)."""
-    from pyspark.sql import Window
-
-    from adv_big_data_indexing_spark.functions.exact import ilog2_q4
-
+    """KM survival curve from the maintained per-user frontier through
+    the batch finisher ``km_curve`` (operators/timeseries.py), so on the
+    same data the streaming and batch curves agree exactly
+    (tests/test_streaming.py)."""
     churn = _survival_frontier(spark, state_dir)
     if churn is None:
         return spark.createDataFrame(
             [], "day bigint, n_risk bigint, n_churn bigint, log_s_q4 bigint"
         )
-    days = churn.groupBy("day").agg(F.count("*").alias("n_churn"))
-    n_users = churn.select(F.count("*").alias("n_users"))
-    w = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    risk = days.crossJoin(F.broadcast(n_users)).select(
-        "day",
-        "n_churn",
-        (
-            F.col("n_users") - (F.sum("n_churn").over(w) - F.col("n_churn"))
-        ).alias("n_risk"),
-    )
-    alive = F.col("n_risk") > F.col("n_churn")
-    terms = risk.select(
-        "day",
-        "n_risk",
-        "n_churn",
-        F.when(
-            alive,
-            ilog2_q4(F.col("n_risk") - F.col("n_churn"))
-            - ilog2_q4(F.col("n_risk")),
-        )
-        .otherwise(0)
-        .alias("term"),
-    )
-    return terms.select(
-        "day",
-        F.col("n_risk").cast("bigint").alias("n_risk"),
-        F.col("n_churn").cast("bigint").alias("n_churn"),
-        F.when(alive, F.sum("term").over(w).cast("bigint"))
-        .otherwise(F.lit(None))
-        .alias("log_s_q4"),
-    )
+    return km_curve(churn)
 
 
 # ---------------------------------------------------------------------------
-# streaming funnel maintenance (the hardest streaming twin — VERDICT r9
-# item 3, carried from r8: ordered multi-step state with out-of-order
-# step arrival)
+# streaming funnel maintenance (the hardest streaming twin: ordered
+# multi-step state with out-of-order step arrival)
 # ---------------------------------------------------------------------------
 
 #: default lateness tolerance for the funnel twin (events behind a
@@ -1804,35 +1655,6 @@ def _funnel_log_rows(spark, state_dir: str) -> DataFrame:
     from adv_big_data_indexing_spark.streaming import statelog
 
     return statelog.read_set_log(spark, state_dir, _FUNNEL_LOG_SCHEMA)
-
-
-def _funnel_stages(log: DataFrame):
-    """(s, c, p) per-user stage frames from funnel log rows: min signup,
-    min click strictly after it, min purchase strictly after that — the
-    identical chained-min shape as the batch ``ts_funnel``, evaluated
-    over the log's candidate/frontier value rows. Exact under ANY
-    arrival order: the log is a join-semilattice (min/union/recompute),
-    so merge order cannot change the result."""
-    s = (
-        log.filter(F.col("kind") == "s")
-        .groupBy("user_id")
-        .agg(F.min("val").alias("signup_us"))
-    )
-    c = (
-        log.filter(F.col("kind") == "c")
-        .join(s, "user_id")
-        .filter(F.col("val") > F.col("signup_us"))
-        .groupBy("user_id")
-        .agg(F.min("val").alias("click_us"))
-    )
-    p = (
-        log.filter(F.col("kind") == "p")
-        .join(c, "user_id")
-        .filter(F.col("val") > F.col("click_us"))
-        .groupBy("user_id")
-        .agg(F.min("val").alias("purchase_us"))
-    )
-    return s, c, p
 
 
 def _funnel_compacted(log: DataFrame, delay_us: int) -> DataFrame:
@@ -1964,7 +1786,7 @@ def run_streaming_funnel(
     Θ(batch) appends; compaction amortized Θ(state)/fanin. At cluster
     scale the log should additionally be BUCKETED by user_id so the
     frontier probe and the read-side stage joins co-locate. That lever
-    was EXECUTED in r11 on the sibling with the heavier per-batch index
+    is applied on the sibling with the heavier per-batch index
     terms — the dedup index (streaming/corpus.py: broadcast semi
     prunes + dk-partitioned sigs base, measured at a 10⁶-doc index in
     BASELINE.md "Statelog bucketing lever"); the same two moves
@@ -2093,24 +1915,10 @@ def run_streaming_funnel(
 
 
 def streaming_funnel_result(spark, state_dir: str) -> DataFrame:
-    """The funnel table from the maintained log — identical chained-min
-    expressions as the batch ``ts_funnel`` (operators/timeseries.py),
-    so on the same accepted events the streaming and batch rows agree
-    exactly."""
-    log = _funnel_log_rows(spark, state_dir)
-    s, c, p = _funnel_stages(log)
-    return (
-        s.join(c, "user_id", "left")
-        .join(p, "user_id", "left")
-        .select(
-            "user_id",
-            "signup_us",
-            "click_us",
-            "purchase_us",
-            F.col("click_us").isNotNull().alias("reached_click"),
-            F.col("purchase_us").isNotNull().alias("reached_purchase"),
-        )
-    )
+    """The funnel table from the maintained log through the batch
+    finisher ``funnel_table`` (operators/timeseries.py), so on the same
+    accepted events the streaming and batch rows agree exactly."""
+    return funnel_table(_funnel_log_rows(spark, state_dir))
 
 
 def streaming_funnel_late(spark, state_dir: str) -> DataFrame:
@@ -2135,9 +1943,6 @@ RETENTION_COMPACT_FANIN = 8
 
 _RETENTION_LOG_SCHEMA = "user_id bigint, kind string, val bigint"
 
-#: the batch op's window: offsets beyond this never appear in the result
-RETENTION_MAX_OFFSET = 7
-
 
 def _retention_log_rows(spark, state_dir: str) -> DataFrame:
     """The row set the retention log denotes (shared set-log reader)."""
@@ -2159,6 +1964,21 @@ def _retention_state(log: DataFrame):
         "user_id", F.col("val").alias("day")
     ).distinct()
     return first, days
+
+
+def _retention_window_rows(first: DataFrame, days: DataFrame) -> DataFrame:
+    """Log rows for a (first, days) state: one ``f`` row per user's
+    cohort day, and the ``d`` rows within RETENTION_MAX_OFFSET days of
+    it. A batch's delta is these rows of the batch's own state, and a
+    compaction's base is these rows of the merged log's state."""
+    d_rows = (
+        days.join(first, "user_id")
+        .filter(F.col("day") <= F.col("cohort_day") + RETENTION_MAX_OFFSET)
+        .select("user_id", F.lit("d").alias("kind"), F.col("day").alias("val"))
+    )
+    return first.select(
+        "user_id", F.lit("f").alias("kind"), F.col("cohort_day").alias("val")
+    ).unionByName(d_rows)
 
 
 def run_streaming_retention_log(
@@ -2195,12 +2015,11 @@ def run_streaming_retention_log(
       day, so they are never emitted at all — the batch-local window
       is already the conservative superset).
 
-    The read side (``streaming_retention_log_result``) is the batch
-    ``ts_retention_cohort``'s own expressions over the merged state:
-    cohort = min f, offsets = d days with day − cohort ≤ 7, distinct
-    users per (cohort_day, day_offset).
+    Each batch's delta is built from the batch query's own
+    ``retention_state`` over the micro-batch, and the read side
+    (``streaming_retention_log_result``) is its finisher
+    ``retention_table`` over the merged state (operators/timeseries.py).
     """
-    from adv_big_data_indexing_spark.functions.exact import epoch_us
     from adv_big_data_indexing_spark.streaming import statelog
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -2212,44 +2031,19 @@ def run_streaming_retention_log(
         statelog.check_layout(
             state_dir, f"retention_max_offset={RETENTION_MAX_OFFSET}"
         )
-        daily = batch.select(
-            "user_id",
-            (epoch_us(F.col("ts")) / F.lit(86_400_000_000))
-            .cast("bigint")
-            .alias("day"),
-        ).distinct()
-        first_b = daily.groupBy("user_id").agg(F.min("day").alias("fb"))
-        d_rows = (
-            daily.join(first_b, "user_id")
-            .filter(F.col("day") <= F.col("fb") + RETENTION_MAX_OFFSET)
-            .select("user_id", F.lit("d").alias("kind"), F.col("day").alias("val"))
+        statelog.append_delta(
+            _retention_window_rows(*retention_state(batch)), state_dir, batch_id
         )
-        delta = first_b.select(
-            "user_id", F.lit("f").alias("kind"), F.col("fb").alias("val")
-        ).unionByName(d_rows)
-        statelog.append_delta(delta, state_dir, batch_id)
-
-        def merged_retention():
-            log = _retention_log_rows(spark, state_dir)
-            first, days = _retention_state(log)
-            keep_d = (
-                days.join(first, "user_id")
-                .filter(
-                    F.col("day")
-                    <= F.col("cohort_day") + RETENTION_MAX_OFFSET
-                )
-                .select(
-                    "user_id", F.lit("d").alias("kind"), F.col("day").alias("val")
-                )
-            )
-            return first.select(
-                "user_id", F.lit("f").alias("kind"), F.col("cohort_day").alias("val")
-            ).unionByName(keep_d)
-
         # shared trigger + zero-row partitioned-commit guard
         # (statelog.maybe_compact)
         statelog.maybe_compact(
-            spark, state_dir, merged_retention, batch_id, compact_fanin,
+            spark,
+            state_dir,
+            lambda: _retention_window_rows(
+                *_retention_state(_retention_log_rows(spark, state_dir))
+            ),
+            batch_id,
+            compact_fanin,
             partition_by="kind",
         )
 
@@ -2257,16 +2051,7 @@ def run_streaming_retention_log(
 
 
 def streaming_retention_log_result(spark, state_dir: str) -> DataFrame:
-    """The cohort-retention table from the maintained log — identical
-    expressions as the batch ``ts_retention_cohort``
-    (operators/timeseries.py), so on the same events the streaming and
-    batch tables agree exactly."""
-    first, days = _retention_state(_retention_log_rows(spark, state_dir))
-    j = days.join(first, "user_id").withColumn(
-        "day_offset", F.col("day") - F.col("cohort_day")
-    )
-    return (
-        j.filter(F.col("day_offset") <= RETENTION_MAX_OFFSET)
-        .groupBy("cohort_day", "day_offset")
-        .agg(F.countDistinct("user_id").alias("active_users"))
-    )
+    """The cohort-retention table from the maintained log through the
+    batch finisher ``retention_table`` (operators/timeseries.py), so on
+    the same events the streaming and batch tables agree exactly."""
+    return retention_table(*_retention_state(_retention_log_rows(spark, state_dir)))

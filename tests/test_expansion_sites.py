@@ -19,6 +19,7 @@ from __future__ import annotations
 import ast
 import os
 import re
+from collections import Counter
 
 import pytest
 
@@ -430,33 +431,73 @@ STREAMING = os.path.join(PKG, "streaming")
 #: through non-associative integer ops — no prefix-sum / masked-min /
 #: segment closed form exists). Everything else was vectorized in r11;
 #: docs/EXPANSION_SITES.md §"Per-row state folds" carries the A/B
-#: numbers (tools/probe_fold_vectorization.py).
+#: numbers (tools/probe_fold_vectorization.py). Value: the number of
+#: such loops, so a further loop in a listed function is not hidden.
 ORDER_DEPENDENT_FOLDS = {
     # l,b carry: d = (x-l-b) DIV A; l += b+d; b += d DIV B — each step's
     # floor divisions feed the next level/trend, non-associative
-    ("streaming/events.py", "holt_forecasts"),
+    ("operators/timeseries.py", "holt_fold"): 1,
     # same recurrence plus the rotating seasonal register s[h % P]
-    ("streaming/events.py", "holt_winters_monitor"),
+    ("operators/timeseries.py", "holt_winters_fold"): 1,
 }
 
 #: non-per-row loops inside ``update`` functions, classified: iteration
 #: count is output-, alarm-, bucket- or chunk-sized — NOT batch-row-sized.
+#: Value: the number of such loops.
 CLASSIFIED_FOLD_LOOPS = {
-    # one iteration per ALARM (closed-form cumsum/runmin per segment;
-    # an alarm resets s to 0 and needs > h fresh drift to re-fire)
-    ("streaming/events.py", "cusum_alarms"),
+    # per-BLOCK outer loop, and one inner iteration per ALARM
+    # (closed-form cumsum/runmin per segment; an alarm resets s to 0
+    # and needs > h fresh drift to re-fire)
+    ("operators/timeseries.py", "cusum_fold"): 2,
     # chain advance over DISTINCT buckets + gap emits (the emits ARE
     # the operator's output rows), incl. the pre-first prefix flush
-    ("streaming/events.py", "locf_monitor"),
+    ("streaming/events.py", "locf_monitor"): 5,
 }
+
+
+#: module-level kernels a streaming ``update`` hands its batch rows to
+#: (the batch twin runs the same kernel). Their loops are scanned like
+#: ``update`` bodies; a loop over one of the kernel's parameters
+#: iterates the batch rows and counts as per-row.
+SHARED_FOLD_KERNELS = {
+    ("operators/timeseries.py", "holt_fold"),
+    ("operators/timeseries.py", "holt_winters_fold"),
+    ("operators/timeseries.py", "cusum_fold"),
+}
+
+
+def _kernel_loops():
+    """(relfile, kernel, kind, lineno) for every For/While loop and
+    every iterrows/itertuples/apply call in SHARED_FOLD_KERNELS."""
+    out = []
+    for rel, fn in sorted(SHARED_FOLD_KERNELS):
+        tree = ast.parse(open(os.path.join(PKG, rel)).read())
+        node = next(
+            (n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == fn),
+            None,
+        )
+        assert node is not None, f"shared fold kernel {rel}:{fn} not found"
+        params = {a.arg for a in node.args.args}
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Call) and isinstance(
+                sub.func, ast.Attribute
+            ) and sub.func.attr in ("iterrows", "itertuples", "apply"):
+                out.append((rel, fn, "pandas-row-api", sub.lineno))
+            if isinstance(sub, (ast.For, ast.While)):
+                src = sub.iter if isinstance(sub, ast.For) else sub.test
+                names = {n.id for n in ast.walk(src) if isinstance(n, ast.Name)}
+                kind = "per-row" if names & params else "other"
+                out.append((rel, fn, kind, sub.lineno))
+    return out
 
 
 def _update_loops():
     """Yield (relfile, outer_fn, kind, lineno) for every For/While loop
     and every iterrows/itertuples/apply call inside an ``update``
-    function in streaming modules. kind: 'chunk' (over pdf_iter),
-    'per-row' (iterates a pdf column / pandas row API), 'other'."""
-    out = []
+    function in streaming modules, and in the shared fold kernels they
+    call. kind: 'chunk' (over pdf_iter), 'per-row' (iterates a pdf
+    column / pandas row API / a kernel's row parameter), 'other'."""
+    out = _kernel_loops()
     for fname in sorted(os.listdir(STREAMING)):
         if not fname.endswith(".py"):
             continue
@@ -507,9 +548,10 @@ def test_every_state_fold_loop_is_classified():
     fold is the same anti-pattern class as the r10 rate-flag iterrows
     (3099 ms → 0.8 ms) — at production batch sizes it serializes the
     whole batch through the interpreter. Every loop inside an
-    applyInPandasWithState ``update`` must be (a) chunk-level (over
-    pdf_iter), (b) a documented ORDER-DEPENDENT recurrence, or (c) a
-    classified non-row-sized loop (per-alarm / per-bucket / per-day).
+    applyInPandasWithState ``update``, or inside a shared kernel it
+    hands its rows to, must be (a) chunk-level (over pdf_iter), (b) a
+    documented ORDER-DEPENDENT recurrence, or (c) a classified
+    non-row-sized loop (per-alarm / per-bucket / per-day).
     iterrows/itertuples/apply are banned outright — all eight r10 sites
     were vectorized bit-identically (tools/probe_fold_vectorization.py,
     16-127x)."""
@@ -519,8 +561,8 @@ def test_every_state_fold_loop_is_classified():
         f"iterrows/itertuples/apply inside update(): {row_api} — "
         "vectorize (see docs/EXPANSION_SITES.md per-row-fold section)"
     )
-    per_row = {(f, fn) for f, fn, k, _ in loops if k == "per-row"}
-    new_row = per_row - ORDER_DEPENDENT_FOLDS
+    per_row = Counter((f, fn) for f, fn, k, _ in loops if k == "per-row")
+    new_row = set(per_row) - set(ORDER_DEPENDENT_FOLDS)
     assert not new_row, (
         f"NEW per-row Python fold(s) {sorted(new_row)} — vectorize "
         "(prefix sums / masked mins / segment closed form; see "
@@ -528,16 +570,30 @@ def test_every_state_fold_loop_is_classified():
         "order-dependent carry in ORDER_DEPENDENT_FOLDS and "
         "docs/EXPANSION_SITES.md"
     )
-    other = {(f, fn) for f, fn, k, _ in loops if k == "other"}
-    new_other = other - CLASSIFIED_FOLD_LOOPS
+    other = Counter((f, fn) for f, fn, k, _ in loops if k == "other")
+    new_other = set(other) - set(CLASSIFIED_FOLD_LOOPS)
     assert not new_other, (
         f"unclassified loop(s) in update(): {sorted(new_other)} — "
         "classify the iteration count (output/alarm/bucket-sized) in "
         "CLASSIFIED_FOLD_LOOPS and docs/EXPANSION_SITES.md"
     )
     # and the allowlists must not go stale
-    gone = (ORDER_DEPENDENT_FOLDS - per_row) | (CLASSIFIED_FOLD_LOOPS - other)
+    gone = (set(ORDER_DEPENDENT_FOLDS) - set(per_row)) | (
+        set(CLASSIFIED_FOLD_LOOPS) - set(other)
+    )
     assert not gone, f"allowlisted fold loops no longer in source: {sorted(gone)}"
+    # nor may a listed function grow a loop nobody classified
+    recount = {
+        key: (n, found[key])
+        for listed, found in ((ORDER_DEPENDENT_FOLDS, per_row), (CLASSIFIED_FOLD_LOOPS, other))
+        for key, n in listed.items()
+        if found[key] != n
+    }
+    assert not recount, (
+        f"loop count changed in classified fold(s) {recount} (listed, found) — "
+        "classify each loop in ORDER_DEPENDENT_FOLDS/CLASSIFIED_FOLD_LOOPS "
+        "and docs/EXPANSION_SITES.md"
+    )
 
 
 def test_doc_lists_every_fold_loop():

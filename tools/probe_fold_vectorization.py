@@ -10,22 +10,30 @@ the vectorization) so the probe both TIMES the change and asserts the
 new outputs and carried state are identical to the old on adversarial
 random input far larger than the unit-test fixtures.
 
+The Holt, Holt-Winters and CUSUM ``update`` bodies hand their rows to
+kernels in ``operators/timeseries.py`` (``holt_fold``,
+``holt_winters_fold``, ``cusum_fold``) that the batch twins run too.
+Only ``streaming/events.py`` is loaded from the old ref, so an old
+``update`` runs its own inline loop while the new one runs the working
+tree's kernel: the probe compares the two through ``update``.
+
 Usage: python tools/probe_fold_vectorization.py [old_ref] [n_rows]
 """
 
 from __future__ import annotations
 
 import importlib.util
+import os
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 import pandas as pd
 
-REPO = "/root/repo"
 EVENTS_REL = "adv_big_data_indexing_spark/streaming/events.py"
 
 
@@ -165,6 +173,12 @@ def main() -> None:
     def cusum(m, ch):
         m.cusum_alarms(ch, mu_q=50_000)
 
+    def holt(m, ch):
+        m.holt_forecasts(ch)
+
+    def holt_winters(m, ch):
+        m.holt_winters_monitor(ch)
+
     def locf(m, ch):
         m.locf_monitor(ch)
 
@@ -181,7 +195,25 @@ def main() -> None:
         m.rate_flag_monitor(ch, delay_sec=3600)
 
     _compare("anomaly_zscores", cap(old, anomaly), cap(new, anomaly), b_num)
-    _compare("cusum_alarms", cap(old, cusum), cap(new, cusum), b_num)
+    _compare("cusum_alarms(cusum_fold)", cap(old, cusum), cap(new, cusum), b_num)
+    _compare("holt_forecasts(holt_fold)", cap(old, holt), cap(new, holt), b_num)
+    # hourly rollup rows: increasing hours with gaps, signed sums
+    rng = np.random.RandomState(5)
+    hours = np.cumsum(rng.randint(1, 4, 2 * n)) + 400_000
+    b_hourly = [
+        pd.DataFrame({"h": hours[i::2][: n // 2], "x": rng.randint(-10**7, 10**7, n // 2)})
+        .sort_values("h")
+        .reset_index(drop=True)
+        for i in (0, 1)
+    ]
+    b_hourly[1]["h"] += int(b_hourly[0]["h"].max())
+    _compare(
+        "holt_winters_monitor(holt_winters_fold)",
+        cap(old, holt_winters),
+        cap(new, holt_winters),
+        b_hourly,
+        key=("click",),
+    )
     _compare("locf_monitor", cap(old, locf), cap(new, locf), b_num)
     _compare(
         "markov_transition_deltas", cap(old, markov), cap(new, markov), b_typ
