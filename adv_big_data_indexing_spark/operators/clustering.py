@@ -315,8 +315,9 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame and unrolled K×DIM distance terms into SQL text; Catalyst
     re-analysis of those ~2500-node trees per materialization was 9.7 s
     of an sf0.1 bench run that executes in 0.8 s — a data-size-invariant
-    driver floor that the Arrow kernel removes (plans/r13/
-    ns_semdedup_kmeans_{before,after}.txt). Per-batch partial sums also
+    driver floor that the Arrow kernel removes (plan dumps
+    ns_semdedup_kmeans_{before,after}.txt under plans/r13/ at commit
+    de0daac). Per-batch partial sums also
     replace the 64× ``posexplode`` shuffle: only (cluster, dim) partial
     rows cross the exchange (guide §2.3 aggregate-before-shuffle)."""
     import numpy as np  # noqa: PLC0415

@@ -456,11 +456,12 @@ def ns_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scalar the teleport term needs — on a large graph this is one
     # metadata-cheap count, not a collect
 
-    # r13 optimization round: outw / inbound / nodes are bounded by
+    # outw / inbound / nodes are bounded by
     # |nation| = 25 — a SCHEMA constant of THIS aggregated graph, not a
     # data size — but the checkpointed edge lineage loses size stats and
     # the planner degraded all six per-iteration joins to SortMergeJoin
-    # (16 SMJs / 28 Exchanges, plans/r13/ns_graph_pagerank_before.txt).
+    # (16 SMJs / 28 Exchanges; plans/r13/ns_graph_pagerank_before.txt at
+    # commit de0daac).
     # Explicit broadcast hints restore BroadcastHashJoin on those three
     # (guide §3.1: estimates are often wrong after checkpoints — hint
     # when you KNOW a side is small); an interleaved min-of-4 A/B at

@@ -23,8 +23,9 @@ same rows in place. Tables:
   (payload = canonical JSON of the fragment)
 
 Scale: each table is a projection of the input scan; edges/entities
-union-all without shuffles. Partition the entity store by object_type,
-bucket by id for point lookups.
+union-all without shuffles. Nothing stores the tables: the document
+indexer keeps only the nested search projection, and readers shred it
+where they read it (``operators/search.py``).
 """
 
 from __future__ import annotations
@@ -72,36 +73,33 @@ _PLAN_KEY = f"concat_ws('_', '{REL_PLAN}', objectId)"
 # costs one call to the JVM, where a Column tree costs one per node.
 
 
-def _plan_fields(carry: Sequence[str]) -> list[tuple[str, str]]:
-    return [
-        ("id", "concat_ws('_', objectType, objectId)"),
-        *[(c, _q(c)) for c in carry],
-        *[(c, c) for c in ("objectId", "objectType", "_org", "planType", "creationDate")],
-        ("costshare_id", "planCostShares.objectId"),
-    ]
+#: a document's ``plans`` row: (name, SQL) over the document's columns
+_PLAN_FIELDS = [
+    ("id", "concat_ws('_', objectType, objectId)"),
+    *[(c, c) for c in ("objectId", "objectType", "_org", "planType", "creationDate")],
+    ("costshare_id", "planCostShares.objectId"),
+]
 
 
-def plan_row(carry: Sequence[str] = ()) -> Column:
+def plan_row() -> Column:
     """A document's ``plans`` row: a struct over the document's columns."""
-    return F.expr(_struct(_plan_fields(carry)))
+    return F.expr(_struct(_PLAN_FIELDS))
 
 
-def _fragment(obj: str, fields: Sequence[str], carry: Sequence[str], parent_key: str, rel: str) -> str:
-    """The row of stored fragment ``obj``: its key, the carried columns,
-    the fragment's own ``fields``, its parent's key and its relation."""
+def _fragment(obj: str, fields: Sequence[str], parent_key: str, rel: str) -> str:
+    """The row of stored fragment ``obj``: its key, the fragment's own
+    ``fields``, its parent's key and its relation."""
     return _struct([
         ("id", _key(obj)),
-        *[(c, _q(c)) for c in carry],
         *[(f, f"{obj}.{_q(f)}") for f in fields],
         ("parent_key", parent_key),
         ("rel_name", f"'{rel}'"),
     ])
 
 
-def _planservice(ps: str, carry: Sequence[str]) -> str:
+def _planservice(ps: str) -> str:
     return _struct([
         ("id", _key(ps)),
-        *[(c, _q(c)) for c in carry],
         *[(c, f"{ps}.{c}") for c in ("objectId", "objectType", "_org")],
         ("service_id", f"{ps}.linkedService.objectId"),
         ("costshare_id", f"{ps}.planserviceCostShares.objectId"),
@@ -109,7 +107,7 @@ def _planservice(ps: str, carry: Sequence[str]) -> str:
     ])
 
 
-def child_rows(schema: T.StructType, table: str, carry: Sequence[str] = ()) -> Column:
+def child_rows(schema: T.StructType, table: str) -> Column:
     """The rows child ``table`` holds for one document, as an array of
     structs over the document's columns (``schema`` is the documents').
 
@@ -118,15 +116,15 @@ def child_rows(schema: T.StructType, table: str, carry: Sequence[str] = ()) -> C
     """
     fields = {f.name: f.dataType for f in schema.fields}
     if table == "planservices":
-        return F.expr(f"transform(linkedPlanServices, _ps -> {_planservice('_ps', carry)})")
+        return F.expr(f"transform(linkedPlanServices, _ps -> {_planservice('_ps')})")
     if table == "services":
         names = fields["linkedPlanServices"].elementType["linkedService"].dataType.fieldNames()
-        row = _fragment("_ps.linkedService", names, carry, _key("_ps"), REL_SERVICE_SERVICE)
+        row = _fragment("_ps.linkedService", names, _key("_ps"), REL_SERVICE_SERVICE)
         rows = f"transform(linkedPlanServices, _ps -> {row})"
     elif table == "membercostshares":
         names = fields["planCostShares"].fieldNames()
-        plan_level = _fragment("planCostShares", names, carry, _PLAN_KEY, REL_PLAN_COSTSHARE)
-        row = _fragment("_ps.planserviceCostShares", names, carry, _key("_ps"), REL_SERVICE_COSTSHARE)
+        plan_level = _fragment("planCostShares", names, _PLAN_KEY, REL_PLAN_COSTSHARE)
+        row = _fragment("_ps.planserviceCostShares", names, _key("_ps"), REL_SERVICE_COSTSHARE)
         rows = f"concat(array({plan_level}), coalesce(transform(linkedPlanServices, _ps -> {row}), array()))"
     else:
         raise KeyError(table)
@@ -138,9 +136,8 @@ class Shredded(Mapping[str, DataFrame]):
     ``TABLES``. ``documents`` is the input frame; each table is built the
     first time its key is read, so holding the mapping costs nothing."""
 
-    def __init__(self, documents: DataFrame, carry: Sequence[str] = ()) -> None:
+    def __init__(self, documents: DataFrame) -> None:
         self.documents = documents
-        self.carry = tuple(carry)
         self._built: dict[str, DataFrame] = {}
 
     def __getitem__(self, name: str) -> DataFrame:
@@ -161,39 +158,36 @@ class Shredded(Mapping[str, DataFrame]):
         documents' columns: ``plan_row`` for ``plans``, ``child_rows``
         for a child table."""
         if table == "plans":
-            return plan_row(self.carry)
-        return child_rows(self.documents.schema, table, self.carry)
+            return plan_row()
+        return child_rows(self.documents.schema, table)
 
     def where(self, condition: Column) -> Shredded:
         """The mapping over the documents that satisfy ``condition``."""
-        return Shredded(self.documents.filter(condition), self.carry)
+        return Shredded(self.documents.filter(condition))
 
     def _build(self, name: str) -> DataFrame:
         if name == "plans":
-            return self.documents.selectExpr(*[f"{sql} AS {_q(n)}" for n, sql in _plan_fields(self.carry)])
+            return self.documents.selectExpr(*[f"{sql} AS {_q(n)}" for n, sql in _PLAN_FIELDS])
         if name == "edges":
             return edges(self)
         if name == "entities":
-            return entities(self, self.carry)
+            return entities(self)
         return self.documents.select(F.inline(self.rows(name)))
 
 
-def shred(plans: DataFrame, carry: Sequence[str] = ()) -> Shredded:
+def shred(plans: DataFrame) -> Shredded:
     """Decompose nested plan documents into normalized tables.
 
     ``plans`` must conform to the compiled plan StructType
     (plans/json_schema_compiler.py) — i.e. come out of ``validate()``'s
-    valid split. Columns named in ``carry`` (extra columns of ``plans``,
-    e.g. a CDC key and seq) are copied from each document onto every row
-    it shreds into, in the typed tables and ``entities``, ahead of the
-    payload columns; with the default ``()`` the output schema is the
-    plain one.
+    valid split, or be the search projection built from it; other
+    columns of ``plans`` are ignored.
 
     Returns a :class:`Shredded` mapping over ``TABLES`` that holds
     ``plans`` as ``.documents`` and builds each table when it is first
     read: ``shred(docs)`` runs no Spark analysis until a table is asked for.
     """
-    return Shredded(plans, carry)
+    return Shredded(plans)
 
 
 def edges(tables: Mapping[str, DataFrame]) -> DataFrame:
@@ -225,7 +219,7 @@ def edges(tables: Mapping[str, DataFrame]) -> DataFrame:
     return roots.unionByName(cs).unionByName(ps).unionByName(sv)
 
 
-def entities(tables: Mapping[str, DataFrame], carry: Sequence[str] = ()) -> DataFrame:
+def entities(tables: Mapping[str, DataFrame]) -> DataFrame:
     """The Redis-keyspace mirror: (id, object_type, payload-json).
 
     payload is the canonical JSON of the stored fragment (children by
@@ -233,14 +227,13 @@ def entities(tables: Mapping[str, DataFrame], carry: Sequence[str] = ()) -> Data
     stripping nested objects, elasticSearch.ts:30-42).
     """
     outs = []
-    skip = {"id", "parent_key", "rel_name", *carry}
+    skip = {"id", "parent_key", "rel_name"}
     for name in ("plans", "membercostshares", "planservices", "services"):
         df = tables[name]
         payload_cols = [c for c in df.columns if c not in skip]
         outs.append(
             df.select(
                 "id",
-                *carry,
                 F.col("objectType").alias("object_type"),
                 F.to_json(F.struct(*payload_cols)).alias("payload"),
             )

@@ -13,33 +13,36 @@ Spark-first replacement (SURVEY.md §3.1):
   the reference's unimplemented V2 requirement, README.md:118; shipped
   here),
 - the consumer is ONE Structured Streaming job: readStream →
-  foreachBatch MERGE into the parquet entity store,
+  foreachBatch MERGE into a parquet store of one row per key,
 - exactly-once: checkpointed source offsets + an idempotent,
   deterministic merge (max-seq wins per key; replays converge),
 - the 200 ms visibility poll disappears — micro-batch commit IS the
   visibility barrier (processAllAvailable ≈ awaiting the queue drain).
 
-Document indexer (``run_document_indexer``): each micro-batch is deduped
-to its latest record per key, validated and joined to the seq the entity
-store holds for that key, once; the result is held until the batch
-ends and every write reads it. The merge replaces documents by root: a
-batch record (upsert or delete) is applied when its seq is at least the
-stored seq of its root, and then all stored fragments of that root go
-and the record's fragments (none for a delete) come in; a record older
-than the stored root changes nothing, in the entity store or the
-search projection. Deletes leave no tombstone: once a root is deleted,
-a record for it with an older seq (a replay from before the delete)
-inserts it again.
+Both indexers keep each key's latest record, a delete as a tombstone
+that ``read_store`` hides, and ignore a record older than the stored
+one: a replay from before a delete does not bring the key back.
+
+Document indexer (``run_document_indexer``): the search projection
+(``refresh_reconstructed``) is the one document store, and a version
+store of one ``apply_cdc_batch`` row per root holds the seqs. Each
+micro-batch is deduped to its latest record per key, validated and
+joined to the version store once, and held until the batch ends. A
+record at least as new as its root replaces the root's document in the
+projection (a delete drops it). The version store is swapped last,
+because the held batch is derived from it.
 
 Scale: the batch dedup (row_number over key) keeps state out of the
-streaming engine, so no state-store growth. Each batch reads and
-rewrites the whole store (a Delta MERGE would rewrite only touched
-files); written frames are rebalanced, so the file count follows the
-data size, not the number of batches.
+streaming engine. Every store is a symlink to a versioned directory,
+swapped by one ``os.replace``, so a crash leaves a whole version. Each
+batch rewrites the whole store (a Delta MERGE would rewrite only
+touched files); written frames are rebalanced, so the file count
+follows the data size, not the number of batches.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -60,11 +63,6 @@ CDC_SCHEMA = T.StructType(
         T.StructField("doc", T.StringType(), True),  # payload JSON (null for delete)
     ]
 )
-
-#: the document indexer's entity store: shred's entities, tagged with the
-#: CDC key and seq of their root document. Reads pass it, which spares the
-#: footer-reading job of schema inference.
-ENTITIES_SCHEMA = "id string, root_key string, seq bigint, object_type string, payload string"
 
 
 def enqueue(spark: SparkSession, queue_dir: str, records: list[dict]) -> None:
@@ -88,35 +86,46 @@ def enqueue(spark: SparkSession, queue_dir: str, records: list[dict]) -> None:
 
 
 def _replace_dir(df: DataFrame, path: str) -> None:
-    """Write ``df`` as the parquet dataset at ``path``: parquet has no
-    transactional MERGE, so write a staging dir next to it and swap it in
-    by rename (a Delta MERGE on a real deployment)."""
-    tag = uuid.uuid4().hex[:8]
-    stage, old = f"{path}__stage_{tag}", f"{path}__old_{tag}"
-    df.write.mode("overwrite").parquet(stage)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(stage, path)
-    shutil.rmtree(old, ignore_errors=True)
+    """Write ``df``, rebalanced, as the parquet dataset at ``path``.
+
+    Parquet has no transactional MERGE (a Delta MERGE on a real
+    deployment): ``df`` is written to a new ``<path>__v_<tag>``
+    directory and the symlink ``path`` is pointed at it by one
+    ``os.replace``, so ``path`` always names a whole version. The other
+    versions, the one just replaced and any a crash left behind, are
+    removed afterwards."""
+    version = f"{path}__v_{uuid.uuid4().hex[:8]}"
+    df.hint("rebalance").write.parquet(version)
+    link = f"{version}.link"
+    os.symlink(os.path.basename(version), link)
+    os.replace(link, path)
+    for stale in glob.glob(glob.escape(path) + "__v_*"):
+        if os.path.islink(stale):
+            os.unlink(stale)  # a link whose swap a crash cut short
+        elif stale != version:
+            shutil.rmtree(stale, ignore_errors=True)
+
+
+def _versions(store_dir: str, batch: DataFrame) -> DataFrame:
+    """Every row of the CDC store, tombstones included; on the first
+    batch (no store yet) an empty frame of the batch's columns."""
+    if os.path.lexists(store_dir):
+        return batch.sparkSession.read.schema(CDC_SCHEMA).parquet(store_dir)
+    return batch.limit(0)
 
 
 def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
-    """Idempotent MERGE of one micro-batch into the parquet entity store.
+    """Idempotent MERGE of one micro-batch into the parquet CDC store.
 
     Replay-safe by construction: one max-seq dedup per key over the
     store ∪ the batch (the batch alone on the first batch), so applying
     the same batch twice is a no-op (the reference leans on ES
-    upsert-by-_id for this, rabbitMq.ts:44-48).
+    upsert-by-_id for this, rabbitMq.ts:44-48). A delete stays as a
+    tombstone row, so an older record replayed after it loses to it.
     """
     from adv_big_data_indexing_spark.operators.mutate import upsert_last_writer
 
-    store = (
-        read_store(batch.sparkSession, store_dir)
-        if os.path.exists(store_dir)  # not the first batch
-        else batch.limit(0)
-    )
-    merged = upsert_last_writer(store, batch, "key", "seq")
-    _replace_dir(merged.filter(F.col("op") != "delete"), store_dir)
+    _replace_dir(upsert_last_writer(_versions(store_dir, batch), batch, "key", "seq"), store_dir)
 
 
 def run_indexer(
@@ -150,9 +159,10 @@ def drain(query: StreamingQuery, timeout_sec: int = 120) -> None:
 
 
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The CDC store, read with its known schema: no inference job, and a
-    damaged store fails the read instead of passing for an empty one."""
-    return spark.read.schema(CDC_SCHEMA).parquet(store_dir)
+    """The live rows of the CDC store (tombstones filtered out), read with
+    its known schema: no inference job, and a damaged store fails the
+    read instead of passing for an empty one."""
+    return spark.read.schema(CDC_SCHEMA).parquet(store_dir).filter(F.col("op") != "delete")
 
 
 # ---------------------------------------------------------------------------
@@ -163,47 +173,42 @@ def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
 def run_document_indexer(
     spark: SparkSession,
     queue_dir: str,
-    entities_dir: str,
+    versions_dir: str,
     rejects_dir: str,
     checkpoint_dir: str,
     schema: dict,
-    reconstructed_dir: str | None = None,
+    reconstructed_dir: str,
 ) -> StreamingQuery:
     """POST /plan, end-to-end, streaming: each micro-batch of CDC records
     carrying raw plan JSON is validated against the registered schema
     (plans/json_schema_compiler), invalid docs are routed to a rejects
-    table (the 400 path, with their violation list), valid docs are
-    shredded (operators/shred) and replace their root's fragments in the
-    entity store by seq (see the module docstring) — replacing the
+    table (the 400 path, with their violation list), and valid docs
+    replace their root's document in the search projection at
+    ``reconstructed_dir`` by seq, as the version store at
+    ``versions_dir`` rules (see the module docstring) — replacing the
     reference's 10-step Redis→AMQP→poll→ES choreography
     (apiLogicForCRUD.ts:82-144) with one exactly-once pipeline.
     """
     def process(batch: DataFrame, batch_id: int) -> None:
-        store = None
-        if os.path.exists(entities_dir):
-            store = batch.sparkSession.read.schema(ENTITIES_SCHEMA).parquet(entities_dir)
-        staged = hold(_stage_documents(batch, store, schema))
-        _apply_documents(staged, store, entities_dir, rejects_dir, reconstructed_dir)
+        staged = hold(_stage_documents(batch, _versions(versions_dir, batch), schema))
+        _apply_documents(staged, batch_id, versions_dir, rejects_dir, reconstructed_dir)
 
     return start_fold(_read_queue(spark, queue_dir), process, checkpoint_dir)
 
 
-def _stage_documents(batch: DataFrame, store: DataFrame | None, schema: dict) -> DataFrame:
+def _stage_documents(batch: DataFrame, versions: DataFrame, schema: dict) -> DataFrame:
     """The latest record per key of one batch, validated: ``kind`` is
     upsert, delete or reject; ``applied`` says whether the record is new
-    enough (seq at least the stored seq of its root) to change the stores."""
+    enough (seq at least the stored seq of its root, tombstones
+    included) to change the stores."""
     from adv_big_data_indexing_spark.operators.mutate import upsert_last_writer
     from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
 
     latest = upsert_last_writer(batch.limit(0), batch, "key", "seq").select(
         "key", "op", "seq", F.col("doc").alias("raw")
     )
-    staged = validate(latest, schema)
-    if store is not None:
-        stored = store.groupBy("root_key").agg(F.max("seq").alias("stored_seq"))
-        staged = staged.join(stored, staged.key == stored.root_key, "left").drop("root_key")
-    else:
-        staged = staged.withColumn("stored_seq", F.lit(None).cast("long"))
+    stored = versions.select("key", F.col("seq").alias("stored_seq"))
+    staged = validate(latest, schema).join(stored, "key", "left")
     kind = (
         F.when(F.col("op") == "delete", "delete")
         .when(F.col("is_valid"), "upsert")
@@ -217,16 +222,15 @@ def _stage_documents(batch: DataFrame, store: DataFrame | None, schema: dict) ->
 
 def _apply_documents(
     staged: DataFrame,
-    store: DataFrame | None,
-    entities_dir: str,
+    batch_id: int,
+    versions_dir: str,
     rejects_dir: str,
-    reconstructed_dir: str | None,
+    reconstructed_dir: str,
 ) -> None:
-    """Write one staged batch: append its rejects, refresh the projection
-    of its applied roots, then replace those roots in the entity store.
-    The store is swapped last, because ``staged`` is derived from it."""
-    from adv_big_data_indexing_spark.operators.shred import shred
-
+    """Write one staged batch: append its rejects not yet recorded,
+    refresh the projection of its applied roots, then merge their seqs
+    into the version store. The version store is swapped last, because
+    ``staged`` is derived from it."""
     spark = staged.sparkSession
     n = staged.agg(
         F.count_if(F.col("kind") == "reject").alias("rejects"),
@@ -234,32 +238,27 @@ def _apply_documents(
         F.count_if(F.col("applied") & (F.col("kind") == "delete")).alias("deletes"),
     ).first()
     if n.rejects:
-        (
-            staged.filter(F.col("kind") == "reject")
-            .select("key", "seq", "violations", F.col("raw").alias("doc"))
-            .hint("rebalance")
-            .write.mode("append")
-            .parquet(rejects_dir)
+        rejects = staged.filter(F.col("kind") == "reject").select(
+            "key", "seq", "violations", F.col("raw").alias("doc")
         )
+        if os.path.lexists(rejects_dir):  # a retried or replayed batch appends none twice
+            seen = spark.read.schema("key string, seq bigint").parquet(rejects_dir)
+            rejects = rejects.join(seen, ["key", "seq"], "left_anti")
+        rejects.hint("rebalance").write.mode("append").parquet(rejects_dir)
     if not (n.upserts or n.deletes):
         return
-    upserts = staged.filter(F.col("applied") & (F.col("kind") == "upsert"))
-    if reconstructed_dir is not None:
-        deletes = staged.filter(F.col("applied") & (F.col("kind") == "delete"))
-        refresh_reconstructed(
-            spark,
-            reconstructed_dir,
-            upserts.select("doc.*") if n.upserts else None,
-            deletes.select(F.col("key").alias("root_key")) if n.deletes else None,
-        )
-    fragments = shred(
-        upserts.select("doc.*", F.col("key").alias("root_key"), "seq"),
-        carry=("root_key", "seq"),
-    )["entities"]
-    if store is not None:
-        roots = staged.filter(F.col("applied")).select(F.col("key").alias("root_key"))
-        fragments = store.join(roots, "root_key", "left_anti").unionByName(fragments)
-    _replace_dir(fragments.hint("rebalance"), entities_dir)
+    applied = staged.filter(F.col("applied"))
+    refresh_reconstructed(
+        spark,
+        reconstructed_dir,
+        applied.filter(F.col("kind") == "upsert").select("doc.*") if n.upserts else None,
+        applied.filter(F.col("kind") == "delete").select(F.col("key").alias("root_key")) if n.deletes else None,
+    )
+    apply_cdc_batch(
+        versions_dir,
+        applied.select("key", "op", "seq", F.lit(None).cast("string").alias("doc")),
+        batch_id,
+    )
 
 
 def refresh_reconstructed(
@@ -283,7 +282,7 @@ def refresh_reconstructed(
 
     fresh = None if changed_docs is None else with_etag(reconstruct(shred(changed_docs)))
     merged = None
-    if os.path.exists(reconstructed_dir):
+    if os.path.lexists(reconstructed_dir):
         reader = spark.read if fresh is None else spark.read.schema(fresh.schema)
         merged = reader.parquet(reconstructed_dir)
         if changed_docs is not None:
@@ -294,4 +293,4 @@ def refresh_reconstructed(
     if fresh is not None:
         merged = fresh if merged is None else merged.unionByName(fresh)
     if merged is not None:
-        _replace_dir(merged.hint("rebalance"), reconstructed_dir)
+        _replace_dir(merged, reconstructed_dir)

@@ -1165,8 +1165,12 @@ def streaming_markov_result(spark, state_dir: str) -> DataFrame:
     """Transition probabilities from the maintained count matrix through
     the batch finisher ``transition_probabilities``
     (operators/timeseries.py), so after a drain the streaming and batch
-    tables agree row-for-row."""
-    return transition_probabilities(spark.read.parquet(state_dir))
+    tables agree row-for-row. The counts are read through ``_read_state``,
+    so a table torn by a crashed commit is restored, never read."""
+    counts = _read_state(spark, state_dir)
+    if counts is None:
+        counts = spark.createDataFrame([], "from_state string, to_state string, n bigint")
+    return transition_probabilities(counts)
 
 
 # ---------------------------------------------------------------------------

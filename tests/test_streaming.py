@@ -87,6 +87,64 @@ def test_cdc_corrupt_store_fails_the_batch_and_keeps_the_store(spark, tmp_path):
     assert {f.name: f.read_bytes() for f in (tmp_path / "store").iterdir()} == before
 
 
+def test_cdc_swap_crash_keeps_the_previous_store(spark, tmp_path, monkeypatch):
+    """A crash inside the store swap, after the new version is written,
+    leaves the previous store readable, and the next batch applies on
+    top of it instead of being taken for a first batch."""
+    import os
+
+    q, s, c = str(tmp_path / "q"), str(tmp_path / "store"), str(tmp_path / "ck")
+    cdc.enqueue(spark, q, [
+        {"key": "k1", "op": "insert", "seq": 1, "doc": _doc(1)},
+        {"key": "k2", "op": "insert", "seq": 1, "doc": _doc(2)},
+    ])
+    cdc.drain(cdc.run_indexer(spark, q, s, c))
+
+    def crash_on_store(move):
+        def guarded(src, dst, *args, **kwargs):
+            if os.path.abspath(dst) == s:
+                raise OSError("killed while swapping the store")
+            return move(src, dst, *args, **kwargs)
+
+        return guarded
+
+    batch = spark.createDataFrame([("k3", "insert", 1, _doc(3))], cdc.CDC_SCHEMA)
+    monkeypatch.setattr(os, "rename", crash_on_store(os.rename))
+    monkeypatch.setattr(os, "replace", crash_on_store(os.replace))
+    with pytest.raises(OSError, match="killed"):
+        cdc.apply_cdc_batch(s, batch, 1)
+    monkeypatch.undo()
+    assert sorted(r.key for r in cdc.read_store(spark, s).collect()) == ["k1", "k2"]
+
+    cdc.apply_cdc_batch(s, batch, 1)
+    assert sorted(r.key for r in cdc.read_store(spark, s).collect()) == ["k1", "k2", "k3"]
+
+
+def test_replayed_record_older_than_a_delete_leaves_the_root_deleted(spark, tmp_path):
+    """Both indexers keep a delete as a tombstone: an upsert with a lower
+    seq than an applied delete, delivered after it, changes nothing."""
+    from tests.fixtures import make_plan, reference_schema
+
+    q, s, c = str(tmp_path / "q"), str(tmp_path / "store"), str(tmp_path / "ck")
+    for recs in (
+        [{"key": "k1", "op": "insert", "seq": 1, "doc": _doc(1)},
+         {"key": "k2", "op": "insert", "seq": 1, "doc": _doc(2)}],
+        [{"key": "k1", "op": "delete", "seq": 3, "doc": None}],
+        [{"key": "k1", "op": "update", "seq": 2, "doc": _doc(1, v=7)}],
+    ):
+        cdc.enqueue(spark, q, recs)
+        cdc.drain(cdc.run_indexer(spark, q, s, c))
+    assert [r.key for r in cdc.read_store(spark, s).collect()] == ["k2"]
+
+    d, schema = _doc_dirs(tmp_path / "docs"), reference_schema()
+    _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i)) for i in range(2)])
+    _index_docs(spark, d, schema, [{"key": "plan_plan-00000", "op": "delete", "seq": 3, "doc": None}])
+    before = _stores(spark, d)
+    _index_docs(spark, d, schema, [_upsert(0, 2, make_plan(0))])
+    assert _stores(spark, d) == before
+    assert [i for i, _ in before[2]] == ["plan_plan-00001"]
+
+
 @pytest.fixture(scope="module")
 def event_stream_dir(spark, tmp_path_factory):
     """A small deterministic event file the file-source stream reads."""
@@ -216,8 +274,10 @@ def test_document_indexer_end_to_end(spark, tmp_path):
     job: validate → 400-split → shred → keyed merge → delete closure."""
     from tests.fixtures import make_plan, reference_schema
 
-    q = str(tmp_path / "q"); ents = str(tmp_path / "entities")
-    rej = str(tmp_path / "rejects"); ck = str(tmp_path / "ck")
+    from adv_big_data_indexing_spark.operators.shred import shred
+
+    q = str(tmp_path / "q"); vers = str(tmp_path / "versions")
+    rej = str(tmp_path / "rejects"); ck = str(tmp_path / "ck"); rec = str(tmp_path / "rec")
     schema = reference_schema()
 
     p0, p1 = make_plan(0), make_plan(1)
@@ -227,10 +287,13 @@ def test_document_indexer_end_to_end(spark, tmp_path):
         {"key": "plan_plan-00001", "op": "insert", "seq": 1, "doc": json.dumps(p1)},
         {"key": "plan_plan-00002", "op": "insert", "seq": 1, "doc": json.dumps(bad)},
     ])
-    cdc.drain(cdc.run_document_indexer(spark, q, ents, rej, ck, schema))
-    store = spark.read.parquet(ents)
+    cdc.drain(cdc.run_document_indexer(spark, q, vers, rej, ck, schema, reconstructed_dir=rec))
+    store = shred(spark.read.parquet(rec))["entities"]
     # 2 valid plans × 8 fragments each; the invalid one rejected whole
     assert store.count() == 16
+    assert sorted((r.key, r.seq) for r in cdc.read_store(spark, vers).collect()) == [
+        ("plan_plan-00000", 1), ("plan_plan-00001", 1),
+    ]
     rejects = spark.read.parquet(rej)
     assert rejects.count() == 1
     assert "$.creationDate:calendar_valid" in rejects.collect()[0].violations
@@ -242,10 +305,14 @@ def test_document_indexer_end_to_end(spark, tmp_path):
         {"key": "plan_plan-00000", "op": "update", "seq": 2, "doc": json.dumps(p0b)},
         {"key": "plan_plan-00001", "op": "delete", "seq": 2, "doc": None},
     ])
-    cdc.drain(cdc.run_document_indexer(spark, q, ents, rej, ck, schema))
-    store = spark.read.parquet(ents)
+    cdc.drain(cdc.run_document_indexer(spark, q, vers, rej, ck, schema, reconstructed_dir=rec))
+    store = shred(spark.read.parquet(rec))["entities"]
     assert store.count() == 8  # plan-00001's closure fully gone
-    assert store.filter(F.col("root_key") == "plan_plan-00001").count() == 0
+    assert store.filter(F.col("id").contains("-00001")).count() == 0
+    versions = spark.read.schema(cdc.CDC_SCHEMA).parquet(vers)
+    assert sorted((r.key, r.op, r.seq) for r in versions.collect()) == [
+        ("plan_plan-00000", "update", 2), ("plan_plan-00001", "delete", 2),
+    ]
     svc = store.filter(F.col("id") == "service_svc-00000-0").collect()[0]
     assert "RENAMED" in svc.payload
 
@@ -293,7 +360,7 @@ def test_incremental_reconstructed_projection(spark, tmp_path):
     from adv_big_data_indexing_spark.operators.shred import shred
     from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
 
-    q = str(tmp_path / "q"); ents = str(tmp_path / "e"); rej = str(tmp_path / "r")
+    q = str(tmp_path / "q"); vers = str(tmp_path / "v"); rej = str(tmp_path / "r")
     ck = str(tmp_path / "ck"); rec_dir = str(tmp_path / "rec")
     schema = reference_schema()
 
@@ -302,7 +369,7 @@ def test_incremental_reconstructed_projection(spark, tmp_path):
         {"key": f"plan_plan-{i:05d}", "op": "insert", "seq": 1, "doc": json.dumps(d)}
         for i, d in docs.items()
     ])
-    cdc.drain(cdc.run_document_indexer(spark, q, ents, rej, ck, schema, reconstructed_dir=rec_dir))
+    cdc.drain(cdc.run_document_indexer(spark, q, vers, rej, ck, schema, reconstructed_dir=rec_dir))
     rec = spark.read.parquet(rec_dir)
     assert rec.count() == 3
     etag0 = {r.id: r.etag for r in rec.select("id", "etag").collect()}
@@ -313,7 +380,7 @@ def test_incremental_reconstructed_projection(spark, tmp_path):
         {"key": "plan_plan-00001", "op": "update", "seq": 2, "doc": json.dumps(docs[1])},
         {"key": "plan_plan-00002", "op": "delete", "seq": 2, "doc": None},
     ])
-    cdc.drain(cdc.run_document_indexer(spark, q, ents, rej, ck, schema, reconstructed_dir=rec_dir))
+    cdc.drain(cdc.run_document_indexer(spark, q, vers, rej, ck, schema, reconstructed_dir=rec_dir))
     rec = spark.read.parquet(rec_dir)
     got = {r.id: r for r in rec.collect()}
     assert set(got) == {"plan_plan-00000", "plan_plan-00001"}
@@ -332,7 +399,7 @@ def test_incremental_reconstructed_projection(spark, tmp_path):
 
 
 def _doc_dirs(tmp_path) -> dict:
-    return {k: str(tmp_path / k) for k in ("q", "ents", "rej", "ck", "rec")}
+    return {k: str(tmp_path / k) for k in ("q", "versions", "rej", "ck", "rec")}
 
 
 def _index_docs(spark, d: dict, schema: dict, records: list[dict], ck: str | None = None) -> None:
@@ -340,7 +407,7 @@ def _index_docs(spark, d: dict, schema: dict, records: list[dict], ck: str | Non
     if records:
         cdc.enqueue(spark, d["q"], records)
     cdc.drain(cdc.run_document_indexer(
-        spark, d["q"], d["ents"], d["rej"], ck or d["ck"], schema, reconstructed_dir=d["rec"]
+        spark, d["q"], d["versions"], d["rej"], ck or d["ck"], schema, reconstructed_dir=d["rec"]
     ))
 
 
@@ -348,19 +415,31 @@ def _upsert(i: int, seq: int, doc: dict) -> dict:
     return {"key": f"plan_plan-{i:05d}", "op": "update", "seq": seq, "doc": json.dumps(doc)}
 
 
-def _stores(spark, d: dict) -> tuple[list, list]:
-    """(entity rows, projection (id, etag) pairs), sorted."""
-    ents = sorted(
-        (r.id, r.root_key, r.seq, r.payload) for r in spark.read.parquet(d["ents"]).collect()
+def _canonical(payload: str) -> str:
+    """A fragment's JSON payload with its fields in name order: the
+    projection orders nested fields as ``reconstruct`` does."""
+    return json.dumps(json.loads(payload), sort_keys=True)
+
+
+def _stores(spark, d: dict) -> tuple[list, list, list]:
+    """(entity (id, payload) rows shredded from the projection, version
+    store rows with their tombstones, projection (id, etag) pairs), sorted."""
+    from adv_big_data_indexing_spark.operators.shred import shred
+
+    rec = spark.read.parquet(d["rec"])
+    ents = sorted((r.id, _canonical(r.payload)) for r in shred(rec)["entities"].collect())
+    versions = sorted(
+        tuple(r) for r in spark.read.schema(cdc.CDC_SCHEMA).parquet(d["versions"]).collect()
     )
-    proj = sorted((r.id, r.etag) for r in spark.read.parquet(d["rec"]).select("id", "etag").collect())
-    return ents, proj
+    proj = sorted((r.id, r.etag) for r in rec.select("id", "etag").collect())
+    return ents, versions, proj
 
 
 def test_document_indexer_store_equals_shred_of_live_docs(spark, tmp_path):
     """Updates that drop plan services replace the whole document: the
-    entity store's (id, payload) set equals shred of the live documents
-    (no orphaned child fragments) and the projection equals a rebuild."""
+    (id, payload) set shredded from the projection equals shred of the
+    live documents (no orphaned child fragments), the projection equals
+    a rebuild and the version store holds each key's latest seq."""
     from tests.fixtures import make_plan, reference_schema
     from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
     from adv_big_data_indexing_spark.operators.shred import shred
@@ -377,35 +456,45 @@ def test_document_indexer_store_equals_shred_of_live_docs(spark, tmp_path):
 
     raw = spark.createDataFrame([(json.dumps(doc),) for doc in live.values()], "raw string")
     docs = validate(raw, schema).select("doc.*")
-    want = sorted((r.id, r.payload) for r in shred(docs)["entities"].collect())
-    ents, proj = _stores(spark, d)
-    assert sorted((i, p) for i, _, _, p in ents) == want
+    want = sorted((r.id, _canonical(r.payload)) for r in shred(docs)["entities"].collect())
+    ents, versions, proj = _stores(spark, d)
+    assert ents == want
     assert len(want) == 4 * 2 + 3 * (1 + 0 + 2 + 3)  # plan + cost share, 3 per service
+    assert [(k, seq) for k, _, seq, _ in versions] == [
+        (f"plan_plan-{i:05d}", 2 if i < 3 else 1) for i in range(4)
+    ]
     rebuilt = with_etag(reconstruct(shred(docs))).select("id", "etag").collect()
     assert proj == sorted((r.id, r.etag) for r in rebuilt)
 
 
 def test_document_indexer_replay_under_fresh_checkpoint_changes_nothing(spark, tmp_path):
     """At-least-once delivery: re-running already-applied batches from a
-    fresh checkpoint leaves the entity store and the projection as they
-    were (equal seqs re-apply the same documents)."""
+    fresh checkpoint leaves the version store, the projection and the
+    rejects as they were (equal seqs re-apply the same documents, and a
+    reject already recorded is not appended again)."""
     from tests.fixtures import make_plan, reference_schema
 
     d, schema = _doc_dirs(tmp_path), reference_schema()
-    _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i, n_services=3)) for i in range(3)])
+    bad = make_plan(9)
+    bad["creationDate"] = "31-02-2024"
+    _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i, n_services=3)) for i in range(3)] + [
+        {"key": "plan_bad", "op": "insert", "seq": 1, "doc": json.dumps(bad)},
+    ])
     _index_docs(spark, d, schema, [
         _upsert(0, 2, make_plan(0, n_services=1)),
         {"key": "plan_plan-00001", "op": "delete", "seq": 2, "doc": None},
     ])
     before = _stores(spark, d)
+    assert spark.read.parquet(d["rej"]).count() == 1
     _index_docs(spark, d, schema, [], ck=str(tmp_path / "ck_fresh"))
     assert _stores(spark, d) == before
-    assert {i for i, _ in before[1]} == {"plan_plan-00000", "plan_plan-00002"}
+    assert spark.read.parquet(d["rej"]).count() == 1
+    assert {i for i, _ in before[2]} == {"plan_plan-00000", "plan_plan-00002"}
 
 
 def test_document_indexer_ignores_records_older_than_the_store(spark, tmp_path):
     """An upsert or delete whose seq is older than the stored root's
-    changes neither the entity store nor the projection."""
+    changes neither the version store nor the projection."""
     from tests.fixtures import make_plan, reference_schema
 
     d, schema = _doc_dirs(tmp_path), reference_schema()
@@ -420,14 +509,15 @@ def test_document_indexer_ignores_records_older_than_the_store(spark, tmp_path):
     assert _stores(spark, d) == before
     # a newer record still applies
     _index_docs(spark, d, schema, [{"key": "plan_plan-00001", "op": "delete", "seq": 6, "doc": None}])
-    assert {i for i, _ in _stores(spark, d)[1]} == {"plan_plan-00000"}
+    assert {i for i, _ in _stores(spark, d)[2]} == {"plan_plan-00000"}
 
 
 def test_document_indexer_file_counts_stay_bounded(spark, tmp_path):
-    """Many small batches do not grow the stores' file counts: the entity
-    store and the projection stay at the file count their data size
-    needs (one file here), and each batch appends at most one rejects
-    file."""
+    """Many small batches do not grow the stores' file counts: the
+    version store and the projection stay at the file count their data
+    size needs (one file here) and one directory version each, and each
+    batch appends at most one rejects file."""
+    import glob
     import os
 
     from tests.fixtures import make_plan, reference_schema
@@ -451,8 +541,10 @@ def test_document_indexer_file_counts_stay_bounded(spark, tmp_path):
     def parquet_files(path: str) -> int:
         return sum(f.endswith(".parquet") for f in os.listdir(path))
 
-    assert parquet_files(d["ents"]) == 1
+    assert parquet_files(d["versions"]) == 1
     assert parquet_files(d["rec"]) == 1
+    for store in (d["versions"], d["rec"]):
+        assert [os.path.basename(v) for v in glob.glob(store + "__v_*")] == [os.readlink(store)]
     assert parquet_files(d["rej"]) <= n_batches
     assert spark.read.parquet(d["rej"]).count() == n_batches
     assert spark.read.parquet(d["rec"]).count() == 3 * n_batches - (n_batches - 1)
@@ -524,6 +616,24 @@ def test_read_state_success_marker_gates_authority(spark, tmp_path):
 
     # absent entirely: None (first batch bootstraps)
     assert ev._read_state(spark, str(tmp_path / "missing")) is None
+
+
+def test_streaming_markov_result_restores_a_torn_state(spark, tmp_path):
+    """The Markov reader goes through ``_read_state``: a count table whose
+    overwrite never finished (no ``_SUCCESS``) is restored from its
+    intact ``.tmp`` copy, not read torn."""
+    import os
+
+    counts = spark.createDataFrame(
+        [("view", "click", 2), ("view", "view", 1), ("click", "view", 1)],
+        "from_state string, to_state string, n bigint",
+    )
+    state = str(tmp_path / "markov_state")
+    counts.coalesce(1).write.parquet(state + ".tmp")
+    counts.limit(1).coalesce(1).write.parquet(state)  # a torn overwrite
+    os.remove(os.path.join(state, "_SUCCESS"))
+    got = {(r.from_state, r.to_state): (r.n, r.p) for r in ev.streaming_markov_result(spark, state).collect()}
+    assert got == {("view", "click"): (2, 2 / 3), ("view", "view"): (1, 1 / 3), ("click", "view"): (1, 1.0)}
 
 
 def test_streaming_cms_equals_batch_and_skips_replay(spark, tmp_path):

@@ -113,7 +113,10 @@ def _drive(update, key, batches, n_chunks: int = 1):
         )
         outs.extend(update(key, iter(chunks), st))
     sec = time.perf_counter() - t0
-    rows = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
+    # empty frames carry no rows and would only blur the column dtypes;
+    # when every frame is empty the first one keeps the columns
+    full = [o for o in outs if len(o)]
+    rows = pd.concat(full, ignore_index=True) if full else (outs[0] if outs else pd.DataFrame())
     return rows, st._v, sec
 
 
