@@ -137,9 +137,15 @@ def upsert_last_writer(
 
     The reference gets replay-safety from ES index-by-_id
     (rabbitMq.ts:44-48); here union + row_number keeps exactly one row
-    per key. Deterministic for any replay order.
+    per key. Rows of one key with equal versions are ordered by their
+    other columns, ascending with nulls first, so the kept row depends
+    only on the set of input rows: deterministic for any replay order
+    and partitioning. For CDC rows (key, op, seq, doc) that makes a
+    delete (op 'delete', null doc) win an equal-seq tie against an
+    insert or update.
     """
-    w = Window.partitionBy(key).orderBy(F.col(version).desc())
+    rest = [c for c in existing.columns if c not in (key, version)]
+    w = Window.partitionBy(key).orderBy(F.col(version).desc(), *rest)
     return (
         existing.unionByName(updates)
         .withColumn("__rn", F.row_number().over(w))

@@ -21,7 +21,8 @@ Spark-first replacement (SURVEY.md §3.1):
 
 Both indexers keep each key's latest record, a delete as a tombstone
 that ``read_store`` hides, and ignore a record older than the stored
-one: a replay from before a delete does not bring the key back.
+one: a replay from before a delete does not bring the key back. Of an
+update and a delete with equal seqs, the delete wins.
 
 Document indexer (``run_document_indexer``): the search projection
 (``refresh_reconstructed``) is the one document store, and a version
@@ -29,23 +30,23 @@ store of one ``apply_cdc_batch`` row per root holds the seqs. Each
 micro-batch is deduped to its latest record per key, validated and
 joined to the version store once, and held until the batch ends. A
 record at least as new as its root replaces the root's document in the
-projection (a delete drops it). The version store is swapped last,
-because the held batch is derived from it.
+projection (a delete drops it). Rejects not yet recorded are appended
+to the rejects table after both stores are written (see
+``_apply_documents``).
 
 Scale: the batch dedup (row_number over key) keeps state out of the
-streaming engine. Every store is a symlink to a versioned directory,
-swapped by one ``os.replace``, so a crash leaves a whole version. Each
-batch rewrites the whole store (a Delta MERGE would rewrite only
-touched files); written frames are rebalanced, so the file count
-follows the data size, not the number of batches.
+streaming engine. Every store is written by ``statelog.commit``, a
+symlink swapped onto a versioned directory by one ``os.replace``, so a
+crash leaves a whole version. Each batch rewrites the whole store (a
+Delta MERGE would rewrite only touched files); written frames are
+rebalanced, so the file count follows the data size, not the number of
+batches.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +55,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from adv_big_data_indexing_spark.lifetime import hold, start_fold
+from adv_big_data_indexing_spark.streaming import statelog
 
 CDC_SCHEMA = T.StructType(
     [
@@ -85,27 +87,6 @@ def enqueue(spark: SparkSession, queue_dir: str, records: list[dict]) -> None:
     os.replace(tmp, os.path.join(queue_dir, name))
 
 
-def _replace_dir(df: DataFrame, path: str) -> None:
-    """Write ``df``, rebalanced, as the parquet dataset at ``path``.
-
-    Parquet has no transactional MERGE (a Delta MERGE on a real
-    deployment): ``df`` is written to a new ``<path>__v_<tag>``
-    directory and the symlink ``path`` is pointed at it by one
-    ``os.replace``, so ``path`` always names a whole version. The other
-    versions, the one just replaced and any a crash left behind, are
-    removed afterwards."""
-    version = f"{path}__v_{uuid.uuid4().hex[:8]}"
-    df.hint("rebalance").write.parquet(version)
-    link = f"{version}.link"
-    os.symlink(os.path.basename(version), link)
-    os.replace(link, path)
-    for stale in glob.glob(glob.escape(path) + "__v_*"):
-        if os.path.islink(stale):
-            os.unlink(stale)  # a link whose swap a crash cut short
-        elif stale != version:
-            shutil.rmtree(stale, ignore_errors=True)
-
-
 def _versions(store_dir: str, batch: DataFrame) -> DataFrame:
     """Every row of the CDC store, tombstones included; on the first
     batch (no store yet) an empty frame of the batch's columns."""
@@ -125,7 +106,8 @@ def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     """
     from adv_big_data_indexing_spark.operators.mutate import upsert_last_writer
 
-    _replace_dir(upsert_last_writer(_versions(store_dir, batch), batch, "key", "seq"), store_dir)
+    merged = upsert_last_writer(_versions(store_dir, batch), batch, "key", "seq")
+    statelog.commit(merged.hint("rebalance"), store_dir)
 
 
 def run_indexer(
@@ -190,34 +172,55 @@ def run_document_indexer(
     (apiLogicForCRUD.ts:82-144) with one exactly-once pipeline.
     """
     def process(batch: DataFrame, batch_id: int) -> None:
-        staged = hold(_stage_documents(batch, _versions(versions_dir, batch), schema))
+        recorded = _recorded(batch.sparkSession, rejects_dir)
+        staged = hold(_stage_documents(batch, _versions(versions_dir, batch), recorded, schema))
         _apply_documents(staged, batch_id, versions_dir, rejects_dir, reconstructed_dir)
 
     return start_fold(_read_queue(spark, queue_dir), process, checkpoint_dir)
 
 
-def _stage_documents(batch: DataFrame, versions: DataFrame, schema: dict) -> DataFrame:
+_REJECT_KEY = "key string, seq bigint"
+
+
+def _recorded(spark: SparkSession, rejects_dir: str) -> DataFrame:
+    """The (key, seq) of every reject already in the rejects table."""
+    if os.path.lexists(rejects_dir):
+        return spark.read.schema(_REJECT_KEY).parquet(rejects_dir)
+    return spark.createDataFrame([], _REJECT_KEY)
+
+
+def _stage_documents(batch: DataFrame, versions: DataFrame, recorded: DataFrame, schema: dict) -> DataFrame:
     """The latest record per key of one batch, validated: ``kind`` is
-    upsert, delete or reject; ``applied`` says whether the record is new
-    enough (seq at least the stored seq of its root, tombstones
-    included) to change the stores."""
+    upsert, delete or reject; ``recorded`` is true for a reject already
+    in the rejects table; ``applied`` says whether the record changes
+    the stores: it is at least as new as the stored record of its root
+    (tombstones included), and an equal-seq tie goes to a delete."""
     from adv_big_data_indexing_spark.operators.mutate import upsert_last_writer
     from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
 
     latest = upsert_last_writer(batch.limit(0), batch, "key", "seq").select(
         "key", "op", "seq", F.col("doc").alias("raw")
     )
-    stored = versions.select("key", F.col("seq").alias("stored_seq"))
-    staged = validate(latest, schema).join(stored, "key", "left")
+    stored = versions.select("key", F.col("seq").alias("stored_seq"), F.col("op").alias("stored_op"))
     kind = (
         F.when(F.col("op") == "delete", "delete")
         .when(F.col("is_valid"), "upsert")
         .otherwise("reject")
     )
-    fresh = F.col("stored_seq").isNull() | (F.col("seq") >= F.col("stored_seq"))
-    return staged.withColumn("kind", kind).withColumn(
-        "applied", (F.col("kind") != "reject") & fresh
+    seen = recorded.select("key", "seq", F.lit("reject").alias("kind"), F.lit(True).alias("recorded"))
+    staged = (
+        validate(latest, schema)
+        .join(stored, "key", "left")
+        .withColumn("kind", kind)
+        .join(seen, ["key", "seq", "kind"], "left")
     )
+    seq, stored_seq = F.col("seq"), F.col("stored_seq")
+    fresh = (
+        stored_seq.isNull()
+        | (seq > stored_seq)
+        | ((seq == stored_seq) & ((F.col("kind") == "delete") | (F.col("stored_op") != "delete")))
+    )
+    return staged.withColumn("applied", (F.col("kind") != "reject") & fresh)
 
 
 def _apply_documents(
@@ -227,44 +230,46 @@ def _apply_documents(
     rejects_dir: str,
     reconstructed_dir: str,
 ) -> None:
-    """Write one staged batch: append its rejects not yet recorded,
-    refresh the projection of its applied roots, then merge their seqs
-    into the version store. The version store is swapped last, because
-    ``staged`` is derived from it."""
+    """Write one staged batch: refresh the projection of its applied
+    roots, merge their seqs into the version store, then append its
+    rejects not yet recorded (a retried or replayed batch appends none).
+
+    The rejects go last because the append drops the cache of every held
+    frame that reads the rejects table, ``staged`` among them. The
+    version store is swapped before it, so from the swap on ``staged``
+    is read from its cache only: the version it was derived from is
+    gone. Were a cached block lost there, the batch would fail and be
+    replayed, which every write here tolerates."""
     spark = staged.sparkSession
+    new_reject = (F.col("kind") == "reject") & F.col("recorded").isNull()
     n = staged.agg(
-        F.count_if(F.col("kind") == "reject").alias("rejects"),
+        F.count_if(new_reject).alias("rejects"),
         F.count_if(F.col("applied") & (F.col("kind") == "upsert")).alias("upserts"),
         F.count_if(F.col("applied") & (F.col("kind") == "delete")).alias("deletes"),
     ).first()
-    if n.rejects:
-        rejects = staged.filter(F.col("kind") == "reject").select(
-            "key", "seq", "violations", F.col("raw").alias("doc")
+    if n.upserts or n.deletes:
+        applied = staged.filter(F.col("applied"))
+        upserts = applied.filter(F.col("kind") == "upsert").select("doc.*")
+        refresh_reconstructed(
+            spark,
+            reconstructed_dir,
+            upserts if n.upserts else upserts.limit(0),
+            applied.filter(F.col("kind") == "delete").select(F.col("key").alias("root_key")) if n.deletes else None,
         )
-        if os.path.lexists(rejects_dir):  # a retried or replayed batch appends none twice
-            seen = spark.read.schema("key string, seq bigint").parquet(rejects_dir)
-            rejects = rejects.join(seen, ["key", "seq"], "left_anti")
+        apply_cdc_batch(
+            versions_dir,
+            applied.select("key", "op", "seq", F.lit(None).cast("string").alias("doc")),
+            batch_id,
+        )
+    if n.rejects:
+        rejects = staged.filter(new_reject).select("key", "seq", "violations", F.col("raw").alias("doc"))
         rejects.hint("rebalance").write.mode("append").parquet(rejects_dir)
-    if not (n.upserts or n.deletes):
-        return
-    applied = staged.filter(F.col("applied"))
-    refresh_reconstructed(
-        spark,
-        reconstructed_dir,
-        applied.filter(F.col("kind") == "upsert").select("doc.*") if n.upserts else None,
-        applied.filter(F.col("kind") == "delete").select(F.col("key").alias("root_key")) if n.deletes else None,
-    )
-    apply_cdc_batch(
-        versions_dir,
-        applied.select("key", "op", "seq", F.lit(None).cast("string").alias("doc")),
-        batch_id,
-    )
 
 
 def refresh_reconstructed(
     spark: SparkSession,
     reconstructed_dir: str,
-    changed_docs: DataFrame | None,
+    changed_docs: DataFrame,
     deleted_roots: DataFrame | None,
 ) -> None:
     """Incremental search-projection maintenance: upsert the reconstructed
@@ -274,23 +279,20 @@ def refresh_reconstructed(
     only touched documents are re-reconstructed, not the corpus.
 
     ``changed_docs`` holds plan documents (the compiled plan struct's
-    columns) and ``deleted_roots`` a ``root_key`` column; pass None for
-    either when there are none.
+    columns), zero rows when none changed: its reconstruction's schema
+    is the projection's, so the stored projection is read with a known
+    schema and no inference job. ``deleted_roots`` holds a ``root_key``
+    column, or is None when there are none.
     """
     from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
     from adv_big_data_indexing_spark.operators.shred import object_key, shred
 
-    fresh = None if changed_docs is None else with_etag(reconstruct(shred(changed_docs)))
-    merged = None
+    fresh = with_etag(reconstruct(shred(changed_docs)))
+    merged = fresh
     if os.path.lexists(reconstructed_dir):
-        reader = spark.read if fresh is None else spark.read.schema(fresh.schema)
-        merged = reader.parquet(reconstructed_dir)
-        if changed_docs is not None:
-            ids = changed_docs.select(object_key(F.col("objectType"), F.col("objectId")).alias("id"))
-            merged = merged.join(ids, "id", "left_anti")
+        ids = changed_docs.select(object_key(F.col("objectType"), F.col("objectId")).alias("id"))
+        kept = spark.read.schema(fresh.schema).parquet(reconstructed_dir).join(ids, "id", "left_anti")
         if deleted_roots is not None:
-            merged = merged.join(deleted_roots.select(F.col("root_key").alias("id")), "id", "left_anti")
-    if fresh is not None:
-        merged = fresh if merged is None else merged.unionByName(fresh)
-    if merged is not None:
-        _replace_dir(merged, reconstructed_dir)
+            kept = kept.join(deleted_roots.select(F.col("root_key").alias("id")), "id", "left_anti")
+        merged = kept.unionByName(fresh)
+    statelog.commit(merged.hint("rebalance"), reconstructed_dir)

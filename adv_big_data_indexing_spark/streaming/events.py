@@ -33,6 +33,7 @@ from adv_big_data_indexing_spark.operators.timeseries import (
     transition_probabilities,
 )
 from adv_big_data_indexing_spark.operators.udfs import hll_estimate, hll_registers
+from adv_big_data_indexing_spark.streaming import statelog
 
 
 def _concat_batches(pdf_iter, **empty_dtypes):
@@ -324,9 +325,9 @@ def enrich_events(events: DataFrame, customer: DataFrame) -> DataFrame:
 
 # --- parquet state-store plumbing -----------------------------------------
 #
-# A plain-parquet state table is the DEMO harness (zero dependencies);
-# production deployments swap the state helpers for a transactional
-# table format — the fold logic on top is format-agnostic.
+# A plain-parquet state table, read and committed through statelog
+# (zero dependencies); production deployments swap the state helpers for
+# a transactional table format — the fold logic on top is format-agnostic.
 
 
 def _merge_state(prev, delta: DataFrame, keys: tuple[str, ...], value: str, combine) -> DataFrame:
@@ -348,49 +349,6 @@ def _merge_state(prev, delta: DataFrame, keys: tuple[str, ...], value: str, comb
     )
 
 
-def _read_state(spark, path: str):
-    """State table or None (None means ABSENT — a read failure of an
-    existing table raises so the batch retries, never silently restarts
-    from empty state and overwrites history).
-
-    Crash recovery for the non-atomic parquet overwrite: if the main
-    directory is torn mid-overwrite, the retained ``.tmp`` copy (only
-    removed AFTER a commit completes) is RESTORED into the main
-    directory first and the read retried — restoring eagerly (rather
-    than reading tmp directly) keeps later ``_commit_state`` calls from
-    overwriting a tmp dir their own input lineage still reads."""
-    import os  # noqa: PLC0415
-
-    tmp = path + ".tmp"
-    if not os.path.exists(path) and not os.path.exists(tmp):
-        return None
-    if os.path.exists(path):
-        # A torn overwrite can leave a dir that still PARSES (some part
-        # files committed) — a successful read is not authority. The
-        # _SUCCESS marker is: it is written last by the committer, so
-        # its absence means the overwrite never finished.
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            try:
-                df = spark.read.parquet(path)
-                df.schema  # force footer/schema resolution now, not lazily
-                return df
-            except Exception:
-                if not os.path.exists(tmp):
-                    raise  # torn with no recovery copy: fail LOUDLY, retry
-        elif not os.path.exists(tmp):
-            raise OSError(
-                f"state dir {path} lacks its _SUCCESS marker and no .tmp "
-                "recovery copy exists — refusing to read possibly-"
-                "truncated state"
-            )
-    # main absent/torn but tmp intact: restore main from tmp, read main.
-    # No coalesce: tmp keeps whatever file layout its commit chose, so a
-    # data-sized base (committed with single_file=False) is not funneled
-    # through one restore task.
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def _applied_batch(prev) -> int:
     """Last applied batch_id, None-safe: an ABSENT or EMPTY state table
     (e.g. the first micro-batch carried zero rows) means nothing was
@@ -402,65 +360,6 @@ def _applied_batch(prev) -> int:
         return -1
     v = prev.agg(F.max("batch_id")).collect()[0][0]
     return -1 if v is None else int(v)
-
-
-def _commit_state(
-    df,
-    path: str,
-    single_file: bool = True,
-    partition_by: str | None = None,
-    sort_within: tuple[str, ...] | None = None,
-) -> None:
-    """tmp-write → read-back → overwrite main → remove tmp. The df
-    typically derives from reading ``path`` itself, so writing directly
-    would delete its own input mid-plan; the read-back breaks lineage.
-    The tmp copy survives until the main overwrite finishes, so a crash
-    during the overwrite loses nothing (_read_state restores main from
-    tmp before reading — by then no live lineage points at tmp, so the
-    next commit's tmp overwrite is safe).
-
-    ``single_file=True`` (the default) coalesces to one file — right for
-    the constant-size sketch states. DATA-SIZED state (the survival
-    frontier base) passes False: coalesce(1) would funnel the whole
-    table through one write task, and AQE already right-sizes the
-    upstream shuffle's partitions.
-
-    ``partition_by`` hive-partitions the committed table by one
-    LOW-CARDINALITY column, so a reader filtering on it gets PARTITION
-    PRUNING instead of a full-table scan (the funnel log's per-batch
-    ``kind = 'h'`` frontier probe reads only the kind=h directory of
-    the base however large the candidate partitions grow). The column
-    must round-trip partition-directory type inference — the funnel's
-    non-numeric kind strings do; a high-cardinality key (the dedup
-    index's band_key) needs metastore-bucketed tables at cluster
-    scale instead, not this.
-
-    ``sort_within`` re-applies a partition-local sort to the READ-BACK
-    frame before the main write: the read of tmp can
-    PACK several small files into one task, whose output would
-    otherwise be a concatenation of sorted runs — per-FILE sortedness
-    of the committed base must be applied on the last write, not
-    upstream, to be structural. sortWithinPartitions adds no exchange,
-    and re-sorting nearly-sorted runs is cheap."""
-    import shutil  # noqa: PLC0415
-
-    tmp = path + ".tmp"
-    out = df.coalesce(1) if single_file else df
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    w = out.write.mode("overwrite")
-    if partition_by is not None:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
-    back = df.sparkSession.read.parquet(tmp)
-    back = back.coalesce(1) if single_file else back
-    if sort_within:
-        back = back.sortWithinPartitions(*sort_within)
-    wb = back.write.mode("overwrite")
-    if partition_by is not None:
-        wb = wb.partitionBy(partition_by)
-    wb.parquet(path)
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def run_streaming_cms(
@@ -490,7 +389,7 @@ def run_streaming_cms(
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        prev = _read_state(spark, state_dir)
+        prev = statelog.read(spark, state_dir)
         if batch_id <= _applied_batch(prev):
             return  # replay of an already-applied batch: skip (exactly-once)
         delta = (
@@ -503,7 +402,7 @@ def run_streaming_cms(
             .agg(F.count("*").cast("bigint").alias("cnt"))
         )
         merged = _merge_state(prev, delta, ("ri", "b"), "cnt", operator.add)
-        _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
+        statelog.commit(merged.withColumn("batch_id", F.lit(batch_id)).coalesce(1), state_dir)
 
     return start_fold(events, fold, checkpoint_dir)
 
@@ -1138,8 +1037,8 @@ def run_streaming_markov(
         # native partitioning: the state-store commit protocol requires
         # every partition of the applyInPandasWithState operator to
         # execute and commit per micro-batch — both the skip path
-        # (returning without an action) and the coalesce(1) inside
-        # _commit_state (which folds the stateful stage into one task)
+        # (returning without an action) and the coalesce(1) of the
+        # state commit (which folds the stateful stage into one task)
         # fail Spark's commit validation otherwise. DISK_ONLY blocks:
         # a micro-batch is data-sized at production scale, and a
         # MEMORY_AND_DISK unroll runs in the SAME tasks as the stage
@@ -1149,14 +1048,14 @@ def run_streaming_markov(
         from pyspark import StorageLevel
 
         batch = batch.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        prev = _read_state(spark, state_dir)
+        prev = statelog.read(spark, state_dir)
         if batch_id <= _applied_batch(prev):
             return  # replay of an already-applied batch: skip the fold
         delta = batch.groupBy("from_state", "to_state").agg(
             F.count("*").cast("bigint").alias("n")
         )
         merged = _merge_state(prev, delta, ("from_state", "to_state"), "n", operator.add)
-        _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
+        statelog.commit(merged.withColumn("batch_id", F.lit(batch_id)).coalesce(1), state_dir)
 
     return start_fold(markov_transition_deltas(events), fold, checkpoint_dir)
 
@@ -1165,9 +1064,9 @@ def streaming_markov_result(spark, state_dir: str) -> DataFrame:
     """Transition probabilities from the maintained count matrix through
     the batch finisher ``transition_probabilities``
     (operators/timeseries.py), so after a drain the streaming and batch
-    tables agree row-for-row. The counts are read through ``_read_state``,
-    so a table torn by a crashed commit is restored, never read."""
-    counts = _read_state(spark, state_dir)
+    tables agree row-for-row. The counts are the last committed table
+    (``statelog.commit``): a crashed commit leaves the previous one."""
+    counts = statelog.read(spark, state_dir)
     if counts is None:
         counts = spark.createDataFrame([], "from_state string, to_state string, n bigint")
     return transition_probabilities(counts)
@@ -1385,9 +1284,10 @@ def run_streaming_seasonal(
     streaming LTTB), so the deployable form is exactly this: exact
     incremental trend rows + an index over everything emitted so far.
 
-    State tables under ``state_dir`` (plain parquet via the shared
-    _read_state/_commit_state demo harness — production swaps a
-    transactional format, the fold is format-agnostic): ``hourly``
+    State tables under ``state_dir`` (plain parquet; ``hourly`` is
+    committed through ``statelog.commit``, ``dt`` is appended —
+    production swaps a transactional format, the fold is
+    format-agnostic): ``hourly``
     (event_type, h, x, n_late, batch_id) and ``dt`` (event_type, h, x,
     trend_q, detrended). State is O(observed hours), not O(events) —
     the 100 TB shape.
@@ -1407,7 +1307,7 @@ def run_streaming_seasonal(
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        prev = _read_state(spark, hourly_dir)
+        prev = statelog.read(spark, hourly_dir)
         # ONE driver action for ALL previous-state scalars, guard included
         if prev is not None:
             st = prev.agg(
@@ -1445,7 +1345,7 @@ def run_streaming_seasonal(
             wm_h = int(st2["mx"]) - delay_hours
             frozen = merged.filter(F.col("h") <= wm_h)
             ready = detrend_hourly(frozen)
-            seen = _read_state(spark, dt_dir)
+            seen = statelog.read(spark, dt_dir)
             if seen is not None:
                 ready = ready.join(
                     seen.select("event_type", "h"),
@@ -1454,9 +1354,10 @@ def run_streaming_seasonal(
                 )
             ready.coalesce(1).write.mode("append").parquet(dt_dir)
         # THEN the exactly-once marker
-        _commit_state(
+        statelog.commit(
             merged.withColumn("n_late", F.lit(n_late).cast("bigint"))
-            .withColumn("batch_id", F.lit(batch_id)),
+            .withColumn("batch_id", F.lit(batch_id))
+            .coalesce(1),
             hourly_dir,
         )
 
@@ -1483,14 +1384,14 @@ def streaming_seasonal_result(
     )
 
     DT_SCHEMA = "event_type string, h bigint, x bigint, trend_q bigint, detrended bigint"
-    dt = _read_state(spark, os.path.join(state_dir, "dt"))
+    dt = statelog.read(spark, os.path.join(state_dir, "dt"))
     dt = (
         dt.select("event_type", "h", "x", "trend_q", "detrended")
         if dt is not None
         else spark.createDataFrame([], DT_SCHEMA)
     )
     if finalize:
-        hourly = _read_state(spark, os.path.join(state_dir, "hourly"))
+        hourly = statelog.read(spark, os.path.join(state_dir, "hourly"))
         if hourly is not None:
             tail = detrend_hourly(hourly.select("event_type", "h", "x")).join(
                 dt.select("event_type", "h"), ["event_type", "h"], "left_anti"
@@ -1524,13 +1425,13 @@ def run_streaming_hll(
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        prev = _read_state(spark, state_dir)
+        prev = statelog.read(spark, state_dir)
         delta = hll_registers(
             batch.selectExpr("event_type AS g", "md5(CAST(user_id AS STRING)) AS h"),
             ("g",),
         )
         merged = _merge_state(prev, delta, ("g", "bucket"), "mj", F.greatest)
-        _commit_state(merged.withColumn("batch_id", F.lit(batch_id)), state_dir)
+        statelog.commit(merged.withColumn("batch_id", F.lit(batch_id)).coalesce(1), state_dir)
 
     return start_fold(events, fold, checkpoint_dir)
 
@@ -1540,7 +1441,7 @@ def streaming_hll_result(spark, state_dir: str) -> DataFrame:
     registers through the batch finisher ``hll_estimate``
     (operators/udfs.py), so on the same data the streaming and batch
     estimates agree bit-for-bit (tests/test_streaming.py)."""
-    st = _read_state(spark, state_dir)
+    st = statelog.read(spark, state_dir)
     if st is None:
         return spark.createDataFrame([], "event_type string, approx_nd double")
     return hll_estimate(st, ("g",)).withColumnRenamed("g", "event_type")
@@ -1558,8 +1459,6 @@ def _survival_frontier(spark, state_dir: str):
     (streaming/statelog.py). Duplicate rows (replayed appends) cannot
     change a max, so the merge needs no dedup bookkeeping. None when
     no state exists."""
-    from adv_big_data_indexing_spark.streaming import statelog
-
     parts = [p.select("user_id", "day") for p in statelog.read_parts(spark, state_dir)]
     if not parts:
         return None
@@ -1594,7 +1493,7 @@ def run_streaming_survival(
     rewriting existing state — and the frontier derives as max(day)
     over base + deltas (the shared streaming/statelog.py protocol).
     Once ``compact_fanin`` delta BATCHES accumulate, they fold into
-    the base table (tmp-swap protocol) and the delta log resets —
+    the base table (one ``statelog.commit``) and the delta log resets —
     amortized Θ(users)/fanin per batch, and the read-side merge fan-in
     stays bounded. Idempotence of MAX is what makes the log sound with
     zero exactly-once machinery: a replayed batch re-appends DUPLICATE
@@ -1605,8 +1504,6 @@ def run_streaming_survival(
     way — a duplicate delta file would double-count; their single-table
     guarded commit IS their correctness.
     """
-    from adv_big_data_indexing_spark.streaming import statelog
-
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         delta = churn_frontier(batch)
@@ -1656,8 +1553,6 @@ _FUNNEL_LOG_SCHEMA = "user_id bigint, kind string, val bigint"
 
 def _funnel_log_rows(spark, state_dir: str) -> DataFrame:
     """The row set the funnel log denotes (shared set-log reader)."""
-    from adv_big_data_indexing_spark.streaming import statelog
-
     return statelog.read_set_log(spark, state_dir, _FUNNEL_LOG_SCHEMA)
 
 
@@ -1801,8 +1696,6 @@ def run_streaming_funnel(
     from pyspark import StorageLevel
 
     from adv_big_data_indexing_spark.functions.exact import epoch_us
-    from adv_big_data_indexing_spark.streaming import statelog
-
     delay_us = int(delay_sec) * 1_000_000
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -1950,8 +1843,6 @@ _RETENTION_LOG_SCHEMA = "user_id bigint, kind string, val bigint"
 
 def _retention_log_rows(spark, state_dir: str) -> DataFrame:
     """The row set the retention log denotes (shared set-log reader)."""
-    from adv_big_data_indexing_spark.streaming import statelog
-
     return statelog.read_set_log(spark, state_dir, _RETENTION_LOG_SCHEMA)
 
 
@@ -2024,8 +1915,6 @@ def run_streaming_retention_log(
     (``streaming_retention_log_result``) is its finisher
     ``retention_table`` over the merged state (operators/timeseries.py).
     """
-    from adv_big_data_indexing_spark.streaming import statelog
-
     def fold(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         # layout contract: the stored d-rows are PRUNED at

@@ -265,6 +265,30 @@ def test_upsert_last_writer(spark):
     assert {r.id: (r.seq, r.v) for r in again.collect()} == got
 
 
+def test_upsert_last_writer_breaks_equal_version_ties_the_same_way(spark):
+    """Equal-seq update and delete pairs of one key keep the same row
+    whatever the input order and partitioning: the delete."""
+    import random
+
+    schema = "key string, op string, seq long, doc string"
+    rows = []
+    for i in range(20):
+        rows += [(f"k{i}", "update", 5, f'{{"v": {i}}}'), (f"k{i}", "delete", 5, None)]
+    rows += [("k0", "insert", 4, "{}"), ("k1", "update", 5, '{"v": 99}')]
+    outs = set()
+    for seed in range(4):
+        shuffled = rows[:]
+        random.Random(seed).shuffle(shuffled)
+        half = len(shuffled) // 2
+        existing = spark.createDataFrame(shuffled[:half], schema).repartition(seed + 1)
+        updates = spark.createDataFrame(shuffled[half:], schema).repartition(3, "seq")
+        out = mutate.upsert_last_writer(existing, updates, "key", "seq")
+        outs.add(tuple(sorted(map(tuple, out.collect()))))
+    assert len(outs) == 1
+    (got,) = outs
+    assert got == tuple(sorted((f"k{i}", "delete", 5, None) for i in range(20)))
+
+
 def test_cascade_delete(spark, tables):
     roots = spark.createDataFrame([("plan_plan-00000",)], "id string")
     survived = mutate.cascade_delete(tables, roots)

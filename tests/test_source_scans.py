@@ -6,6 +6,7 @@
 - The streaming twins in ``streaming/events.py`` finish through their
   batch query's own functions: none of the batch side's estimator,
   gain or log-space constants is spelled there again.
+- Every rewritten streaming table is committed by ``statelog.commit``.
 """
 
 from __future__ import annotations
@@ -95,3 +96,14 @@ def test_streaming_twins_spell_no_batch_constant():
     names = ("ilog2_q4", "_HLL_ESTIMATE", "HLL_M", "HOLT_ADIV", "HOLT_BDIV", "HW_DIV", "CUSUM_KDIV")
     found = [n for n in names if re.search(rf"\b{n}\b", src)]
     assert not found, f"streaming/events.py spells batch-side constants {found}"
+
+
+def test_streaming_tables_have_one_commit():
+    """Every rewritten streaming table goes through ``statelog.commit``:
+    the package's streaming modules create a symlink only there and
+    overwrite no parquet directory in place."""
+    streaming = PKG / "streaming"
+    symlinks = sorted(p.name for p in _py_files(streaming) if "os.symlink(" in p.read_text())
+    overwrites = sorted(p.name for p in _py_files(streaming) if 'mode("overwrite")' in p.read_text())
+    assert symlinks == ["statelog.py"], symlinks
+    assert overwrites == [], overwrites

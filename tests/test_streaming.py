@@ -5,12 +5,13 @@ twins."""
 from __future__ import annotations
 
 import json
+import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from adv_big_data_indexing_spark.streaming import cdc, events as ev
+from adv_big_data_indexing_spark.streaming import cdc, events as ev, statelog
 from tests.conftest import SF_SMOKE
 
 
@@ -471,7 +472,8 @@ def test_document_indexer_replay_under_fresh_checkpoint_changes_nothing(spark, t
     """At-least-once delivery: re-running already-applied batches from a
     fresh checkpoint leaves the version store, the projection and the
     rejects as they were (equal seqs re-apply the same documents, and a
-    reject already recorded is not appended again)."""
+    reject already recorded is not appended again, not even as an empty
+    file)."""
     from tests.fixtures import make_plan, reference_schema
 
     d, schema = _doc_dirs(tmp_path), reference_schema()
@@ -486,9 +488,11 @@ def test_document_indexer_replay_under_fresh_checkpoint_changes_nothing(spark, t
     ])
     before = _stores(spark, d)
     assert spark.read.parquet(d["rej"]).count() == 1
+    reject_files = sorted(os.listdir(d["rej"]))
     _index_docs(spark, d, schema, [], ck=str(tmp_path / "ck_fresh"))
     assert _stores(spark, d) == before
     assert spark.read.parquet(d["rej"]).count() == 1
+    assert sorted(os.listdir(d["rej"])) == reject_files  # no zero-row append
     assert {i for i, _ in before[2]} == {"plan_plan-00000", "plan_plan-00002"}
 
 
@@ -510,6 +514,91 @@ def test_document_indexer_ignores_records_older_than_the_store(spark, tmp_path):
     # a newer record still applies
     _index_docs(spark, d, schema, [{"key": "plan_plan-00001", "op": "delete", "seq": 6, "doc": None}])
     assert {i for i, _ in _stores(spark, d)[2]} == {"plan_plan-00000"}
+
+
+def test_equal_seq_delete_wins_in_both_indexers(spark, tmp_path):
+    """Of an update and a delete of one key with equal seqs, the delete
+    wins in both indexers, in one batch or in either order across two."""
+    from tests.fixtures import make_plan, reference_schema
+
+    for name, batches in {
+        "together": [["update", "delete"]],
+        "delete_first": [["delete"], ["update"]],
+        "update_first": [["update"], ["delete"]],
+    }.items():
+        def record(op, i=1):
+            if op == "delete":
+                return {"key": f"plan_plan-{i:05d}", "op": "delete", "seq": 2, "doc": None}
+            return _upsert(i, 2, make_plan(i, n_services=1))
+
+        d, schema = _doc_dirs(tmp_path / name), reference_schema()
+        _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i)) for i in range(2)])
+        q, s, c = (str(tmp_path / name / k) for k in ("cq", "cstore", "cck"))
+        for ops in batches:
+            _index_docs(spark, d, schema, [record(op) for op in ops])
+            cdc.enqueue(spark, q, [record(op) for op in ops])
+            cdc.drain(cdc.run_indexer(spark, q, s, c))
+        _, versions, proj = _stores(spark, d)
+        assert [i for i, _ in proj] == ["plan_plan-00000"], name
+        assert ("plan_plan-00001", "delete", 2, None) in versions, name
+        assert [r.key for r in cdc.read_store(spark, s).collect()] == [], name
+
+
+def test_delete_only_batch_reads_the_projection_with_its_schema(spark, tmp_path, monkeypatch):
+    """A batch of deletes only reads the stored projection with a given
+    schema, so its refresh runs no schema-inference job."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tests.fixtures import make_plan, reference_schema
+
+    d, schema = _doc_dirs(tmp_path), reference_schema()
+    _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i)) for i in range(2)])
+    set_schema, read_parquet, reads = DataFrameReader.schema, DataFrameReader.parquet, []
+
+    def schema_given(self, s):
+        self.schema_given = True
+        return set_schema(self, s)
+
+    def parquet(self, *paths, **options):
+        reads.extend((p, getattr(self, "schema_given", False)) for p in paths)
+        return read_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema_given)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    _index_docs(spark, d, schema, [{"key": "plan_plan-00001", "op": "delete", "seq": 2, "doc": None}])
+    monkeypatch.undo()
+    assert [given for p, given in reads if p == d["rec"]] == [True]
+    assert [i for i, _ in _stores(spark, d)[2]] == ["plan_plan-00000"]
+
+
+def test_delete_only_refresh_runs_no_job_before_its_write(spark, tmp_path, monkeypatch):
+    """A refresh that only deletes reads the stored projection with the
+    projection schema: building the refreshed table runs no Spark job
+    (no schema inference), and the table it commits drops the root."""
+    from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
+    from tests.fixtures import make_plan, reference_schema
+
+    d, schema = _doc_dirs(tmp_path), reference_schema()
+    _index_docs(spark, d, schema, [_upsert(i, 1, make_plan(i)) for i in range(2)])
+    committed = []
+    monkeypatch.setattr(statelog, "commit", lambda df, path, partition_by=None: committed.append(df))
+    sc = spark.sparkContext
+    sc.setJobGroup("delete_only_refresh", "delete-only refresh")
+    try:
+        no_docs = validate(spark.createDataFrame([], "raw string"), schema).select("doc.*")
+        deleted = spark.createDataFrame([("plan_plan-00001",)], "root_key string")
+        cdc.refresh_reconstructed(spark, d["rec"], no_docs, deleted)
+        spark.range(1).collect()  # one marker job: the listener bus is ordered
+        for _ in range(100):
+            jobs = sc.statusTracker().getJobIdsForGroup("delete_only_refresh")
+            if jobs:
+                break
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+    (df,) = committed
+    assert sorted(r.id for r in df.select("id").collect()) == ["plan_plan-00000"]
 
 
 def test_document_indexer_file_counts_stay_bounded(spark, tmp_path):
@@ -569,69 +658,71 @@ def test_stream_static_enrichment(spark, event_stream_dir):
         assert seg[r.event_id] == expected
 
 
-def test_read_state_success_marker_gates_authority(spark, tmp_path):
-    """ADVICE r7: a torn overwrite can leave a main state dir that still
-    PARSES (some part files committed, _SUCCESS never written) — reading
-    it silently truncates history. _read_state must treat the _SUCCESS
-    marker as authority: absent marker + intact .tmp → restore from tmp;
-    absent marker + no tmp → refuse loudly."""
-    import os
-    import shutil
+@pytest.mark.parametrize("layout", ["single_file", "partitioned_sorted"])
+def test_statelog_commit_crash_keeps_the_previous_table(spark, tmp_path, monkeypatch, layout):
+    """A commit killed inside its version write, or after the write and
+    before the swap, leaves the previous table readable and unchanged;
+    the next commit succeeds and leaves exactly one version. A table
+    never committed reads None."""
+    import glob
 
-    import pytest
+    def frame(rows):
+        df = spark.createDataFrame(rows, "k long, v long, p string")
+        if layout == "single_file":
+            return df.coalesce(1), None
+        return df.repartition(3).sortWithinPartitions("k", "v"), "p"
 
-    full = spark.createDataFrame(
-        [(i, i * 10) for i in range(8)], "k long, v long"
-    )
+    def table(path):
+        return sorted(map(tuple, statelog.read(spark, path).select("k", "v", "p").collect()))
 
-    # healthy commit: marker present, read succeeds
-    p1 = str(tmp_path / "healthy")
-    full.coalesce(1).write.parquet(p1)
-    assert ev._read_state(spark, p1).count() == 8
+    path = str(tmp_path / "state")
+    assert statelog.read(spark, path) is None
+    old = [(i, i * 10, "ab"[i % 2]) for i in range(8)]
+    df, part = frame(old)
+    statelog.commit(df, path, part)
+    assert table(path) == old
 
-    # torn-but-parseable main + intact tmp: must restore the tmp copy,
-    # not trust the truncated main
-    p2 = str(tmp_path / "torn")
-    full.coalesce(1).write.parquet(p2)
-    full.coalesce(1).write.parquet(p2 + ".tmp")
-    os.remove(os.path.join(p2, "_SUCCESS"))
-    # drop rows from main so a naive read would return truncated state
-    truncated = spark.read.parquet(p2).limit(3)
-    pdf = truncated.toPandas()
-    shutil.rmtree(p2)
-    os.makedirs(p2)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    new = [(i, i * 100, "ab"[i % 2]) for i in range(12)]
+    df, part = frame(new)
+    # killed after the version is written, before the swap
+    replace = os.replace
 
-    pq.write_table(pa.Table.from_pandas(pdf), os.path.join(p2, "part-0.parquet"))
-    restored = ev._read_state(spark, p2)
-    assert restored.count() == 8  # tmp copy won, truncation ignored
+    def killed_on_swap(src, dst):
+        if dst == path:
+            raise OSError("killed before the swap")
+        replace(src, dst)
 
-    # torn main, no recovery copy: loud failure, never silent truncation
-    p3 = str(tmp_path / "torn_norecovery")
-    full.coalesce(1).write.parquet(p3)
-    os.remove(os.path.join(p3, "_SUCCESS"))
-    with pytest.raises(OSError, match="_SUCCESS"):
-        ev._read_state(spark, p3)
+    monkeypatch.setattr(os, "replace", killed_on_swap)
+    with pytest.raises(OSError, match="killed"):
+        statelog.commit(df, path, part)
+    monkeypatch.undo()
+    assert table(path) == old
+    # killed inside the version write: a failed write task, and a torn
+    # version directory that no process cleaned up
+    failing = F.when(F.col("k") == 11, F.raise_error(F.lit("killed inside the write")))
+    with pytest.raises(Exception, match="killed inside the write"):
+        statelog.commit(df.withColumn("v", failing.otherwise(F.col("v"))), path, part)
+    torn = f"{path}__v_deadbeef"
+    os.makedirs(torn)
+    with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
+        f.write(b"PAR1 torn")
+    assert table(path) == old
 
-    # absent entirely: None (first batch bootstraps)
-    assert ev._read_state(spark, str(tmp_path / "missing")) is None
+    statelog.commit(df, path, part)
+    assert table(path) == new
+    assert [os.path.basename(v) for v in glob.glob(path + "__v_*")] == [os.readlink(path)]
 
 
-def test_streaming_markov_result_restores_a_torn_state(spark, tmp_path):
-    """The Markov reader goes through ``_read_state``: a count table whose
-    overwrite never finished (no ``_SUCCESS``) is restored from its
-    intact ``.tmp`` copy, not read torn."""
-    import os
-
+def test_streaming_markov_result_ignores_an_unlinked_version(spark, tmp_path):
+    """The Markov reader reads the committed count table only: a version
+    a crashed commit left next to it, never swapped in, changes nothing."""
     counts = spark.createDataFrame(
         [("view", "click", 2), ("view", "view", 1), ("click", "view", 1)],
         "from_state string, to_state string, n bigint",
     )
     state = str(tmp_path / "markov_state")
-    counts.coalesce(1).write.parquet(state + ".tmp")
-    counts.limit(1).coalesce(1).write.parquet(state)  # a torn overwrite
-    os.remove(os.path.join(state, "_SUCCESS"))
+    statelog.commit(counts.coalesce(1), state)
+    counts.limit(1).withColumn("n", F.lit(99).cast("bigint")).coalesce(1).write.parquet(state + "__v_unlinked")
     got = {(r.from_state, r.to_state): (r.n, r.p) for r in ev.streaming_markov_result(spark, state).collect()}
     assert got == {("view", "click"): (2, 2 / 3), ("view", "view"): (1, 1 / 3), ("click", "view"): (1, 1.0)}
 
@@ -2042,7 +2133,7 @@ def test_streaming_survival_crash_between_compaction_steps(spark, tmp_path):
     # simulate the torn compaction: commit the merged frontier to base,
     # then "crash" — the delta log is NOT reset
     merged = ev._survival_frontier(spark, state)
-    ev._commit_state(merged.withColumn("batch_id", F.lit(0)), os.path.join(state, "base"))
+    statelog.commit(merged.withColumn("batch_id", F.lit(0)), os.path.join(state, "base"))
     assert os.path.isdir(os.path.join(state, "deltas"))  # log survived the crash
     before = curve(ev.streaming_survival_result(spark, state))
     assert before == curve(ts_survival_km(spark, full_dir))
@@ -2208,8 +2299,6 @@ def test_statelog_ignores_hidden_paths(spark, tmp_path):
     files. Spark's reader filters '_'/'.'-prefixed paths, so read_parts
     must treat such a log as EMPTY instead of building a parquet read
     that fails schema inference on every subsequent read/compaction."""
-    from adv_big_data_indexing_spark.streaming import statelog
-
     log = str(tmp_path / "log")
     torn = tmp_path / "log" / "deltas" / "batch=0" / "_temporary" / "0"
     torn.mkdir(parents=True)
@@ -2402,8 +2491,6 @@ def test_streaming_funnel_replay_compaction_and_pruning(spark, tmp_path):
     # (filter kind = 'h') partition-prunes instead of scanning the
     # candidate partitions — the funnel log's named scale lever
     assert _os.path.isdir(_os.path.join(state, "base", "kind=h"))
-    from adv_big_data_indexing_spark.streaming import statelog
-
     base = statelog.read_parts(spark, state)[0]
     plan = base.filter(F.col("kind") == "h")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "kind" in plan.split("PartitionFilters", 1)[1].split("]")[0], plan
@@ -2554,8 +2641,6 @@ def test_retention_log_layout_marker_guards_window_width(spark, tmp_path):
     from pyspark.sql.streaming import StreamingQueryException
 
     from adv_big_data_indexing_spark.sources.catalog import load_table
-    from adv_big_data_indexing_spark.streaming import statelog
-
     docs = load_table(spark, SF_SMOKE, "events")
     src = str(tmp_path / "mk_src")
     state = str(tmp_path / "mk_state")
@@ -2662,8 +2747,6 @@ def test_statelog_log_rows_counts_footers_and_skips_hidden(spark, tmp_path):
     FOOTER row counts over base+deltas, hidden paths excluded — a
     zero-row (schema-carrying) delta must count as 0, and a torn
     _temporary tree must not count at all."""
-    from adv_big_data_indexing_spark.streaming import statelog
-
     log = str(tmp_path / "lr_log")
     assert statelog.log_rows(log) == 0  # absent log
     schema = "user_id bigint, kind string, val bigint"
@@ -2779,8 +2862,6 @@ def test_maybe_compact_zero_row_guard_is_partitioned_only(spark, tmp_path):
     per-batch footer walk over them — forever, e.g. a pairs log on a
     dup-free corpus); only the partitioned commit is the hazard."""
     import os
-
-    from adv_big_data_indexing_spark.streaming import statelog
 
     schema = "doc_a bigint, doc_b bigint"
     empty = spark.createDataFrame([], schema)

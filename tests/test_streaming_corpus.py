@@ -378,11 +378,10 @@ def test_marker_less_legacy_bands_layout_raises(spark, tmp_path):
 
 
 def test_compact_sort_survives_readback_packing(spark, tmp_path):
-    """code-review r12: _commit_state's tmp read-back can PACK several
-    sorted files into one rewrite task — per-file sortedness of the
-    committed base must therefore be applied on the LAST write. Feed
-    compact() a deliberately multi-partition unsorted merge and assert
-    every committed base file is individually sorted."""
+    """compact() sorts each committed base file on ``sort_within``: the
+    base is written once, and each file holds one sorted partition of
+    the merged frame. Feed it a deliberately multi-partition unsorted
+    merge and assert every committed base file is individually sorted."""
     import pyarrow.parquet as pq
 
     from adv_big_data_indexing_spark.streaming import statelog

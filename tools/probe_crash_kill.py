@@ -13,10 +13,8 @@ retention twin), survival (the KM frontier log). r13 (VERDICT r12
 item 5) adds the three non-statelog streams:
 
   cms      additive d×w sketch behind the batch-id exactly-once guard —
-           its torn placement lands inside the _commit_state tmp-swap
-           (tmp written + main dir removed, main rewrite never ran),
-           the exact mid-overwrite state _read_state's restore path
-           exists for;
+           its torn placement lands inside statelog.commit, after the
+           new version is written and before the symlink swap;
   hll      max-merge registers (idempotent, NO guard) — same torn
            placement; recovery must converge through pure re-merge;
   anomaly  applyInPandasWithState z-scores writing a parquet file sink.
@@ -29,18 +27,18 @@ item 5) adds the three non-statelog streams:
            guarantees (state store loads the last committed version;
            the manifest ignores the dead attempt's orphan part files;
            the WAL replays the batch) is exactly what statelog had to
-           BUILD for foreachBatch side effects (tmp-swap + batch-id
-           guard / idempotent merges), because foreachBatch writes are
-           outside the engine's transaction.
+           BUILD for foreachBatch side effects (the versioned commit +
+           batch-id guard / idempotent merges), because foreachBatch
+           writes are outside the engine's transaction.
 
 Roles (subprocesses of this same file, each with its own Spark session,
 launched in their own process group so SIGKILL takes the JVM down too):
 
   prep   <op> <work> <sf_dir>     write the source chunks once
   run    <op> <work> <sf_dir> [--torn]   start/resume the stream; with
-         --torn, statelog.compact is wrapped to print TORN_WINDOW_OPEN
-         and sleep between the base commit and the delta reset — the
-         parent kills inside that exact window
+         --torn, statelog.commit is wrapped so a compaction prints
+         TORN_WINDOW_OPEN and sleeps between the base commit and the
+         delta reset — the parent kills inside that exact window
   verify <op> <work> <sf_dir>     digest streaming result vs batch op
 
 Parent: for each (op, kill-mode) scenario — prep, run+kill,
@@ -70,7 +68,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 FUNNEL_FANIN = 3
 DEDUP_FANIN = 3
 N_CHUNKS = 8
-#: which _commit_state call the cms/hll torn wrap opens its window on —
+#: which statelog.commit call the cms/hll torn wrap opens its window on —
 #: the 3rd (these streams commit once per batch), so real prior state
 #: exists behind the torn commit
 TORN_COMMIT_CALL = 3
@@ -137,59 +135,44 @@ def role_prep(op: str, work: str, sf_dir: str) -> None:
 
 
 def _torn_wrap():
-    """Wrap statelog.compact so the torn window is open and announced."""
-    from pyspark.sql import functions as F
-
+    """Wrap statelog.commit so a compaction halts, announced, after its
+    base commit and before its delta reset."""
     from adv_big_data_indexing_spark.streaming import statelog
-    from adv_big_data_indexing_spark.streaming.events import _commit_state
 
-    def torn_compact(
-        spark, log_dir, merged, batch_id, partition_by=None, sort_within=None
-    ):
-        _commit_state(
-            merged.withColumn("batch_id", F.lit(batch_id)),
-            os.path.join(log_dir, "base"),
-            single_file=False,
-            partition_by=partition_by,
-            sort_within=sort_within,
-        )
-        print("TORN_WINDOW_OPEN", flush=True)
-        time.sleep(15)  # the parent SIGKILLs us inside this window
-        shutil.rmtree(statelog._deltas_dir(log_dir), ignore_errors=True)
+    commit = statelog.commit
 
-    statelog.compact = torn_compact
-
-
-def _torn_wrap_commit_state():
-    """Wrap events._commit_state (the cms/hll per-batch state swap) so
-    the TORN_COMMIT_CALL-th commit halts inside the tmp-swap: NEW state
-    fully written to .tmp, MAIN dir already removed (the overwrite's
-    delete phase), main rewrite never runs. A SIGKILL inside this
-    window leaves exactly the mid-overwrite state _read_state's
-    tmp-restore path exists for; the replayed batch then hits the cms
-    batch-id guard (skip) / the hll max-merge (idempotent re-apply)."""
-    from adv_big_data_indexing_spark.streaming import events as ev
-
-    calls = [0]
-
-    def torn_commit(
-        df, path, single_file=True, partition_by=None, sort_within=None
-    ):
-        calls[0] += 1
-        # the cms/hll states are single-file unpartitioned tables; the
-        # replicated swap below assumes that, so assert it
-        assert single_file and partition_by is None and sort_within is None
-        tmp = path + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if calls[0] == TORN_COMMIT_CALL:
-            shutil.rmtree(path, ignore_errors=True)  # overwrite's delete phase
+    def torn_commit(df, path, partition_by=None):
+        commit(df, path, partition_by)
+        if os.path.basename(path) == "base":  # statelog.compact's commit
             print("TORN_WINDOW_OPEN", flush=True)
             time.sleep(15)  # the parent SIGKILLs us inside this window
-        back = df.sparkSession.read.parquet(tmp).coalesce(1)
-        back.write.mode("overwrite").parquet(path)
-        shutil.rmtree(tmp, ignore_errors=True)
 
-    ev._commit_state = torn_commit
+    statelog.commit = torn_commit
+
+
+def _torn_wrap_commit():
+    """Wrap statelog.commit (the cms/hll per-batch state commit) so the
+    TORN_COMMIT_CALL-th commit halts after its new version is written
+    and before the symlink swap. A SIGKILL inside this window leaves the
+    previous state linked and the new version beside it, unlinked; the
+    replayed batch then hits the cms batch-id guard (skip) / the hll
+    max-merge (idempotent re-apply)."""
+    from adv_big_data_indexing_spark.streaming import statelog
+
+    commit, symlink, calls = statelog.commit, os.symlink, [0]
+
+    def halt_then_link(*args, **kwargs):
+        print("TORN_WINDOW_OPEN", flush=True)
+        time.sleep(15)  # the parent SIGKILLs us inside this window
+        symlink(*args, **kwargs)
+
+    def torn_commit(df, path, partition_by=None):
+        calls[0] += 1
+        # the swap's link is made right after the version write returns
+        os.symlink = halt_then_link if calls[0] == TORN_COMMIT_CALL else symlink
+        commit(df, path, partition_by)
+
+    statelog.commit = torn_commit
 
 
 def _progress_listener(spark):
@@ -229,7 +212,7 @@ def role_run(op: str, work: str, sf_dir: str, torn: bool) -> None:
     spark = _spark()
     if torn:
         if op in ("cms", "hll"):
-            _torn_wrap_commit_state()
+            _torn_wrap_commit()
         elif op == "anomaly":
             _progress_listener(spark)
         else:
